@@ -336,10 +336,12 @@ object GraphAnalytics {
     while (!converged && rounds < maxRounds) {
       rounds += 1
       val deg = degrees(alive)
-      val drop = deg.filter(col("degree") < k)
+      // the drop set's size is counted on its own checkpoint job —
+      // no separate isEmpty probe per round
+      val (drop, Seq(nDrop)) = deg.filter(col("degree") < k)
         .select(col("node"), lit(rounds).as("layer"))
-        .truncateLineage()
-      if (drop.isEmpty) {
+        .truncateLineageCounting(lit(true))
+      if (nDrop == 0) {
         converged = true
         rounds -= 1
       } else {
@@ -401,30 +403,32 @@ object GraphAnalytics {
     // round, and the final result unioned six per-round drop
     // checkpoints that stayed pinned to the end. With the layer riding
     // on the edge row too (round-15 form), each round is ONE
-    // filter-count over the current checkpoint plus ONE checkpoint of
-    // the next frame, and the final result IS the frame — no union,
+    // checkpoint of the next frame, which also counts the next round's
+    // drops, and the final result IS the frame — no union,
     // nothing pinned across rounds. At sf0.1 roughly half of q293's
     // wall was per-round job scheduling (round-14 QueryProbe), so the
     // job-count cut is the measured lever. Support-0 edges are
     // materialized up front (the census omits them) so the drop
     // filter never needs a join again.
-    var frame = canon
+    val frame0 = canon
       .join(initialSupport.getOrElse(edgeSupport(canon)),
         Seq("a", "b"), "left")
       .select(col("a"), col("b"),
         coalesce(col("support"), lit(0L)).as("support"),
         lit(0).as("layer"))
-      .truncateLineage()
-    var aliveCount = frame.count()
-    var rounds = 0
-    var converged = false
     val isAlive = col("layer") === 0
     val willDrop = isAlive && col("support") < k - 2
+    // every checkpoint of the frame counts, in its own job, the rows the
+    // NEXT round will drop (and the first one the edge total) — no
+    // separate count job per round
+    var (frame, Seq(aliveCount, nDrop)) =
+      frame0.truncateLineageCounting(lit(true), willDrop)
+    var rounds = 0
+    var converged = false
     while (!converged && rounds < maxRounds) {
       rounds += 1
       // the drop set, survivors and this round's frontier are all
       // FILTERS over the one checkpointed frame — scans, never jobs
-      val nDrop = frame.filter(willDrop).count()
       if (nDrop == 0) {
         converged = true
         rounds -= 1
@@ -507,7 +511,9 @@ object GraphAnalytics {
               when(willDrop, lit(rounds)).otherwise(col("layer"))
                 .as("layer"))
         }
-        frame = next.truncateLineage()
+        val (f, Seq(n)) = next.truncateLineageCounting(willDrop)
+        frame = f
+        nDrop = n
       }
     }
     (frame.select(col("a"), col("b"), col("layer"))
@@ -598,8 +604,9 @@ object GraphAnalytics {
     * matching. Returns the matched edges tagged with their round.
     *
     * Scale shape per round: one endpoint explode (2|E|), one keyed
-    * max-aggregate, two hash joins back, two anti-joins — no global
-    * ordering anywhere; lineage truncated per round.
+    * max-aggregate, one two-vote aggregate over the per-node bests, two
+    * left joins marking the one carried frame — no global ordering
+    * anywhere; one checkpoint per round.
     *
     * Input: canonical weighted edges (a < b, w). `rounds` is a fixed
     * unrollable budget (each round matches every locally-dominant
@@ -607,36 +614,48 @@ object GraphAnalytics {
     * the caller's readout). */
   def localMaxMatching(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, "need at least one matching round")
-    var alive = edges.select(col("a"), col("b"), col("w"))
-      .truncateLineage()
-    var matched: DataFrame = null
-    for (r <- 1 to rounds) {
-      val ends = alive
-        .select(col("a").as("node"), col("w"), col("a"), col("b"))
-        .unionByName(alive
-          .select(col("b").as("node"), col("w"), col("a"), col("b")))
-      val best = ends.groupBy(col("node"))
-        .agg(max(struct(col("w"), col("a"), col("b"))).as("best"))
-      val dom = alive
-        .join(best.select(col("node").as("a"), col("best").as("ba")),
-          "a")
-        .join(best.select(col("node").as("b"), col("best").as("bb")),
-          "b")
-        .filter(col("ba.w") === col("w") && col("ba.a") === col("a") &&
-          col("ba.b") === col("b") && col("bb.w") === col("w") &&
-          col("bb.a") === col("a") && col("bb.b") === col("b"))
-        .select(col("a"), col("b"), col("w"), lit(r).as("round"))
-        .truncateLineage()
-      matched =
-        if (matched == null) dom else matched.unionByName(dom)
-      val mn = dom.select(col("a").as("node"))
-        .unionByName(dom.select(col("b").as("node"))).distinct()
-      alive = alive
-        .join(mn.withColumnRenamed("node", "a"), Seq("a"), "left_anti")
-        .join(mn.withColumnRenamed("node", "b"), Seq("b"), "left_anti")
-        .truncateLineage()
+    // ONE frame carries (a, b, w, round): round 0 = alive, r > 0 =
+    // matched in round r. An edge whose endpoint another edge matched
+    // leaves the frame, so it shrinks like the live graph. The alive
+    // set is a filter over it, so each round checkpoints one frame, and
+    // the frame's alive count, observed on that same checkpoint job,
+    // stops the loop once nothing is left to match (later rounds would
+    // match nothing).
+    val me = struct(col("w"), col("a"), col("b"))
+    var (frame, Seq(nAlive)) = edges
+      .select(col("a"), col("b"), col("w"), lit(0).as("round"))
+      .truncateLineageCounting(lit(true))
+    var r = 1
+    while (r <= rounds && nAlive > 0) {
+      val alive = frame.filter(col("round") === 0)
+      val best = alive.select(col("a").as("node"), me.as("e"))
+        .unionByName(alive.select(col("b").as("node"), me.as("e")))
+        .groupBy(col("node")).agg(max(col("e")).as("e"))
+      // dominant = the best edge of BOTH its endpoints: two votes. Every
+      // node votes once, so the dominant edges form a matching and each
+      // matched node appears in exactly one (node, edge) pair below —
+      // no distinct needed.
+      val dom = best.groupBy(col("e")).agg(count(lit(1)).as("votes"))
+        .filter(col("votes") === 2)
+      val pairs = dom.select(col("e.a").as("node"), col("e"))
+        .unionByName(dom.select(col("e.b").as("node"), col("e")))
+      val (next, Seq(n)) = frame
+        .join(pairs.select(col("node").as("a"), col("e").as("ma")),
+          Seq("a"), "left")
+        .join(pairs.select(col("node").as("b"), col("e").as("mb")),
+          Seq("b"), "left")
+        .select(col("a"), col("b"), col("w"),
+          when(col("round") =!= 0, col("round"))
+            .when(col("ma") === me, lit(r))
+            .when(col("ma").isNotNull || col("mb").isNotNull, lit(-1))
+            .otherwise(lit(0)).as("round"))
+        .filter(col("round") >= 0)
+        .truncateLineageCounting(col("round") === 0)
+      frame = next
+      nAlive = n
+      r += 1
     }
-    matched
+    frame.filter(col("round") > 0)
   }
 
   /** SQL twin of one [[localMaxMatching]] round: CTEs deriving

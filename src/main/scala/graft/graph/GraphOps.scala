@@ -18,8 +18,8 @@ import graft.engine.Lineage.LineageOps
   * localCheckpoint otherwise).
   *
   * Scale notes (100 TB): every hop shuffles on the join key only; the
-  * frontier is deduplicated before each expansion; visited-set
-  * subtraction is a left-anti join (no driver-side state). For a
+  * BFS carries one reached-set frame and merges each level into it with
+  * a keyed min-hop aggregate ([[bfsFrame]]; no driver-side state). For a
   * 1000-executor cluster, pre-bucketing `edges` by `from_id` makes each
   * hop a co-partitioned join with no edge-side shuffle.
   */
@@ -75,23 +75,60 @@ object GraphOps {
         .repartition(col("node_id"))
         .truncateLineage()
     }
-    var reached = seeds.select(col("node_id")).distinct()
-      .withColumn("hop", lit(0)).truncateLineage()
-    var frontier = reached
+    bfsFrame(e, seeds, maxHops)
+  }
+
+  /** The carried-frame BFS kernel behind [[multiHop]], the sampled
+    * multi-source walks (q249, q258) and q256's forward pass. ONE
+    * frame carries every reached row's state — (keys…, node_id,
+    * [sigma,] hop), `keys` naming the source a row was reached from in
+    * a multi-source walk — and each hop h is
+    *
+    *  - frontier: `frame.filter(hop === h-1)` — a scan, not a job;
+    *  - arrivals: frontier ⋈ e on node_id, tagged hop h;
+    *  - merge: (frame ∪ arrivals) grouped by (keys…, node_id) — ONE
+    *    min-hop aggregate, with σ (the number of shortest paths, when
+    *    `withSigma`) summed over the first-level arrivals only: an
+    *    already-reached row keeps its hop and σ, a new row sums its
+    *    arrivals' σ;
+    *  - one checkpoint of the merged frame, which also counts the new
+    *    level through an Observation: an empty level stops the walk
+    *    without a separate probe job.
+    *
+    * This is the GraphX superstep shape (one join plus one aggregate
+    * over a single vertex-state collection): one materialization per
+    * hop, where a distinct level, an anti-join against a growing
+    * visited union and an emptiness probe cost three. `e` is
+    * (node_id, next_id); `start` carries `keys` and node_id
+    * (duplicates collapse). A keyed walk is a sampled multi-source walk
+    * (q249, q256, q258): its frontier is (seed × reached node)-bounded,
+    * so it is broadcast; an unkeyed walk's frontier can be O(n), so
+    * `multiHop` leaves the join strategy to AQE. */
+  private[graft] def bfsFrame(e: DataFrame, start: DataFrame, maxHops: Int,
+      keys: Seq[String] = Nil, withSigma: Boolean = false): DataFrame = {
+    val id = keys.map(col) :+ col("node_id")
+    val sigma = if (withSigma) Seq(col("sigma")) else Nil
+    var (frame, Seq(n)) = start.select(id: _*).distinct()
+      .select(id ++ sigma.map(_ => lit(1L).as("sigma")) :+ lit(0).as("hop"): _*)
+      .truncateLineageCounting(lit(true))
     var h = 1
-    while (h <= maxHops && !frontier.isEmpty) {
-      val next = frontier.join(e, "node_id")
-        .select(col("next_id").as("node_id")).distinct()
-        .join(reached, Seq("node_id"), "left_anti")
-        .withColumn("hop", lit(h))
-        .truncateLineage() // truncate lineage; BFS plans must not nest
-      // reached is a union of already-materialized frontiers — no extra
-      // checkpoint needed, lineage stays flat.
-      reached = reached.unionByName(next)
-      frontier = next
+    while (h <= maxHops && n > 0) {
+      val front = frame.filter(col("hop") === h - 1).select(id ++ sigma: _*)
+      val arrivals = (if (keys.nonEmpty) broadcast(front) else front)
+        .join(e, "node_id")
+        .select(keys.map(col) ++ (col("next_id").as("node_id") +: sigma) :+
+          lit(h).as("hop"): _*)
+      // a reached row keeps its hop and σ; a new row sums its arrivals' σ
+      val merged = frame.unionByName(arrivals).groupBy(id: _*)
+        .agg(min(col("hop")).as("hop"), sigma.map(s =>
+          coalesce(max(when(col("hop") < h, s)), sum(s)).as("sigma")): _*)
+        .select(id ++ sigma :+ col("hop"): _*)
+      val (next, Seq(m)) = merged.truncateLineageCounting(col("hop") === h)
+      frame = next
+      n = m
       h += 1
     }
-    reached
+    frame
   }
 
   /** Multi-hop BFS that also reconstructs one rendered path per reached

@@ -276,8 +276,8 @@ object KGraph {
     * (every edge arm pairs a distinct ordered type-prefix pair), so
     * the directed edge set equals the typed edge list's projection
     * with no duplicate pairs, and a traversal over it reaches exactly
-    * the rows the string oriented index reaches (multiHop distincts
-    * per level either way). Outgoing traversals read
+    * the rows the string oriented index reaches (multiHop merges each
+    * level per node either way). Outgoing traversals read
     * [[rankEdgesMaterialized]] (same rows, already packed and
     * partitioned on from_id); these two cover the other directions.
     * Built from [[lexEdges]] — shuffle-only, no codec in the plan. */

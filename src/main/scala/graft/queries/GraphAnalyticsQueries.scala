@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.engine.Lineage.LineageOps
-import graft.graph.{GraphAnalytics, KGraph}
+import graft.graph.{GraphAnalytics, GraphOps, KGraph}
 
 /** Whole-graph analytics (triangles / k-core / communities) over the
   * knowledge graph and its co-occurrence projections — the graph-shaped
@@ -480,38 +480,25 @@ object GraphAnalyticsQueries {
   private val HcHops = 4
 
   /** Sampled BFS over the outgoing KG index: min-hop distances from
-    * `seeds` (column `s`), hops ≤ `maxHops`. The prebuilt node_id-
-    * partitioned index never shuffles — each hop is a broadcast hash
-    * join of the (seed × reached-node)-bounded frontier; no edge-wide
-    * distinct (parallel edges only duplicate frontier rows, absorbed
-    * by the bounded `next.distinct()`). Shared by q249 (harmonic
-    * centrality) and q258 (hop plot / effective diameter). */
+    * `seeds` (column `s`), hops ≤ `maxHops` — the carried-frame kernel
+    * ([[GraphOps.bfsFrame]]) keyed by seed, each hop a broadcast hash
+    * join of the (seed × reached-node)-bounded frontier against the
+    * prebuilt node_id-partitioned index (which never shuffles). Shared
+    * by q249 (harmonic centrality) and q258 (hop plot / effective
+    * diameter). */
   private def bfsVisited(s: SparkSession, dir: String,
       seeds: DataFrame, maxHops: Int): DataFrame = {
     // PACKED lex ids (round 15): e is the rank edge index — the same
     // duplicate-free outgoing edge set, already packed, partitioned and
-    // warmed at ingest — so every per-hop BHJ probe and frontier
-    // distinct runs on longs at zero per-call encode cost (guide §2.3).
-    // String seeds encode at entry (≤ a few dozen rows); the returned
-    // visited set carries PACKED node ids — q249 decodes post-sort,
-    // q258 reads only `hop`.
+    // warmed at ingest — so every per-hop probe and merge runs on longs
+    // at zero per-call encode cost (guide §2.3). String seeds encode at
+    // entry (≤ a few dozen rows); the returned (s, node_id, hop) frame
+    // carries PACKED ids — q249 decodes post-sort, q258 reads only `hop`.
     val e = KGraph.rankEdgesMaterialized(s, dir)
       .select(col("from_id").as("node_id"), col("to_id").as("next_id"))
-    var visited = seeds
-      .select(KGraph.encodeIdLex(col("s")).as("s"))
-      .select(col("s"), col("s").as("node_id"), lit(0).as("hop"))
-    var frontier = visited
-    for (h <- 1 to maxHops) {
-      val next = broadcast(frontier.select(col("s"), col("node_id")))
-        .join(e, Seq("node_id"))
-        .select(col("s"), col("next_id").as("node_id"), lit(h).as("hop"))
-        .distinct()
-      val fresh = next.join(broadcast(visited.select(col("s"), col("node_id"))),
-        Seq("s", "node_id"), "left_anti")
-      visited = visited.unionByName(fresh)
-      frontier = fresh
-    }
-    visited
+    val start = seeds.select(KGraph.encodeIdLex(col("s")).as("s"))
+      .select(col("s"), col("s").as("node_id"))
+    GraphOps.bfsFrame(e, start, maxHops, keys = Seq("s"))
   }
 
   private def q249(s: SparkSession, dir: String): DataFrame = {
@@ -566,8 +553,8 @@ object GraphAnalyticsQueries {
   //          contract: frontier broadcasts assume the sampled reach
   //          fits the broadcast cap — BcSeeds is the dial, estimates
   //          degrade gracefully with fewer sources (Brandes–Pich).
-  //          Each level is lineage-truncated once and reused by the
-  //          next level and two backward joins. Overflow bounds: σ ≤
+  //          One frame carries (src, node, σ, hop, δ) through both
+  //          passes, checkpointed once per level. Overflow bounds: σ ≤
   //          deg^4, δ_micro ≤ 1e6·paths; terms stay < 2^63 for
   //          deg ≤ ~300 at these hop caps (documented, data-checked).
   private val BcSeeds = 16
@@ -584,8 +571,8 @@ object GraphAnalyticsQueries {
     // PACKED lex ids (round 15): the outgoing oriented edge set IS the
     // rank edge set (same duplicate-free KG arms), and the rank index
     // already carries packed longs and is warmed at ingest — so every
-    // one of the ~9 scans of e (4 forward BHJs, the eSub restriction,
-    // 4 backward joins) hashes 8-byte words instead of ~12-byte
+    // one of the ~8 scans of e (4 forward BHJs, the eSub restriction,
+    // 3 backward joins) hashes 8-byte words instead of ~12-byte
     // strings, at zero per-call encode cost (guide §2.3). The 16-row
     // seed frame encodes at build; the ≤|reach| output rows decode in
     // one post-sort projection (order-isomorphic codec, so the final
@@ -596,48 +583,44 @@ object GraphAnalyticsQueries {
       .orderBy(col("o_orderkey")).limit(BcSeeds)
       .select(KGraph.encodeIdLex(
         concat(lit("o:"), col("o_orderkey"))).as("src"))
-    val lvl0 = seeds
-      .select(col("src"), col("src").as("node_id"), lit(1L).as("sigma"))
-    var levels = Vector(lvl0)
-    var visited = lvl0.select(col("src"), col("node_id"))
-    for (_ <- 1 to BcHops) {
-      val sums = broadcast(levels.last).join(e, Seq("node_id"))
-        .groupBy(col("src"), col("next_id"))
-        .agg(sum(col("sigma")).as("sigma"))
-        .select(col("src"), col("next_id").as("node_id"), col("sigma"))
-      val fresh = sums
-        .join(broadcast(visited), Seq("src", "node_id"), "left_anti")
-        .truncateLineage()
-      levels :+= fresh
-      visited = visited.unionByName(fresh.select(col("src"), col("node_id")))
-    }
+    // forward pass: the carried-frame BFS keyed by source, with exact
+    // integer σ summed over each node's first-level arrivals
+    val fwd = GraphOps.bfsFrame(e,
+      seeds.select(col("src"), col("src").as("node_id")), BcHops,
+      keys = Seq("src"), withSigma = true)
     // the backward pass only walks edges out of reached nodes: restrict
-    // the index ONCE (one scan) instead of re-scanning it per level
-    val eSub = e.join(broadcast(visited.select(col("node_id")).distinct()),
-      Seq("node_id")).truncateLineage()
-    var deltas = Vector(levels(BcHops)
-      .withColumn("delta", lit(0L)))
-    for (h <- BcHops - 1 to 0 by -1) {
-      val w = deltas.head
-      val terms = broadcast(levels(h)).join(eSub, Seq("node_id"))
-        .join(broadcast(w.select(col("src"),
-          col("node_id").as("next_id"), col("sigma").as("sigma_w"),
-          col("delta").as("delta_w"))), Seq("src", "next_id"))
+    // the index ONCE (one scan) instead of re-scanning it per level; a
+    // semi-join, so the reached set needs no distinct
+    val eSub = e.join(broadcast(fwd.select(col("node_id"))), Seq("node_id"),
+      "left_semi").truncateLineage()
+    // backward pass: δ rides on the forward frame, 0 until its level is
+    // accumulated. Level h's terms join that level's rows (a broadcast)
+    // through the index to w's (σ, δ) at level h+1 (a broadcast); the
+    // terms then merge into the frame by ONE keyed aggregate over
+    // frame ∪ terms — no left join, which would shuffle the whole frame
+    // — and one checkpoint ends the level. Level 0 (the sources) never
+    // accumulates into the score, so the walk stops at level 1.
+    var frame = fwd.select(col("src"), col("node_id"), col("sigma"),
+      col("hop"), lit(0L).as("delta"))
+    for (h <- BcHops - 1 to 1 by -1) {
+      val w = frame.filter(col("hop") === h + 1).select(col("src"),
+        col("node_id").as("next_id"), col("sigma").as("sigma_w"),
+        col("delta").as("delta_w"))
+      val terms = broadcast(frame.filter(col("hop") === h)
+          .select(col("src"), col("node_id"), col("sigma")))
+        .join(eSub, Seq("node_id"))
+        .join(broadcast(w), Seq("src", "next_id"))
         .select(col("src"), col("node_id"), expr(
           "(2 * sigma * (1000000 + delta_w) + sigma_w) div (2 * sigma_w)")
           .as("term"))
-      val dsum = terms.groupBy(col("src"), col("node_id"))
-        .agg(sum(col("term")).as("ds"))
-      deltas = levels(h)
-        .join(dsum, Seq("src", "node_id"), "left")
-        .select(col("src"), col("node_id"), col("sigma"),
-          coalesce(col("ds"), lit(0L)).as("delta"))
-        .truncateLineage() +: deltas
+      frame = frame.unionByName(terms, allowMissingColumns = true)
+        .groupBy(col("src"), col("node_id"))
+        .agg(max(col("sigma")).as("sigma"), max(col("hop")).as("hop"),
+          (max(col("delta")) + coalesce(sum(col("term")), lit(0L)))
+            .as("delta"))
+        .truncateLineage()
     }
-    // deltas(h) is level h's frame; sources (level 0) don't accumulate
-    (1 to BcHops).map(h => deltas(h).select(col("src"), col("node_id"),
-        col("delta")))
-      .reduce(_ unionByName _)
+    frame.filter(col("hop") > 0)
       .groupBy(col("node_id"))
       .agg(count(lit(1)).as("n_sources"), sum(col("delta")).as("bc_micro"))
       .filter(col("bc_micro") > 0L)

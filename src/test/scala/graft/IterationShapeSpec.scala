@@ -140,8 +140,9 @@ class IterationShapeSpec extends SparkSpec {
     }
     val delta = (s6 - s4) / 2.0
     info(s"stages: 4 rounds=$s4, 6 rounds=$s6, per-round delta=$delta")
-    // one degree aggregate + the isEmpty probe + two anti-joins + the
-    // two checkpoints land well under 12 stages/round; a lineage edit
+    // one degree aggregate + two anti-joins + the two checkpoints (the
+    // drop set's checkpoint also counts it) land well under 12
+    // stages/round; a lineage edit
     // that re-runs prior rounds (the failure this guards) is quadratic
     // in rounds and blows through the pin immediately
     assert(delta >= 1 && delta <= 12,
@@ -194,11 +195,11 @@ class IterationShapeSpec extends SparkSpec {
     // two-triangle-sharing-an-edge graph peels in TWO (the shared
     // edge's support decays to 0 after round 1 — KTrussSpec's cascade
     // case). The stage difference is the honest stage budget of ONE
-    // live-frontier round (measured 30: the frontier x adjacency
-    // triangle enumeration, the dead-triangle dedup + delta
-    // aggregate, the support/alive updates, three checkpoint
-    // materializations and the convergence probe — many tiny stages,
-    // each frontier-sized). The failure this guards is the q192 one:
+    // live-frontier round (measured 12 with AQE on: the frontier x
+    // adjacency triangle enumeration, the dead-triangle dedup + delta
+    // aggregate, the support/alive update and its checkpoint, whose
+    // job also counts the next round's drops — many tiny stages, each
+    // frontier-sized). The failure this guards is the q192 one:
     // a lineage edit that re-executes PRIOR rounds inside later ones
     // is quadratic in rounds and blows the band immediately. (Stage
     // COUNT cannot distinguish census-sized work from frontier-sized
@@ -221,6 +222,65 @@ class IterationShapeSpec extends SparkSpec {
     info(s"stages: 1-round graph=$s1, 2-round graph=$s2, cascade-round delta=$delta")
     assert(delta >= 5 && delta <= 60,
       s"per-cascade-round stage delta drifted: $delta (1-round $s1, 2-round $s2)")
+  }
+
+  test("q12/q14 multiHop: stage count grows by a pinned per-hop delta") {
+    import graft.graph.GraphOps
+    // a 12-node chain reached from its head: every hop adds one node,
+    // so 3 vs 5 hops run exactly 3 vs 5 rounds and half the run
+    // difference is the honest per-hop stage cost. The carried-frame
+    // hop is one frontier exchange, one min-hop merge aggregate and
+    // the checkpoint (which also counts the new level) = 3 stages. The
+    // failure this guards is a per-hop materialization added back (an
+    // isEmpty probe, a separately checkpointed level, a distinct or a
+    // visited anti-join): each adds at least one stage per hop.
+    val chain = (0 until 11).map(i => (f"n$i%02d", f"n${i + 1}%02d"))
+      .toDF("node_id", "next_id").localCheckpoint()
+    val head = Seq("n00").toDF("node_id")
+    def hops(n: Int): Int = {
+      var reached = 0L
+      val s = submittedStages {
+        reached = GraphOps.multiHop(chain, head, n, preOriented = true)
+          .count()
+      }
+      assert(reached == n + 1, s"$n hops should reach ${n + 1} nodes, got $reached")
+      s
+    }
+    hops(2) // warm
+    val (s3, s5) = (hops(3), hops(5))
+    val delta = (s5 - s3) / 2.0
+    info(s"stages: 3 hops=$s3, 5 hops=$s5, per-hop delta=$delta")
+    assert(delta >= 1 && delta <= 3,
+      s"per-hop stage delta drifted: $delta (3-hop $s3, 5-hop $s5)")
+  }
+
+  test("q338 localMaxMatching: stage count grows by a pinned per-round delta") {
+    import graft.graph.GraphAnalytics
+    // a 13-node path whose weights rise toward one end matches exactly
+    // ONE edge per round (the heaviest remaining end edge) and kills
+    // its neighbor, so it stays alive for 6 rounds: budgets 2 and 4
+    // both run every round. The carried-frame round is the best-edge
+    // aggregate, the two-vote aggregate, the two marking joins' frame
+    // exchanges and the checkpoint (which also counts the alive
+    // edges). A separately checkpointed dominant or alive set, a
+    // distinct or an emptiness probe added back lands above the pin.
+    val path = (1L to 12L).map(i => (i, i + 1, i)).toDF("a", "b", "w")
+      .localCheckpoint()
+    def run(rounds: Int): Int = {
+      var last = 0
+      val s = submittedStages {
+        last = GraphAnalytics.localMaxMatching(path, rounds)
+          .agg(max(col("round"))).head().getInt(0)
+      }
+      assert(last == rounds, s"$rounds rounds should each match, last=$last")
+      s
+    }
+    run(1) // warm
+    val (s2, s4) = (run(2), run(4))
+    val delta = (s4 - s2) / 2.0
+    info(s"stages: 2 rounds=$s2, 4 rounds=$s4, per-round delta=$delta")
+    assert(delta >= 1 && delta <= 6,
+      s"per-round stage delta drifted: $delta (2-round $s2, 4-round $s4)")
   }
 
   test("q149 kmeans: exactly one centroid broadcast join per Lloyd round") {

@@ -169,7 +169,7 @@ class KGraphCodecSpec extends SparkSpec {
     // indexes: each must hold exactly the encoded (node_id, next_id)
     // pairs of the corresponding string orientation — the KG's
     // (from, to) pairs are globally unique, so pair-set equality is
-    // full traversal equivalence (multiHop distincts per level)
+    // full traversal equivalence (multiHop merges each level per node)
     def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     def encPairs(d: graft.graph.GraphOps.Direction): Set[(Long, Long)] =

@@ -43,6 +43,28 @@ class LineageSpec extends SparkSpec {
     }
   }
 
+  test("truncateLineageCounting counts in the checkpoint job, local and reliable") {
+    // a shuffled frame across several partitions, so a second
+    // computation of any partition would show up as an inflated count
+    val df = spark.range(0, 1000, 1, 4).toDF("x")
+      .repartition(3, col("x")).select(col("x"), (col("x") % 7).as("m"))
+    def check(): Unit = {
+      val (out, Seq(all, zero, none)) = Lineage.LineageOps(df)
+        .truncateLineageCounting(lit(true), col("m") === 0, col("x") < 0)
+      assert((all, zero, none) == ((1000L, 143L, 0L)))
+      assert(out.count() == 1000L)
+      val (empty, Seq(n)) = Lineage.LineageOps(df.filter(col("x") < 0))
+        .truncateLineageCounting(lit(true))
+      assert(n == 0L && empty.isEmpty)
+    }
+    check()
+    val dir = Files.createTempDirectory("graft-ckpt-count").toFile
+    spark.sparkContext.setCheckpointDir(dir.getAbsolutePath)
+    spark.conf.set(Lineage.ReliableKey, "true")
+    try check()
+    finally spark.conf.set(Lineage.ReliableKey, "false")
+  }
+
   test("releaseTransient frees per-query blocks but keeps pinned artifacts") {
     // the bench/sweep hygiene contract (round 9: q273 died under ~40
     // queries' accumulated localCheckpoint blocks): snapshot the
