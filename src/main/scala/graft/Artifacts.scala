@@ -1,0 +1,60 @@
+package graft
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.dedup.DedupIndex
+import graft.graph.{GraphOps, KGraph}
+import graft.queries.GraphAnalyticsQueries
+
+/** The ingest artifacts, declared once. Each is a session artifact
+  * (`engine.SessionCache`): built on first use, kept by
+  * `Lineage.releaseTransient` until its session is invalidated. A query
+  * never needs them warmed; the mains warm them here so that a timed
+  * query does not pay an artifact build, and Bench times each group as
+  * its `ingest_<group>` row.
+  */
+object Artifacts {
+
+  final case class Artifact(name: String, group: String,
+      get: (SparkSession, String) => DataFrame)
+
+  private def kgraph(name: String)(get: (SparkSession, String) => DataFrame) =
+    Artifact(name, "kgraph_index", get)
+
+  /** In build order: an artifact's dependencies come before it. */
+  val all: Seq[Artifact] = Seq(
+    kgraph("kgraph.edges")(KGraph.materialized),
+    kgraph("kgraph.oriented.in")(
+      KGraph.orientedMaterialized(_, _, GraphOps.Incoming)),
+    kgraph("kgraph.oriented.out")(
+      KGraph.orientedMaterialized(_, _, GraphOps.Outgoing)),
+    kgraph("kgraph.oriented.both")(
+      KGraph.orientedMaterialized(_, _, GraphOps.Both)),
+    kgraph("kgraph.canonical")(KGraph.canonicalMaterialized),
+    kgraph("kgraph.lexedges")(KGraph.lexEdgesMaterialized),
+    kgraph("kgraph.rankedges")(KGraph.rankEdgesMaterialized),
+    kgraph("kgraph.nodeset")(KGraph.nodeSetMaterialized),
+    kgraph("kgraph.canonlex")(KGraph.canonicalLexMaterialized),
+    kgraph("kgraph.inlex")(KGraph.incomingLexMaterialized),
+    kgraph("kgraph.bothlex")(KGraph.bothLexMaterialized),
+    Artifact("dedup.clusters", "dedup_index", DedupIndex.clusters),
+    Artifact("dedup.simhash", "dedup_index", DedupIndex.simhashPairs),
+    Artifact("copurchase.canon", "copurchase",
+      GraphAnalyticsQueries.copurchaseCanon),
+    Artifact("copurchase.support", "census",
+      GraphAnalyticsQueries.copurchaseSupport),
+    Artifact("kgraph.support", "census", KGraph.supportMaterialized))
+
+  /** Every group, in build order. */
+  val groups: Seq[String] = all.map(_.group).distinct
+
+  /** Builds the artifacts of `groups` on `spark` in declaration order
+    * and returns each one's build seconds (an artifact already built
+    * reads ~0). */
+  def warm(spark: SparkSession, dir: String,
+      groups: Seq[String] = groups): Seq[(Artifact, Double)] =
+    all.filter(a => groups.contains(a.group)).map { a =>
+      val t0 = System.nanoTime()
+      a.get(spark, dir).count()
+      a -> (System.nanoTime() - t0) / 1e9
+    }
+}

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev main: attributes the ingestion-artifact build cost (the
@@ -11,22 +10,20 @@ import org.apache.spark.sql.functions._
   *
   * Usage: runMain graft.IngestProfile [sfDir] [leg,leg,...] — prints
   * one `[profile] <leg> <secs>` line per leg (stderr) and a compact
-  * JSON summary (stdout). Read-only; builds the same artifacts the
-  * bench warm-up builds, in the same order. The optional leg filter
-  * runs a subset — a filtered leg absorbs its skipped dependencies'
-  * build cost (artifacts resolve on demand), so filtered timings are
-  * upper bounds.
+  * JSON summary (stdout). Read-only: the dedup index's internal legs
+  * first, then one leg per artifact of `graft.Artifacts`, the bench
+  * warm-up's builds in its order. The optional filter runs a subset; it
+  * names legs and artifact groups (kgraph_index, dedup_index,
+  * copurchase, census). A filtered leg absorbs its skipped
+  * dependencies' build cost (artifacts resolve on demand), so filtered
+  * timings are upper bounds.
   */
 object IngestProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-ingest-profile")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
+    val b = GraftSession.builder("graft-ingest-profile",
+        Some(s"local[$cpus]"), cpus.toInt)
       .config("spark.ui.enabled", "false")
     // A/B knob: let AQE start shuffles wide and coalesce by size, so
     // per-partition volume stays bounded as the scale factor grows
@@ -47,29 +44,6 @@ object IngestProfile {
     }
     Tables.names.foreach(n => Tables.load(spark, sfDir, n).count())
 
-    // kgraph family
-    time("kgraph_base") {
-      graft.graph.KGraph.materialized(spark, sfDir).count()
-    }
-    time("kgraph_oriented_x3") {
-      Seq(graft.graph.GraphOps.Incoming, graft.graph.GraphOps.Outgoing,
-        graft.graph.GraphOps.Both).foreach(d =>
-        graft.graph.KGraph.orientedMaterialized(spark, sfDir, d).count())
-    }
-    time("kgraph_canonical") {
-      graft.graph.KGraph.canonicalMaterialized(spark, sfDir).count()
-    }
-    time("kgraph_rank_index") {
-      graft.graph.KGraph.rankEdgesMaterialized(spark, sfDir).count()
-      graft.graph.KGraph.nodeSetMaterialized(spark, sfDir).count()
-    }
-    time("kgraph_canonlex") {
-      graft.graph.KGraph.canonicalLexMaterialized(spark, sfDir).count()
-    }
-    time("kgraph_oriented_lex") {
-      graft.graph.KGraph.incomingLexMaterialized(spark, sfDir).count()
-      graft.graph.KGraph.bothLexMaterialized(spark, sfDir).count()
-    }
     // dedup family, leg by leg (the internal steps of
     // DedupIndex.candidatePairs / simhashPairs)
     val docs = Tables.load(spark, sfDir, "documents")
@@ -112,9 +86,6 @@ object IngestProfile {
     time("dedup_pairs_total") {
       graft.dedup.DedupIndex.candidatePairs(spark, sfDir).count()
     }
-    time("dedup_clusters") {
-      graft.dedup.DedupIndex.clusters(spark, sfDir).count()
-    }
     // cluster-leg internals: the 0.9 operating pair graph's size and
     // the star-contraction round count (attribution for the CC cost)
     if (only.forall(_.contains("dedup_cc_detail"))) {
@@ -128,20 +99,12 @@ object IngestProfile {
       System.err.println(f"[profile]   cc rounds=$ccRounds nodes=$n " +
         f"(${(System.nanoTime() - t0) / 1e9}%.2f s)")
     }
-    time("dedup_simhash_pairs") {
-      graft.dedup.DedupIndex.simhashPairs(spark, sfDir).count()
-    }
-    // graph projections + censuses
-    time("copurchase_canon") {
-      graft.queries.GraphAnalyticsQueries.copurchaseCanon(spark, sfDir)
-        .count()
-    }
-    time("census_copurchase") {
-      graft.queries.GraphAnalyticsQueries.copurchaseSupport(spark, sfDir)
-        .count()
-    }
-    time("census_kgraph") {
-      graft.graph.KGraph.supportMaterialized(spark, sfDir).count()
+    // every declared artifact, one leg each: the dedup legs above
+    // already built the signatures and pairs the dedup group reads
+    Artifacts.warm(spark, sfDir, Artifacts.groups.filter(g =>
+        only.forall(_.contains(g)))).foreach { case (a, t) =>
+      out(a.name) = t
+      System.err.println(f"[profile] ${a.name}%-28s $t%8.2f s")
     }
     val json = out.map { case (k, v) => s""""$k":${f"$v%.2f"}""" }
       .mkString("{", ",", "}")

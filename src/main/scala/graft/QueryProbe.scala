@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev main: runs a catalog query N times in one session with executed
   * SQLMetrics attribution per run, so a first-run-only cost (the
   * ~140-270 s pass-1 pathology on the sf1/sf2 graph heavies) is
@@ -15,39 +13,15 @@ object QueryProbe {
     val name = args(1)
     val runs = args.lift(2).map(_.toInt).getOrElse(2)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-query-probe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = GraftSession.builder("graft-query-probe",
+        Some(s"local[$cpus]"), cpus.toInt)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     GraftSession.quietAuditedWarnings()
     Tables.names.foreach(n => Tables.load(spark, sfDir, n).count())
-    graft.graph.KGraph.materialized(spark, sfDir).count()
-    graft.graph.KGraph.canonicalMaterialized(spark, sfDir).count()
-    // the census artifacts too: a probed query that builds them lazily
-    // AFTER the keep snapshot would have them swept by releaseTransient
-    // between runs and die on CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND in
-    // run 2 (q293 did, round 14)
-    graft.queries.GraphAnalyticsQueries.copurchaseCanon(spark, sfDir)
-      .count()
-    graft.queries.GraphAnalyticsQueries.copurchaseSupport(spark, sfDir)
-      .count()
-    graft.graph.KGraph.supportMaterialized(spark, sfDir).count()
-    // oriented + rank statics too (q256/q269/BFS family read them) —
-    // same sweep bug as the census: built lazily after the keep
-    // snapshot, they die between runs (q256 hit it this round)
-    Seq(graft.graph.GraphOps.Incoming, graft.graph.GraphOps.Outgoing,
-      graft.graph.GraphOps.Both).foreach(d =>
-      graft.graph.KGraph.orientedMaterialized(spark, sfDir, d).count())
-    graft.graph.KGraph.rankEdgesMaterialized(spark, sfDir).count()
-    graft.graph.KGraph.nodeSetMaterialized(spark, sfDir).count()
-    graft.graph.KGraph.canonicalLexMaterialized(spark, sfDir).count()
-    graft.graph.KGraph.incomingLexMaterialized(spark, sfDir).count()
-    graft.graph.KGraph.bothLexMaterialized(spark, sfDir).count()
+    Artifacts.warm(spark, sfDir,
+      Artifacts.groups.filterNot(_ == "dedup_index")): Unit
     val keep = graft.engine.Lineage.persistentIds(spark)
     val q = graft.queries.Catalog.byName(name)
     // task-metric accumulation per run: SQLMetrics miss scheduler gaps,

@@ -30,49 +30,13 @@ object QueryTimer {
       val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
     }
     Tables.names.foreach(n => Tables.load(spark, sfDir, n).count())
-    // QTIMER_LIGHT=1 warms only the base + canonical graph artifacts —
-    // a graph-query A/B at sf2 otherwise pays the ~250 s dedup-index
-    // build it never reads (queries that DO read skipped artifacts
-    // still work: SessionCache builds them on demand, inside the
-    // query's timed window — use light mode only for graph queries)
+    // QTIMER_LIGHT=1 warms only the graph indexes — a graph-query A/B
+    // at sf2 otherwise pays the ~250 s dedup-index build it never reads
+    // (a query that DOES read a skipped artifact still works: it is
+    // built on demand, inside the query's first timed run)
     val light = sys.env.get("QTIMER_LIGHT").contains("1")
-    val ingest = timed {
-      graft.graph.KGraph.materialized(spark, sfDir).count()
-      graft.graph.KGraph.canonicalMaterialized(spark, sfDir).count()
-      // the rank-family statics are cheap next to the dedup/census
-      // builds light mode exists to skip — warm them in both modes so
-      // a rank-query A/B times the iterations, not the artifact build
-      graft.graph.KGraph.rankEdgesMaterialized(spark, sfDir).count()
-      graft.graph.KGraph.nodeSetMaterialized(spark, sfDir).count()
-      graft.graph.KGraph.canonicalLexMaterialized(spark, sfDir).count()
-      // the oriented indexes are graph statics too — light mode skipped
-      // them, so a BFS query (q12/q14) built them lazily AFTER the keep
-      // snapshot and died on CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND in pass 2
-      // (third instance of the sweep bug: q293/QueryTimer r14,
-      // q256/QueryProbe r15, q12 here)
-      Seq(graft.graph.GraphOps.Incoming, graft.graph.GraphOps.Outgoing,
-        graft.graph.GraphOps.Both).foreach(d =>
-        graft.graph.KGraph.orientedMaterialized(spark, sfDir, d).count())
-      graft.graph.KGraph.incomingLexMaterialized(spark, sfDir).count()
-      graft.graph.KGraph.bothLexMaterialized(spark, sfDir).count()
-      if (!light) {
-        graft.dedup.DedupIndex.clusters(spark, sfDir).count()
-        graft.dedup.DedupIndex.simhashPairs(spark, sfDir).count()
-        graft.queries.GraphAnalyticsQueries.copurchaseCanon(spark, sfDir)
-          .count()
-        // the census + rank artifacts too — the SAME warm set as Bench:
-        // a query that builds them lazily AFTER the keep snapshot has
-        // them swept by the inter-pass releaseTransient and dies on
-        // CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND in pass 2 (the QueryProbe
-        // round-14 bug, which QueryTimer shared; q293 hit it here)
-        graft.queries.GraphAnalyticsQueries.copurchaseSupport(spark, sfDir)
-          .count()
-        graft.graph.KGraph.supportMaterialized(spark, sfDir).count()
-        graft.graph.KGraph.rankEdgesMaterialized(spark, sfDir).count()
-        graft.graph.KGraph.nodeSetMaterialized(spark, sfDir).count()
-        graft.graph.KGraph.canonicalLexMaterialized(spark, sfDir).count()
-      }
-    }
+    val ingest = Artifacts.warm(spark, sfDir,
+      if (light) Seq("kgraph_index") else Artifacts.groups).map(_._2).sum
     val keepIds = graft.engine.Lineage.persistentIds(spark)
     println(f"[qtimer] warm+ingest $ingest%.1f s")
 

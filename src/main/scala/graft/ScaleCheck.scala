@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.queries.Catalog
 
@@ -61,12 +61,8 @@ object ScaleCheck {
     val sfDir = args.headOption.getOrElse("/root/repo/testdata_sf1/sf1.0")
     val names = if (args.length > 1) args.drop(1).toSeq else DefaultHeavy
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val root = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scalecheck")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
+    val root = GraftSession.builder("graft-scalecheck",
+        Some(s"local[$cpus]"), cpus.toInt)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     root.sparkContext.setLogLevel("WARN")
@@ -81,28 +77,14 @@ object ScaleCheck {
     // both sessions' sf1.0 artifacts resident for the entire sweep and
     // needed a 96 GiB driver heap for it; a fingerprint compare never
     // needed them simultaneously. Within a trial, ALL ingestion
-    // artifacts warm before the keep-set snapshot, so the per-query
-    // transient sweep can't release an artifact mid-trial.
+    // artifacts warm before the timed sweep, so no query's time
+    // includes an artifact build.
     val parts = Seq(cpus, "17")
     val baseKeep = graft.engine.Lineage.persistentIds(root)
     val trialFps = parts.map { p =>
       val s = root.newSession()
       s.conf.set("spark.sql.shuffle.partitions", p)
-      graft.graph.KGraph.materialized(s, sfDir).count()
-      Seq(graft.graph.GraphOps.Incoming, graft.graph.GraphOps.Outgoing,
-        graft.graph.GraphOps.Both).foreach(d =>
-        graft.graph.KGraph.orientedMaterialized(s, sfDir, d).count())
-      graft.graph.KGraph.canonicalMaterialized(s, sfDir).count()
-      graft.graph.KGraph.rankEdgesMaterialized(s, sfDir).count()
-      graft.graph.KGraph.nodeSetMaterialized(s, sfDir).count()
-      graft.graph.KGraph.canonicalLexMaterialized(s, sfDir).count()
-      graft.graph.KGraph.incomingLexMaterialized(s, sfDir).count()
-      graft.graph.KGraph.bothLexMaterialized(s, sfDir).count()
-      graft.queries.GraphAnalyticsQueries.copurchaseCanon(s, sfDir).count()
-      graft.queries.GraphAnalyticsQueries.copurchaseSupport(s, sfDir).count()
-      graft.graph.KGraph.supportMaterialized(s, sfDir).count()
-      graft.dedup.DedupIndex.clusters(s, sfDir).count()
-      graft.dedup.DedupIndex.simhashPairs(s, sfDir).count()
+      Artifacts.warm(s, sfDir): Unit
       val keep = graft.engine.Lineage.persistentIds(root)
       // Trial-1 warm-up pass (round-13 verdict item 5): the artifact
       // builds above cover the session artifacts, but the FIRST

@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.engine.SessionCache
 import graft.engine.Lineage.LineageOps
 
 /** Materialized near-dup index over the `documents` table — the dedup
@@ -52,16 +53,15 @@ object DedupIndex {
     * per-row SimHash (same integer arithmetic as the explode/groupBy
     * form, without the corpus-token-sized explode). Round-12 verdict
     * item 4: the two legs each re-tokenized and re-hashed the corpus. */
-  def signatures(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir)
-    graft.engine.SessionCache.getOrBuild(spark, s"dedup|$dir|sigs")(
+  def signatures(spark: SparkSession, dir: String): DataFrame =
+    SessionCache.getOrBuild(spark, s"dedup|$dir|sigs")(
       // null-text docs are DROPPED, matching the legacy explode paths
       // (explode of a null token array emits no rows, so
       // Dedup.simhash16 / minhashLsh never saw them) — without the
       // filter the per-row SimHash degrades null to simhash 0 and all
       // null docs would pair at distance 0 (ADVICE r13). Empty text is
       // NOT null: split("", " ") yields one "" token in both paths.
-      d.filter(col("text").isNotNull)
+      docs(spark, dir).filter(col("text").isNotNull)
         .select(col("doc_id").as("id"), col("source").as("blk"),
           graft.text.TextFunctions.tokenHashes(col("text")).as("hs"))
         .select(col("id"), col("blk"),
@@ -70,7 +70,6 @@ object DedupIndex {
           graft.text.TextFunctions.simhash16FromHashes(col("hs"))
             .as("simhash"))
         .truncateLineage())
-  }
 
   /** Candidate pair frame (a_id, b_id, est_jaccard) at the sweep floor,
     * built once per (session, sfDir). The artifact materializes the
@@ -81,13 +80,12 @@ object DedupIndex {
     * Dedup.minhashLshFromSig's scaladoc); at the floor ~98% of scored
     * candidates are retained anyway, so the materialized frame is the
     * same size either way. */
-  def candidatePairs(spark: SparkSession, dir: String): DataFrame = {
-    val sig = signatures(spark, dir).select(col("id"), col("sig"))
-    graft.engine.SessionCache.getOrBuild(spark, s"dedup|$dir|pairs")(
-      Dedup.minhashLshScored(sig, K, Bands)
+  def candidatePairs(spark: SparkSession, dir: String): DataFrame =
+    SessionCache.getOrBuild(spark, s"dedup|$dir|pairs")(
+      Dedup.minhashLshScored(
+          signatures(spark, dir).select(col("id"), col("sig")), K, Bands)
         .truncateLineage()
         .filter(col("est_jaccard") >= FloorThreshold))
-  }
 
   /** The operating pair graph: exact filter of [[candidatePairs]] to
     * the q28 threshold — identical to running minhashLsh at 0.9. */
@@ -97,15 +95,10 @@ object DedupIndex {
   /** Duplicate-cluster table (doc_id, cluster_id, cluster_size,
     * is_canonical) over [[pairs]] — Dedup.clusters materialized once.
     * Only docs participating in a near-dup pair appear. */
-  def clusters(spark: SparkSession, dir: String): DataFrame = {
-    // resolve dependencies BEFORE getOrBuild: a nested getOrBuild on
-    // the shared map throws "Recursive update" when the keys share a
-    // hash bin (the KGraph.orientedMaterialized bug; see SessionCache)
-    val p = pairs(spark, dir)
-    val d = docs(spark, dir)
-    graft.engine.SessionCache.getOrBuild(spark, s"dedup|$dir|clusters")(
-      Dedup.clusters(p, d, "doc_id", "text").truncateLineage())
-  }
+  def clusters(spark: SparkSession, dir: String): DataFrame =
+    SessionCache.getOrBuild(spark, s"dedup|$dir|clusters")(
+      Dedup.clusters(pairs(spark, dir), docs(spark, dir), "doc_id", "text")
+        .truncateLineage())
 
   /** The SECOND catcher table: source-blocked SimHash pairs
     * (blk, a_id, b_id, hamming) at hamming ≤ [[SimhashMaxDist]] —
@@ -113,11 +106,10 @@ object DedupIndex {
     * directly and q277's capture–recapture probes it; before round 10
     * the recall estimate re-ran the full SimHash candidate join per
     * call while its LSH side read this index (4.7× at 10× data). */
-  def simhashPairs(spark: SparkSession, dir: String): DataFrame = {
-    val sh = signatures(spark, dir)
-      .select(col("id"), col("blk"), col("simhash"))
-    graft.engine.SessionCache.getOrBuild(spark, s"dedup|$dir|simhash")(
-      Dedup.simhashPairsFromSig(sh, maxDist = SimhashMaxDist)
+  def simhashPairs(spark: SparkSession, dir: String): DataFrame =
+    SessionCache.getOrBuild(spark, s"dedup|$dir|simhash")(
+      Dedup.simhashPairsFromSig(
+          signatures(spark, dir).select(col("id"), col("blk"), col("simhash")),
+          maxDist = SimhashMaxDist)
         .truncateLineage())
-  }
 }

@@ -18,8 +18,13 @@ import org.apache.spark.sql.functions.{count, lit, when}
   * configured (`spark.sparkContext.setCheckpointDir(...)`, pointing at
   * HDFS/S3/DBFS on a cluster), it uses `checkpoint()`; otherwise it falls
   * back to `localCheckpoint()`. Both variants materialize eagerly and
-  * preserve the frame's partitioning, so operator plans are identical
-  * either way — only the storage durability differs.
+  * produce the same plan over the checkpointed rows — only the storage
+  * durability differs. Neither preserves a partitioning the next join
+  * can reuse: a checkpoint of an AQE-coalesced shuffle output reads back
+  * as a scan that the next join on the same key shuffles again (q256's
+  * executed plan showed `Exchange hashpartitioning(src, node_id, 4)`
+  * directly over the scan of a frame a groupBy(src, node_id) had just
+  * produced).
   *
   * Reliable checkpoint files are NOT deleted by Spark unless
   * `spark.cleaner.referenceTracking.cleanCheckpoints=true` (default
@@ -35,29 +40,30 @@ object Lineage {
   val ReliableKey = "spark.graft.reliableCheckpoints"
 
   /** Ids of the RDD blocks currently persisted on `spark`'s context —
-    * snapshot this AFTER building the session's long-lived artifacts
-    * (KGraph indexes, DedupIndex, the co-purchase projection) to get
-    * the keep-set for [[releaseTransient]]. */
+    * the keep-set for [[releaseTransient]] (the session artifacts need
+    * not be in it: the sweep keeps them itself). */
   def persistentIds(spark: org.apache.spark.sql.SparkSession): Set[Int] =
     spark.sparkContext.getPersistentRDDs.keySet.toSet
 
   /** Checkpoint-block hygiene for long-lived sessions: unpersists every
-    * persisted RDD whose id is not in `keep`, returning how many were
-    * dropped. Local checkpoints are persisted blocks that NOTHING ever
-    * unpersists — a session that runs many queries back-to-back (a
-    * bench sweep, a notebook, a query service) accumulates every
-    * query's per-hop blocks until the block manager crowds out live
-    * work (round 9: q273 completed solo in 162 s but died twice in the
-    * interleaved sf1.0 sweep under ~40 queries' accumulated blocks).
-    * Call between queries with the post-ingestion [[persistentIds]]
+    * persisted RDD whose id is not in `keep` and that no live session
+    * artifact reads, returning how many were dropped. Local checkpoints
+    * are persisted blocks that NOTHING ever unpersists — a session that
+    * runs many queries back-to-back (a bench sweep, a notebook, a query
+    * service) accumulates every query's per-hop blocks until the block
+    * manager crowds out live work (round 9: q273 completed solo in 162 s
+    * but died twice in the interleaved sf1.0 sweep under ~40 queries'
+    * accumulated blocks). Call between queries with a [[persistentIds]]
     * snapshot as `keep`; a released frame is gone for good (lineage is
-    * truncated), which is exactly right for per-query transients and
-    * exactly wrong for shared artifacts — hence the explicit keep-set
-    * rather than a blanket clear. */
+    * truncated), which is exactly right for per-query transients. The
+    * artifacts in [[SessionCache]] are kept whenever they were built, so
+    * a query may build one lazily after the snapshot. */
   def releaseTransient(spark: org.apache.spark.sql.SparkSession,
       keep: Set[Int], blocking: Boolean = false): Int = {
-    val drop = spark.sparkContext.getPersistentRDDs
-      .filter { case (id, _) => !keep(id) }
+    val sc = spark.sparkContext
+    val live = SessionCache.liveRddIds(sc)
+    val drop = sc.getPersistentRDDs
+      .filter { case (id, _) => !keep(id) && !live(id) }
     // blocking=true for benchmark harnesses: an async unpersist returns
     // immediately and the block-manager removal work bleeds into the
     // NEXT query's timed window (round 13: q268's in-sweep samples read

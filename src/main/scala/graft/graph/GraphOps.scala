@@ -64,10 +64,12 @@ object GraphOps {
     // and hash-partitioned (KGraph.orientedMaterialized — the analog of
     // the reference's from/to edge indexes); skip the rebuild entirely.
     val e0 = if (preOriented) edges else oriented(edges, dir)
-    // Materialize the (filtered, oriented) edge set once, HASH-PARTITIONED
-    // on the join key — checkpointing preserves the partitioning, so every
-    // hop's join reuses it and only the (small) frontier side shuffles.
-    // This is the local analog of bucketing edges by node_id on a cluster.
+    // Materialize the (filtered, oriented) edge set once, spread by the
+    // join key, so no hop re-runs the filter and orientation. The
+    // checkpoint keeps no partitioning a hop's join can reuse (see
+    // Lineage: an AQE-coalesced shuffle output reads back as a plain
+    // scan), so the join may shuffle this side again; bucketing edges by
+    // node_id is what removes that shuffle on a cluster.
     val e = edgeFilter match {
       case None if preOriented => e0.select(col("node_id"), col("next_id"))
       case _ => edgeFilter.map(e0.filter).getOrElse(e0)
@@ -265,9 +267,9 @@ object GraphOps {
     */
   def chains(edges: DataFrame, maxLen: Int = 20,
       seedFilter: Option[Column] = None, preOriented: Boolean = false): DataFrame = {
-    // hash-partitioned on the join key; partitioning survives the
-    // checkpoint (and the rename — ProjectExec propagates partitioning
-    // through aliases) so each level's join only shuffles the frontier
+    // spread by the join key and materialized once; the checkpoint keeps
+    // no partitioning the level joins can reuse (see Lineage), so a
+    // join may shuffle this side again
     val out =
       if (preOriented) edges.select(col("node_id").as("cur"), col("next_id"))
       else edges

@@ -3,6 +3,7 @@ package graft.graph
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.engine.SessionCache
 import graft.engine.Lineage.LineageOps
 
 /** Deterministic knowledge-graph view over the driver's synthetic star
@@ -27,7 +28,7 @@ object KGraph {
     * bucketed by from_id. Cached via the shared session-keyed artifact
     * cache (graft.engine.SessionCache). */
   def materialized(spark: SparkSession, dir: String): DataFrame =
-    graft.engine.SessionCache.getOrBuild(spark, s"kgraph|$dir")(
+    SessionCache.getOrBuild(spark, s"kgraph|$dir")(
       edges(spark, dir).truncateLineage())
 
   /** Direction-oriented edge tables, hash-partitioned on the traversal
@@ -36,16 +37,11 @@ object KGraph {
     * (sqlite_storage.py:913-935: edges(from_node_id), edges(to_node_id)).
     * BFS hops against these only shuffle the frontier side. */
   def orientedMaterialized(spark: SparkSession, dir: String,
-      direction: GraphOps.Direction): DataFrame = {
-    // resolve the base table BEFORE getOrBuild: a nested getOrBuild on
-    // the shared map throws "Recursive update" whenever the two keys
-    // land in the same hash bin (see SessionCache's caller contract)
-    val base = materialized(spark, dir)
-    graft.engine.SessionCache.getOrBuild(spark, s"kgraph|$dir|$direction")(
-      GraphOps.oriented(base, direction)
+      direction: GraphOps.Direction): DataFrame =
+    SessionCache.getOrBuild(spark, s"kgraph|$dir|$direction")(
+      GraphOps.oriented(materialized(spark, dir), direction)
         .repartition(col("node_id"))
         .truncateLineage())
-  }
 
   /** Canonical undirected edge list (a < b, deduped, self-loops
     * dropped), hash-partitioned on `a` and materialized once per
@@ -53,13 +49,11 @@ object KGraph {
     * (GraphAnalytics triangles / k-core / LPA all start from it), built
     * at ingestion time exactly like the oriented traversal indexes
     * above. */
-  def canonicalMaterialized(spark: SparkSession, dir: String): DataFrame = {
-    val base = materialized(spark, dir)
-    graft.engine.SessionCache.getOrBuild(spark, s"kgraph|$dir|canonical")(
-      GraphAnalytics.canonical(base)
+  def canonicalMaterialized(spark: SparkSession, dir: String): DataFrame =
+    SessionCache.getOrBuild(spark, s"kgraph|$dir|canonical")(
+      GraphAnalytics.canonical(materialized(spark, dir))
         .repartition(col("a"))
         .truncateLineage())
-  }
 
   /** Per-edge triangle support over the canonical list (a, b,
     * support), materialized once per (session, sfDir) — the shared
@@ -113,15 +107,16 @@ object KGraph {
     * rather than mis-order (same loud-failure contract as
     * [[encodeIdChecked]]; ids reach ~2×10^8 at sf2 — 10^12 is 4,000×
     * headroom). KGraphCodecSpec pins order-preservation + roundtrip. */
-  /** 10^(12−len) as exact long literals (len ∈ [1, 12]) — the shared
-    * scale chain of [[encodeIdLex]] and [[decodeIdLex]] (ADVICE r14:
-    * the duplicated 12-branch CASE could silently desynchronize the
-    * two codec directions under a future digit-budget edit). */
+  /** 10^(12−len) as an exact long for len ∈ [1, 12], null otherwise —
+    * one lookup in a literal array, shared by [[encodeIdLex]] and
+    * [[decodeIdLex]] so the two codec directions cannot desynchronize
+    * (ADVICE r14). It replaced a 12-branch CASE whose generated code,
+    * in a stage that encodes and decodes, grew past the JVM's 64 KB
+    * method limit and fell back to the interpreter. */
+  private val lexScales: Seq[Long] =
+    (1 to 12).map(l => math.pow(10, 12 - l).toLong)
   private def lexScale(len: Column): Column =
-    (2 to 12).foldLeft(
-        when(len === 1L, lit(math.pow(10, 11).toLong))) { (acc, l) =>
-      acc.when(len === l.toLong, lit(math.pow(10, 12 - l).toLong))
-    }
+    get(typedLit(lexScales), len.cast("int") - 1)
 
   private[graft] def encodeIdLex(c: Column): Column = {
     val num = c.substr(lit(3), length(c)).cast("long")
@@ -183,15 +178,15 @@ object KGraph {
       (f / scale).cast("long").cast("string"))
   }
 
-  def supportMaterialized(spark: SparkSession, dir: String): DataFrame = {
-    val canon = canonicalMaterialized(spark, dir)
+  def supportMaterialized(spark: SparkSession, dir: String): DataFrame =
     // run the O(m^1.5) wedge enumeration on packed longs, decode the
     // O(m) result back to id strings: output is bit-identical to the
     // string-keyed census (KGraphCodecSpec pins it), the wedge work is
     // several times cheaper. least/greatest re-canonicalize because
     // the long order differs from the string order ("c:100" < "c:99"
     // lexicographically, 100 > 99 numerically).
-    graft.engine.SessionCache.getOrBuild(spark, s"kgraph|$dir|support")({
+    SessionCache.getOrBuild(spark, s"kgraph|$dir|support")({
+      val canon = canonicalMaterialized(spark, dir)
       val enc = canon.select(
         least(encodeIdChecked(col("a")), encodeIdChecked(col("b"))).as("a"),
         greatest(encodeIdChecked(col("a")), encodeIdChecked(col("b"))).as("b"))
@@ -202,7 +197,6 @@ object KGraph {
           greatest(col("da"), col("db")).as("b"), col("support"))
         .truncateLineage()
     })
-  }
 
   /** PageRank edge index (from_id, to_id, outdeg), hash-partitioned on
     * from_id and materialized once per (session, sfDir) — the static
@@ -225,46 +219,38 @@ object KGraph {
   /** The encoded edge list is MATERIALIZED before the index build
     * fans it out (outdeg aggregate + join + repartition = three
     * consumers): left as a view, the optimizer collapses the encode
-    * projection into every consumer and pushes isnotnull(CASE…)
-    * constraints of the 12-branch codec into the join — the same
+    * projection into every consumer and pushes the codec's isnotnull
+    * constraints into the join — the same
     * expression-in-join-stage pathology the round-15 dedup work
     * measured at ~50×; the packed build read ~185 s at sf1.0 as a
     * view vs seconds materialized. One encode pass, then long-only
     * ops. */
-  def lexEdgesMaterialized(spark: SparkSession, dir: String): DataFrame = {
-    val base = materialized(spark, dir)
-    graft.engine.SessionCache.getOrBuild(spark, s"kgraph|$dir|lexedges")(
-      base.select(
+  def lexEdgesMaterialized(spark: SparkSession, dir: String): DataFrame =
+    SessionCache.getOrBuild(spark, s"kgraph|$dir|lexedges")(
+      materialized(spark, dir).select(
         encodeIdLex(col("from_id")).as("from_id"),
         encodeIdLex(col("to_id")).as("to_id")).truncateLineage())
-  }
-  private def lexEdges(spark: SparkSession, dir: String): DataFrame =
-    lexEdgesMaterialized(spark, dir)
 
-  def rankEdgesMaterialized(spark: SparkSession, dir: String): DataFrame = {
-    val enc = lexEdges(spark, dir)
-    graft.engine.SessionCache.getOrBuild(spark, s"kgraph|$dir|rankedges")(
-      PageRank.edgeIndex(enc).truncateLineage())
-  }
+  def rankEdgesMaterialized(spark: SparkSession, dir: String): DataFrame =
+    SessionCache.getOrBuild(spark, s"kgraph|$dir|rankedges")(
+      PageRank.edgeIndex(lexEdgesMaterialized(spark, dir)).truncateLineage())
 
   /** PACKED (encodeIdLex) canonical undirected edge list, materialized
     * once per (session, sfDir) — round 15: q268/q192/q193 each encoded
-    * the canonical artifact per call (2·|E| 12-branch codec
+    * the canonical artifact per call (2·|E| codec
     * evaluations, plus a per-call lazy checkpoint in q268). The lex
     * codec is order-ISOMORPHIC and injective, so canonical() over the
     * encoded edge list IS the encoded canonical list (least/greatest
     * commute with the order-preserving map, ≠ and DISTINCT with
     * injectivity) — consumers' semantics are unchanged
-    * (KGraphCodecSpec pins the set equality). Built from [[lexEdges]]
+    * (KGraphCodecSpec pins the set equality). Built from [[lexEdgesMaterialized]]
     * (already materialized): one distinct, no codec in the plan. */
   def canonicalLexMaterialized(spark: SparkSession, dir: String)
-      : DataFrame = {
-    val enc = lexEdges(spark, dir)
-    graft.engine.SessionCache.getOrBuild(spark, s"kgraph|$dir|canonlex")(
-      GraphAnalytics.canonical(enc)
+      : DataFrame =
+    SessionCache.getOrBuild(spark, s"kgraph|$dir|canonlex")(
+      GraphAnalytics.canonical(lexEdgesMaterialized(spark, dir))
         .repartition(col("a"))
         .truncateLineage())
-  }
 
   /** PACKED oriented traversal indexes (node_id, next_id) for the BFS
     * family, hash-partitioned on node_id and materialized once per
@@ -280,37 +266,34 @@ object KGraph {
     * level per node either way). Outgoing traversals read
     * [[rankEdgesMaterialized]] (same rows, already packed and
     * partitioned on from_id); these two cover the other directions.
-    * Built from [[lexEdges]] — shuffle-only, no codec in the plan. */
+    * Built from [[lexEdgesMaterialized]] — shuffle-only, no codec in the plan. */
   def incomingLexMaterialized(spark: SparkSession, dir: String)
-      : DataFrame = {
-    val enc = lexEdges(spark, dir)
-    graft.engine.SessionCache.getOrBuild(spark, s"kgraph|$dir|inlex")(
-      enc.select(col("to_id").as("node_id"), col("from_id").as("next_id"))
+      : DataFrame =
+    SessionCache.getOrBuild(spark, s"kgraph|$dir|inlex")(
+      lexEdgesMaterialized(spark, dir)
+        .select(col("to_id").as("node_id"), col("from_id").as("next_id"))
         .repartition(col("node_id"))
         .truncateLineage())
-  }
 
-  def bothLexMaterialized(spark: SparkSession, dir: String): DataFrame = {
-    val enc = lexEdges(spark, dir)
-    graft.engine.SessionCache.getOrBuild(spark, s"kgraph|$dir|bothlex")(
+  def bothLexMaterialized(spark: SparkSession, dir: String): DataFrame =
+    SessionCache.getOrBuild(spark, s"kgraph|$dir|bothlex")({
+      val enc = lexEdgesMaterialized(spark, dir)
       enc.select(col("from_id").as("node_id"), col("to_id").as("next_id"))
         .unionByName(enc.select(col("to_id").as("node_id"),
           col("from_id").as("next_id")))
         .repartition(col("node_id"))
-        .truncateLineage())
-  }
+        .truncateLineage()
+    })
 
   /** Distinct node set (node_id), hash-partitioned and materialized
     * once per (session, sfDir) — the rank family's per-iteration left
     * side and q294's seed universe. PACKED [[encodeIdLex]] longs, the
     * same keyspace as [[rankEdgesMaterialized]] (injective, so the
     * encoded distinct set is exactly the encoded node set). */
-  def nodeSetMaterialized(spark: SparkSession, dir: String): DataFrame = {
-    val enc = lexEdges(spark, dir)
-    graft.engine.SessionCache.getOrBuild(spark, s"kgraph|$dir|nodeset")(
-      PageRank.nodes(enc)
+  def nodeSetMaterialized(spark: SparkSession, dir: String): DataFrame =
+    SessionCache.getOrBuild(spark, s"kgraph|$dir|nodeset")(
+      PageRank.nodes(lexEdgesMaterialized(spark, dir))
         .repartition(col("node_id")).truncateLineage())
-  }
 
   /** Typed edges: from_id, to_id, relation_type, confidence. */
   def edges(spark: SparkSession, dir: String): DataFrame = {

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.engine.SessionCache
 import graft.engine.Lineage.LineageOps
 import graft.graph.{GraphAnalytics, GraphOps, KGraph}
 
@@ -29,12 +30,11 @@ object GraphAnalyticsQueries {
     * two-scan self-join projection per call — the one co-purchase
     * consumer the shared artifact didn't yet serve. */
   private[graft] def copurchaseWeighted(s: SparkSession, dir: String)
-      : org.apache.spark.sql.DataFrame = {
-    import graft.engine.Lineage.LineageOps
-    val li = Tables.load(s, dir, "lineitem")
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-      .distinct()
-    graft.engine.SessionCache.getOrBuild(s, s"copurchase|$dir")(
+      : DataFrame =
+    SessionCache.getOrBuild(s, s"copurchase|$dir")({
+      val li = Tables.load(s, dir, "lineitem")
+        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
+        .distinct()
       li.select(col("ok"), col("pk").as("p1"))
         .join(li.select(col("ok"), col("pk").as("p2")), "ok")
         .filter(col("p1") < col("p2"))
@@ -42,14 +42,14 @@ object GraphAnalyticsQueries {
         .agg(count(lit(1)).as("w"))
         .select(col("p1").as("a"), col("p2").as("b"), col("w"))
         .repartition(col("a"))
-        .truncateLineage())
-  }
+        .truncateLineage()
+    })
 
   /** Canonical (unweighted) co-purchase projection: the (a, b)
     * projection of [[copurchaseWeighted]] — same rows as the former
     * standalone distinct build, zero extra materialization. */
   private[graft] def copurchaseCanon(s: SparkSession, dir: String)
-      : org.apache.spark.sql.DataFrame =
+      : DataFrame =
     copurchaseWeighted(s, dir).select(col("a"), col("b"))
 
   /** Per-edge triangle support over the co-purchase projection,
@@ -60,12 +60,9 @@ object GraphAnalyticsQueries {
     * ONE O(m^1.5) wedge enumeration instead of each re-running it
     * over the same cached projection. */
   private[graft] def copurchaseSupport(s: SparkSession, dir: String)
-      : org.apache.spark.sql.DataFrame = {
-    import graft.engine.Lineage.LineageOps
-    val canon = copurchaseCanon(s, dir)
-    graft.engine.SessionCache.getOrBuild(s, s"copurchase|$dir|support")(
-      GraphAnalytics.edgeSupport(canon).truncateLineage())
-  }
+      : DataFrame =
+    SessionCache.getOrBuild(s, s"copurchase|$dir|support")(
+      GraphAnalytics.edgeSupport(copurchaseCanon(s, dir)).truncateLineage())
 
   // -- q191: co-purchase projection triangles + local clustering
   //          coefficient. Projects lineitem onto a part–part graph

@@ -82,13 +82,17 @@ object BpeTrainer {
     *  1. it shares no symbol with any selected merge (disjointness:
     *     earlier selections cannot change its count), and
     *  2. its count is STRICTLY greater than every census pair that
-    *     overlaps a selected merge, including the unseen tail bound
-    *     (`tailMax`). Applying a selected merge only creates pairs
-    *     involving its output symbol, and each such new pair's count is
-    *     bounded by an overlapping census pair (a new (x, ab) occurs
-    *     only where (x, a) did) — so nothing the earlier merges create
-    *     or leave behind can outrank, or tie with, the candidate when
-    *     its sequential turn comes.
+    *     overlaps a selected merge, wherever that pair ranks, and than
+    *     the unseen tail bound (`tailMax`). Applying a selected merge
+    *     only creates pairs involving its output symbol, and each such
+    *     new pair's count is bounded by an overlapping census pair (a
+    *     new (x, ab) occurs only where (x, a) did) — so nothing the
+    *     earlier merges create or leave behind can outrank, or tie
+    *     with, the candidate when its sequential turn comes. An
+    *     overlapping pair ranked AFTER the candidate counts too: with
+    *     an equal count, the pair it becomes can still win the
+    *     (left, right) tie-break ("acb": (a,c) creates (ac,b), which
+    *     ties (b,</w>) and sorts first).
     *
     * Output-string collisions (a candidate consuming or re-creating a
     * symbol that a selected merge outputs, or vice versa) terminate the
@@ -108,6 +112,9 @@ object BpeTrainer {
       val adjOverlap = used(l) || used(r)
       if (sel.isEmpty || (!outCollision && !adjOverlap && c > maxSkip)) {
         sel += ((l, r, c)); used += l; used += r; outs += (l + r)
+        maxSkip = top.iterator.filter(o => !(o eq row) &&
+            Seq(o.getString(0), o.getString(1)).exists(x => x == l || x == r))
+          .map(_.getLong(2)).foldLeft(maxSkip)(math.max)
       } else if (outCollision) stop = true
       else if (adjOverlap) maxSkip = math.max(maxSkip, c)
       else stop = true

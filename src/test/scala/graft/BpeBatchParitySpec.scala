@@ -47,6 +47,17 @@ class BpeBatchParitySpec extends SparkSpec {
     assert(res.passed, res.status.toString)
   }
 
+  test("batched training == sequential training when a merge creates a " +
+    "pair that wins a tie-break") {
+    // census (a,c), (b,</w>), (c,b), all count 1: merging (a,c) makes
+    // (ac,b), which ties (b,</w>) and sorts first, so (b,</w>) must not
+    // join (a,c)'s batch
+    Seq(Seq("acb"), Seq("acb a"), Seq("bc c abaa baacb a")).foreach { docs =>
+      assert(train(docs, n = 8, batchTop = 256) ==
+        train(docs, n = 8, batchTop = 1), docs)
+    }
+  }
+
   test("DedupIndex.pairs == a direct minhashLsh run at the operating threshold") {
     import org.apache.spark.sql.functions._
     val direct = graft.dedup.Dedup.minhashLsh(

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
 import org.apache.spark.sql.execution.FormattedMode
 import graft.queries.Catalog
 
@@ -41,9 +42,26 @@ class PlanShapeSpec extends SparkSpec {
     s
   }
 
-  private def planOf(name: String): String =
-    Catalog.byName(name).run(planSession, sf).queryExecution
-      .explainString(FormattedMode)
+  /** What the structural tests read of one catalog query's plan: the
+    * formatted physical plan, and whether the optimized plan windows
+    * without a partition spec. */
+  private final case class Planned(formatted: String,
+      unpartitionedWindow: Boolean)
+
+  // Each catalog query is planned once, on first use, and every
+  // structural test below reads that one plan (planning runs the
+  // iterative queries' eager checkpoints, the bulk of this spec's time).
+  // Only the facts are kept: a held QueryExecution would pin its
+  // checkpoint blocks for the rest of the spec.
+  private lazy val plans: Map[String, Planned] = Catalog.all.map { q =>
+    val qe = q.run(planSession, sf).queryExecution
+    q.name -> Planned(qe.explainString(FormattedMode),
+      qe.optimizedPlan.collectWithSubqueries {
+        case w: LWindow if w.partitionSpec.isEmpty => w
+      }.nonEmpty)
+  }.toMap
+
+  private def planOf(name: String): String = plans(name).formatted
 
   /** Queries whose plans contain a BroadcastNestedLoopJoin on purpose:
     * every build side is bounded by construction (see the operator's
@@ -232,13 +250,8 @@ class PlanShapeSpec extends SparkSpec {
     "q340_kneedle_threshold")
 
   test("unpartitioned windows only over audited metadata-bounded frames") {
-    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
-    val withWin = Catalog.all.map(_.name).filter { n =>
-      Catalog.byName(n).run(planSession, sf).queryExecution.optimizedPlan
-        .collectWithSubqueries {
-          case w: LWindow if w.partitionSpec.isEmpty => w
-        }.nonEmpty
-    }.toSet
+    val withWin = Catalog.all.map(_.name)
+      .filter(plans(_).unpartitionedWindow).toSet
     val unexpected = withWin -- unpartitionedWindowAllowed
     val stale = unpartitionedWindowAllowed -- withWin
     assert(unexpected.isEmpty,

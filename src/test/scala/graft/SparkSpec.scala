@@ -6,11 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** One shared local session for all suites (JVM-wide — getOrCreate). */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
+    val s = GraftSession.builder("graft-test", Some("local[4]"), 4)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
