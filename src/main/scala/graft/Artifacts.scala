@@ -47,14 +47,15 @@ object Artifacts {
   /** Every group, in build order. */
   val groups: Seq[String] = all.map(_.group).distinct
 
-  /** Builds the artifacts of `groups` on `spark` in declaration order
-    * and returns each one's build seconds (an artifact already built
-    * reads ~0). */
+  /** Builds the artifacts that `names` name, each by its name or its
+    * group, on `spark` in declaration order and returns each one's
+    * build seconds (an artifact already built reads ~0). */
   def warm(spark: SparkSession, dir: String,
-      groups: Seq[String] = groups): Seq[(Artifact, Double)] =
-    all.filter(a => groups.contains(a.group)).map { a =>
-      val t0 = System.nanoTime()
-      a.get(spark, dir).count()
-      a -> (System.nanoTime() - t0) / 1e9
-    }
+      names: Seq[String] = groups): Seq[(Artifact, Double)] =
+    all.filter(a => names.contains(a.group) || names.contains(a.name))
+      .map { a =>
+        val t0 = System.nanoTime()
+        a.get(spark, dir).count()
+        a -> (System.nanoTime() - t0) / 1e9
+      }
 }

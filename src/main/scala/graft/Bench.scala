@@ -416,21 +416,9 @@ object Bench {
     md ++= "wall time, so step shares above 100% mean \"this operator\n"
     md ++= "dominated every core\", not a bookkeeping error.\n"
     names.foreach { name =>
-      val df = Catalog.byName(name).run(spark, sfDir)
-      val (steps, totalMs) = QueryExplainer.execute(df)
-      val nOpt = steps.map(_.optimizations.size).sum
-      val hits = QueryExplainer.bottlenecks(steps, totalMs, nOpt)
-      md ++= s"\n## $name (${f"$totalMs%.0f"} ms executed, " +
-        s"${steps.size} plan steps, $nOpt optimizations)\n\n"
-      steps.sortBy(-_.timeMs).take(3).foreach { s =>
-        md ++= s"- ${s.stepName} [${s.operation}] ${f"${s.timeMs}%.0f"} ms" +
-          s.outputSize.map(o => s", $o rows out").getOrElse("") +
-          (if (s.optimizations.nonEmpty)
-            s" (${s.optimizations.mkString(", ")})" else "") + "\n"
-      }
-      if (hits.isEmpty) md ++= "- bottleneck rules: none fired\n"
-      else hits.foreach(b =>
-        md ++= s"- BOTTLENECK ${b.kind}: ${b.description}\n")
+      val (steps, totalMs) =
+        QueryExplainer.execute(Catalog.byName(name).run(spark, sfDir))
+      md ++= QueryExplainer.digest(name, steps, totalMs)
     }
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get("BENCH_EXPLAIN.md"), md.toString)

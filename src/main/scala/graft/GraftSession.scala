@@ -38,6 +38,21 @@ object GraftSession {
       org.apache.logging.log4j.Level.ERROR)
     catch { case _: Throwable => () }
 
+  /** The dev mains' session: local[SPARK_GRAFT_CPUS] (nproc when that
+    * is unset), UI off, graft SQL functions registered, WARN logging
+    * with the audited warnings quiet. */
+  def local(appName: String): SparkSession = {
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
+    val spark = builder(appName, Some(s"local[$cpus]"), cpus)
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    GraftExtensions.register(spark)
+    spark.sparkContext.setLogLevel("WARN")
+    quietAuditedWarnings()
+    spark
+  }
+
   /** Build (or reuse) the session and register graft SQL functions. */
   def get(appName: String = "graft", master: Option[String] = None,
       shufflePartitions: Int = Runtime.getRuntime.availableProcessors())

@@ -21,8 +21,7 @@ import graft.semantic.VectorSearch
 object RecallReport {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = GraftSession.get("graft-recall", Some("local[32]"), 32)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-recall")
     val emb = Tables.load(spark, sfDir, "embeddings").cache()
     emb.count()
 

@@ -194,6 +194,27 @@ object QueryExplainer {
     slow ++ selective ++ missing
   }
 
+  /** The per-query section of BENCH_EXPLAIN.md, also printed by
+    * graft.Profile: a header with the executed total, the three slowest
+    * steps and every bottleneck-rule hit, as markdown lines. */
+  def digest(name: String, steps: Seq[Step], totalMs: Double): String = {
+    val nOpt = steps.map(_.optimizations.size).sum
+    val hits = bottlenecks(steps, totalMs, nOpt)
+    val md = new StringBuilder
+    md ++= s"\n## $name (${f"$totalMs%.0f"} ms executed, " +
+      s"${steps.size} plan steps, $nOpt optimizations)\n\n"
+    steps.sortBy(-_.timeMs).take(3).foreach { s =>
+      md ++= s"- ${s.stepName} [${s.operation}] ${f"${s.timeMs}%.0f"} ms" +
+        s.outputSize.map(o => s", $o rows out").getOrElse("") +
+        (if (s.optimizations.nonEmpty)
+          s" (${s.optimizations.mkString(", ")})" else "") + "\n"
+    }
+    if (hits.isEmpty) md ++= "- bottleneck rules: none fired\n"
+    else hits.foreach(b =>
+      md ++= s"- BOTTLENECK ${b.kind}: ${b.description}\n")
+    md.toString
+  }
+
   /** Optimization suggestions
     * (generate_query_optimization_suggestions, :235-288) — the seven
     * reference rules, same thresholds and trigger order. */

@@ -406,7 +406,7 @@ object GraphAnalytics {
     // checkpoint of the next frame, which also counts the next round's
     // drops, and the final result IS the frame — no union,
     // nothing pinned across rounds. At sf0.1 roughly half of q293's
-    // wall was per-round job scheduling (round-14 QueryProbe), so the
+    // wall was per-round job scheduling (round-14 listener probe), so the
     // job-count cut is the measured lever. Support-0 edges are
     // materialized up front (the census omits them) so the drop
     // filter never needs a join again.

@@ -157,9 +157,9 @@ object HyperBall {
   }
 
   /** One synchronous merge round along undirected canonical edges
-    * (a, b): every node absorbs its neighbors' registers. The DENSE
-    * form — ships every node's registers every round; kept as the
-    * reference for the systolic parity spec. */
+    * (a, b): every node absorbs its neighbors' registers. The SPARSE
+    * (node, j, r) form — the reference that HyperBallSpec holds the
+    * pivoted rounds q343 runs ([[mergeRoundPivoted]]) equal to. */
   def mergeRound(regs: DataFrame, canon: DataFrame): DataFrame = {
     val fromB = canon.join(regs.withColumnRenamed("node", "b"), "b")
       .select(col("a").as("node"), col("j"), col("r"))
@@ -169,39 +169,6 @@ object HyperBall {
       .unionByName(fromB).unionByName(fromA)
       .groupBy(col("node"), col("j")).agg(max(col("r")).as("r"))
       .truncateLineage()
-  }
-
-  /** The SYSTOLIC round (the paper's §4.1 optimization): only nodes
-    * whose counter CHANGED last round push registers. Correct because
-    * register-max is monotone and idempotent — an unchanged
-    * neighbor's state was already absorbed the round it last changed,
-    * so round-by-round results are IDENTICAL to [[mergeRound]]
-    * (pinned by HyperBallSpec). MEASURED HONESTLY: at 3 rounds on the
-    * knowledge graph the changed frontier has not collapsed yet
-    * (every ball is still growing), so the per-round change-detection
-    * join costs MORE than the traffic it saves (sf1.0: 123 s systolic
-    * vs 86 s dense) — q343 therefore runs DENSE; this form is the
-    * right one only for deep-round runs (t ≳ effective diameter,
-    * where dense keeps shipping saturated counters and the frontier
-    * is a sliver). Returns (merged registers, next changed frame). */
-  def mergeRoundSystolic(regs: DataFrame, canon: DataFrame,
-      changed: DataFrame): (DataFrame, DataFrame) = {
-    val regsC = regs.join(changed, "node")
-    val fromB = canon.join(regsC.withColumnRenamed("node", "b"), "b")
-      .select(col("a").as("node"), col("j"), col("r"))
-    val fromA = canon.join(regsC.withColumnRenamed("node", "a"), "a")
-      .select(col("b").as("node"), col("j"), col("r"))
-    val merged = regs.select(col("node"), col("j"), col("r"))
-      .unionByName(fromB).unionByName(fromA)
-      .groupBy(col("node"), col("j")).agg(max(col("r")).as("r"))
-      .truncateLineage()
-    val nextChanged = merged
-      .join(regs.withColumnRenamed("r", "r_old"),
-        Seq("node", "j"), "left")
-      .filter(col("r") > coalesce(col("r_old"), lit(0L)))
-      .select(col("node")).distinct()
-      .truncateLineage()
-    (merged, nextChanged)
   }
 
   /** One-row neighborhood-function estimate at hop `t`. */

@@ -55,58 +55,21 @@ object KGraph {
         .repartition(col("a"))
         .truncateLineage())
 
-  /** Per-edge triangle support over the canonical list (a, b,
-    * support), materialized once per (session, sfDir) — the shared
-    * triangle-census artifact (round-11 verdict item 8): q273's
-    * knowledge-graph census leg and q299's bridge audit both read it
-    * instead of each running their own O(m^1.5) wedge enumeration
-    * over the same cached edge list. Built at ingestion time with the
-    * other graph indexes. */
-  /** Node-id ↔ long codec for the census hot path. Every KGraph node
-    * id is "<single char>:<non-negative int>" (see [[n]]), so it packs
-    * injectively into a long: prefix byte in the high bits, numeric id
-    * below 2^40 (ids reach ~2×10^8 at sf2; 10^12 headroom). The wedge
-    * joins behind the triangle census compare/hash edge keys O(m^1.5)
-    * times — on longs they run ~3-5× faster than on the id strings
-    * (same lever as the co-purchase census's integer keys, which
-    * measured 20 s → 3 s at sf0.1 when q273 first stringified them). */
-  private[graft] def encodeId(c: Column): Column =
-    ascii(substring(c, 1, 1)).cast("long") * lit(1L << 40) +
-      c.substr(lit(3), length(c)).cast("long")
-
-  /** [[encodeId]] with a per-row range guard (ADVICE r13): a numeric
-    * part at/above 2^40 (or a malformed id whose numeric part casts to
-    * null) would bleed into the prefix bits and silently corrupt the
-    * census — raise instead. One compare + branch per row inside
-    * codegen, no extra pass over the edge list. */
-  private[graft] def encodeIdChecked(c: Column): Column = {
-    val num = c.substr(lit(3), length(c)).cast("long")
-    when(num.isNotNull && num >= 0L && num < lit(1L << 40),
-      ascii(substring(c, 1, 1)).cast("long") * lit(1L << 40) + num)
-      .otherwise(raise_error(concat(
-        lit("KGraph.encodeId: id numeric part outside [0, 2^40): "), c)))
-  }
-
-  private[graft] def decodeId(c: Column): Column =
-    concat(call_function("char", shiftright(c, 40)), lit(":"),
-      c.bitwiseAND(lit((1L << 40) - 1)).cast("string"))
-
-  /** STRING-ORDER-PRESERVING id ↔ long codec (round 14). [[encodeId]]
-    * packs by numeric value, whose order differs from the id strings'
-    * ("c:100" < "c:99" lexicographically, 100 > 99 numerically) — fine
-    * for identity-only keys (census, wedges), wrong wherever the QUERY
-    * depends on id ORDER (LPA's tie → smallest label, round-1
-    * min(neighbor)). This codec keeps lexicographic order: for decimal
-    * numerals without leading zeros, string order is exactly
+  /** STRING-ORDER-PRESERVING id ↔ long codec (round 14), the one
+    * packed form of a node id. Packing by numeric value would break
+    * the id strings' order ("c:100" < "c:99" lexicographically,
+    * 100 > 99 numerically), which matters wherever the QUERY depends
+    * on id ORDER (LPA's tie → smallest label, round-1 min(neighbor),
+    * the census's canonical a < b). This codec keeps lexicographic
+    * order: for decimal numerals without leading zeros, string order is exactly
     * (value·10^(12−len), len) ascending — right-pad the digits to a
     * fixed width 12 and compare numerically, shorter-first on ties
     * (a proper prefix pads to the same f, smaller len). Layout:
     * ascii(prefix)·2^44 + f·16 + len with f < 10^12 < 2^40 and
     * len ≤ 12 < 16, so (prefix, f, len) packs lexicographically into
     * one non-negative long. Ids whose numeral exceeds 12 digits raise
-    * rather than mis-order (same loud-failure contract as
-    * [[encodeIdChecked]]; ids reach ~2×10^8 at sf2 — 10^12 is 4,000×
-    * headroom). KGraphCodecSpec pins order-preservation + roundtrip. */
+    * rather than mis-order (ids reach ~2×10^8 at sf2 — 10^12 is
+    * 4,000× headroom). KGraphCodecSpec pins order-preservation + roundtrip. */
   /** 10^(12−len) as an exact long for len ∈ [1, 12], null otherwise —
     * one lookup in a literal array, shared by [[encodeIdLex]] and
     * [[decodeIdLex]] so the two codec directions cannot desynchronize
@@ -178,25 +141,26 @@ object KGraph {
       (f / scale).cast("long").cast("string"))
   }
 
+  /** Per-edge triangle support over the canonical list (a, b,
+    * support), materialized once per (session, sfDir) — the shared
+    * triangle-census artifact (round-11 verdict item 8): q273's
+    * knowledge-graph census leg and q299's bridge audit both read it
+    * instead of each running their own O(m^1.5) wedge enumeration
+    * over the same cached edge list. Built at ingestion time with the
+    * other graph indexes.
+    *
+    * The O(m^1.5) wedge enumeration runs on the packed canonical list
+    * ([[canonicalLexMaterialized]]) and only the O(m) result decodes
+    * back to id strings: the lex codec preserves order, so the packed
+    * (a < b) edges decode to the string-canonical (a < b) edges and
+    * the output is the string-keyed census bit for bit
+    * (KGraphCodecSpec pins it). */
   def supportMaterialized(spark: SparkSession, dir: String): DataFrame =
-    // run the O(m^1.5) wedge enumeration on packed longs, decode the
-    // O(m) result back to id strings: output is bit-identical to the
-    // string-keyed census (KGraphCodecSpec pins it), the wedge work is
-    // several times cheaper. least/greatest re-canonicalize because
-    // the long order differs from the string order ("c:100" < "c:99"
-    // lexicographically, 100 > 99 numerically).
-    SessionCache.getOrBuild(spark, s"kgraph|$dir|support")({
-      val canon = canonicalMaterialized(spark, dir)
-      val enc = canon.select(
-        least(encodeIdChecked(col("a")), encodeIdChecked(col("b"))).as("a"),
-        greatest(encodeIdChecked(col("a")), encodeIdChecked(col("b"))).as("b"))
-      GraphAnalytics.edgeSupport(enc)
-        .select(decodeId(col("a")).as("da"), decodeId(col("b")).as("db"),
+    SessionCache.getOrBuild(spark, s"kgraph|$dir|support")(
+      GraphAnalytics.edgeSupport(canonicalLexMaterialized(spark, dir))
+        .select(decodeIdLex(col("a")).as("a"), decodeIdLex(col("b")).as("b"),
           col("support"))
-        .select(least(col("da"), col("db")).as("a"),
-          greatest(col("da"), col("db")).as("b"), col("support"))
-        .truncateLineage()
-    })
+        .truncateLineage())
 
   /** PageRank edge index (from_id, to_id, outdeg), hash-partitioned on
     * from_id and materialized once per (session, sfDir) — the static

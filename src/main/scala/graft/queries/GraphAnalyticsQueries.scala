@@ -183,7 +183,7 @@ object GraphAnalyticsQueries {
     // a ~2.4M-row (node, label) frame keyed on id STRINGS — the three
     // largest HashAggregate steps in BENCH_EXPLAIN (19–30 s task time
     // each). LPA's result depends on id ORDER (tie → smallest label,
-    // round-1 min(neighbor)), so the identity-only encodeId is wrong
+    // round-1 min(neighbor)), so a numeric-value packing is wrong
     // here; encodeIdLex preserves lexicographic order exactly, making
     // every min() identical while the rounds run on 8-byte keys.
     // Canonical a < b survives the order-preserving map unchanged.
@@ -1524,7 +1524,7 @@ object GraphAnalyticsQueries {
   private def q343(s: SparkSession, dir: String): DataFrame = {
     import graft.graph.HyperBall
     // round-14 NEGATIVE RESULT (guide §1.2: measure, then decide):
-    // packing the node key to a long (encodeId; identity-only here, the
+    // packing the node key to a long (numeric packing; identity-only, the
     // register values hash the original strings either way) was
     // measured min-of-4/6 against the string keys and LOST at both
     // scales — sf0.1 3.22 → 4.73 s, sf1.0 21.1 → 27.2 s — even with
@@ -1544,9 +1544,9 @@ object GraphAnalyticsQueries {
     var regs = HyperBall.registers0Pivoted(nodes)
     var out = HyperBall.estimateRowPivoted(regs, 0)
     for (t <- 1 to HbRounds) {
-      // dense rounds: at t=3 the frontier hasn't collapsed, so the
-      // systolic change-detection join costs more than it saves
-      // (measured 86 vs 123 s at sf1.0) — see HyperBall scaladoc
+      // dense rounds: at t=3 the frontier hasn't collapsed, so a
+      // systolic (changed-nodes-only) round's change-detection join
+      // costs more than it saves (measured 123 vs 86 s at sf1.0)
       regs = HyperBall.mergeRoundPivoted(regs, canon)
       out = out.unionByName(HyperBall.estimateRowPivoted(regs, t))
     }

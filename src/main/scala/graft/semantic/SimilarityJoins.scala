@@ -125,8 +125,8 @@ object SimilarityJoins {
     *    prefix token, so the tightest (min over shared tokens) is taken
     *    in the same aggregate that dedups candidate pairs — no extra
     *    shuffle vs the previous distinct(). */
-  private[graft] def prefixPairs(tokenized: DataFrame, threshold: Double,
-      ppjoinFilters: Boolean = true): DataFrame = {
+  private[graft] def prefixPairs(tokenized: DataFrame, threshold: Double)
+      : DataFrame = {
     // set size rides along from before the explode — computing it with a
     // count-over-(blk,id) window after the explode would cost an extra
     // shuffle+sort pass over the exploded rows for a value that is just
@@ -194,10 +194,7 @@ object SimilarityJoins {
     val aggExtra: Seq[Column] =
       Seq(first(col("a_n")).as("a_n"), first(col("b_n")).as("b_n")) ++
         (if (longIds) Seq(first(col("blk")).as("blk")) else Nil)
-    // ppjoinFilters=false keeps the plain AllPairs candidate set — used
-    // only by the CandidateStats diagnostic to quantify the pruning
-    val cand = (if (ppjoinFilters) {
-      unpack(joined
+    val cand = unpack(joined
         // length filter — prunes before the pair-dedup shuffle
         .filter(least(col("a_n"), col("b_n")) >=
           lit(threshold) * greatest(col("a_n"), col("b_n")) - Eps)
@@ -209,13 +206,10 @@ object SimilarityJoins {
         // distinct() paid)
         .groupBy(packGroup: _*)
         .agg(min(col("ub")).as("ub"), aggExtra: _*))
-        // positional filter: required overlap α = t·(|A|+|B|)/(1+t)
-        .filter(col("ub") >=
-          lit(threshold) * (col("a_n") + col("b_n")) / (1 + threshold) - Eps)
-    } else {
-      unpack(joined.groupBy(packGroup: _*)
-        .agg(count(lit(1)).as("ub"), aggExtra: _*))
-    }).select(col("blk"), col("a_id"), col("b_id"))
+      // positional filter: required overlap α = t·(|A|+|B|)/(1+t)
+      .filter(col("ub") >=
+        lit(threshold) * (col("a_n") + col("b_n")) / (1 + threshold) - Eps)
+      .select(col("blk"), col("a_id"), col("b_id"))
     // verify joins: tokenized is a caller-materialized checkpoint whose
     // stats the static planner does not know — broadcast it while
     // bounded (same gating discipline as Dedup.sigSide)

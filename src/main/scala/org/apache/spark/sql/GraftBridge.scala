@@ -18,4 +18,11 @@ object GraftBridge {
     case c: classic.SparkSession => Some(c.sessionUUID)
     case _ => None
   }
+
+  /** Blocks until the context's `private[spark]` listener bus has
+    * delivered every event posted so far: an action returns once its
+    * job-end event is posted, not once listeners have seen it, so
+    * counters read right after it could miss its last tasks. */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

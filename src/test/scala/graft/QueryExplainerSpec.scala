@@ -33,6 +33,27 @@ class QueryExplainerSpec extends SparkSpec {
     assert(QueryExplainer.bottlenecks(steps, 0.0, 0).isEmpty)
   }
 
+  test("digest keeps the BENCH_EXPLAIN section layout") {
+    val steps = Seq(
+      Step("Scan parquet ", "graph_query", 6.0, None, Some(20000L),
+        Seq("predicate_pushdown")),
+      Step("Sort", "ranking", 10.4, Some(20000L), Some(20000L), Seq.empty),
+      Step("BroadcastExchange", "shuffle", 67.0, None, Some(20000L), Seq.empty),
+      Step("Project", "projection", 1.0, None, None, Seq.empty))
+    assert(QueryExplainer.digest("q254_entity_resolution", steps, 605.2) ==
+      """
+        |## q254_entity_resolution (605 ms executed, 4 plan steps, 1 optimizations)
+        |
+        |- BroadcastExchange [shuffle] 67 ms, 20000 rows out
+        |- Sort [ranking] 10 ms, 20000 rows out
+        |- Scan parquet  [graph_query] 6 ms, 20000 rows out (predicate_pushdown)
+        |- bottleneck rules: none fired
+        |""".stripMargin)
+    val slow = QueryExplainer.digest("q", steps, 70.0)
+    assert(slow.linesIterator.count(_.startsWith("- BOTTLENECK slow_step: ")) == 1)
+    assert(!slow.contains("none fired"))
+  }
+
   test("suggestions follow the reference's seven rules") {
     val s = QueryExplainer.suggestions(
       RequestMeta("natural_language", None, includeRelationships = true,
