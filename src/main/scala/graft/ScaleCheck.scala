@@ -60,13 +60,8 @@ object ScaleCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/repo/testdata_sf1/sf1.0")
     val names = if (args.length > 1) args.drop(1).toSeq else DefaultHeavy
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val root = GraftSession.builder("graft-scalecheck",
-        Some(s"local[$cpus]"), cpus.toInt)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    root.sparkContext.setLogLevel("WARN")
-    GraftSession.quietAuditedWarnings()
+    val root = GraftSession.local("graft-scalecheck")
+    val cpus = root.conf.get("spark.sql.shuffle.partitions")
 
     // trial sessions: same data, different physical parallelism; each
     // builds its own session artifacts (SessionCache keys per session).

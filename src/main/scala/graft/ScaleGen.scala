@@ -141,8 +141,7 @@ object ScaleGen {
     val baseDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outDir = args.lift(1).getOrElse("/root/repo/testdata_sf1/sf1.0")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = GraftSession.get("graft-scalegen", Some("local[32]"), 32)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-scalegen")
     generate(spark, baseDir, outDir, factor)
     spark.stop()
   }

@@ -33,9 +33,4 @@ object Tables {
       df.withColumn("ts", col("ts").cast(TimestampType))
     else df
   }
-
-  /** Register every table as a temp view so spark.sql(...) works with the
-    * same bare table names the DuckDB oracle uses. */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    names.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
 }

@@ -12,15 +12,7 @@ object Verify {
     require(unknown.isEmpty,
       s"unknown query name(s): ${unknown.mkString(", ")} — a typo here " +
         "would silently dump nothing and let a stale compare pass")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder("graft-verify", Some(s"local[$cpus]"),
-        cpus.toInt)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // the partitionless-window WARN spam is audited noise here (see
-    // GraftSession.quietAuditedWarnings + PlanShapeSpec's allowlist)
-    GraftSession.quietAuditedWarnings()
+    val spark = GraftSession.local("graft-verify")
     new java.io.File(outDir).mkdirs()
     // Queries are independent — run them on a small pool so Spark's
     // scheduler overlaps their jobs (I/O + planning gaps fill in).

@@ -2,8 +2,8 @@ package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.graph.{GraphOps, PatternMatch, PatternSpec}
-import graft.operators.{Contradictions, Synthesis}
+import graft.graph.GraphOps
+import graft.operators.Contradictions
 
 /** The reference's enhanced MCP endpoint surface
   * (mcp_integration/enhanced_mcp_endpoint.py) as one typed facade over
@@ -32,28 +32,6 @@ object Endpoints {
     else GraphOps.multiHop(edges, seeds, maxHops, direction, edgeFilter)
   }
 
-  /** extract_subgraph (:174-268): semantic hits → keyword relevance →
-    * induced subgraph + density. q73. */
-  def extractSubgraph(edges: DataFrame, nodeContent: DataFrame,
-      topicHits: DataFrame, topicKeywords: Seq[String], maxNodes: Int = 50,
-      minRelevance: Double = 0.7): DataFrame =
-    GraphOps.topicSubgraph(edges, nodeContent, topicHits, topicKeywords,
-      maxNodes, minRelevance)
-
-  /** pattern_matching (:270-345): declarative PatternSpec → filter +
-    * semi-join + score plan. q74. */
-  def patternMatching(nodes: DataFrame, edges: DataFrame,
-      pattern: PatternSpec): DataFrame =
-    PatternMatch.matches(nodes, edges, pattern)
-
-  /** temporal_query (:347-461): creation-window filter, newest first,
-    * capped. q36. */
-  def temporalQuery(nodes: DataFrame, tsCol: String, startTs: String,
-      endTs: String, limit: Int = 100): DataFrame =
-    nodes.filter(col(tsCol) >= lit(startTs) && col(tsCol) <= lit(endTs))
-      .orderBy(col(tsCol).desc)
-      .limit(limit)
-
   /** find_contradictions (:587-686): antonym-axis opposition between
     * same-group docs. q49. */
   def findContradictions(docs: DataFrame, groupCol: String, idCol: String,
@@ -65,18 +43,4 @@ object Endpoints {
     * serialized by sources/Exporters in the caller's chosen format. q15. */
   def exportSubgraph(edges: DataFrame, keep: DataFrame): DataFrame =
     GraphOps.inducedSubgraph(edges, keep)
-
-  /** synthesize_knowledge (:463-503): dispatch on synthesis type over a
-    * bounded selected-node frame (node_id, content, source, confidence
-    * [+tsCol for timeline]). q84/q85; timeline = ordered selection, q68's
-    * per-key form for series. */
-  def synthesizeKnowledge(selected: DataFrame,
-      synthesisType: String = "summary",
-      tsCol: String = "ts"): DataFrame = synthesisType match {
-    case "summary" => Synthesis.summary(selected)
-    case "comparison" => Synthesis.comparison(selected)
-    case "timeline" => selected.orderBy(col(tsCol), col("node_id"))
-    case other => throw new IllegalArgumentException(
-      s"Unknown synthesis type: $other (summary/comparison/timeline)")
-  }
 }

@@ -1,8 +1,7 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.operators.{Filters, Ranking}
 import graft.operators.Filters.Cond
 import graft.query.{NaturalLanguage, RequestNormalizer}

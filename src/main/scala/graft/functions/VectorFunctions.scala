@@ -25,36 +25,16 @@ object VectorFunctions {
   /** Element-wise double cast — embeddings are Array[Float] on disk. */
   private def d(x: Column): Column = x.cast("double")
 
-  /** Codegen'd one-pass primitives (VectorSimExpr). The `hof*` variants
-    * below are the higher-order-function formulations kept as the
-    * reference implementation — bit-identical results, but interpreted
-    * (CodegenFallback), ~an order of magnitude slower per pair. */
+  /** Codegen'd one-pass primitives (VectorSimExpr). */
   def dot(a: Column, b: Column): Column = native(a, b, "dot")
   def cosine(a: Column, b: Column): Column = native(a, b, "cos")
   def l2Distance(a: Column, b: Column): Column = native(a, b, "l2")
-
-  def hofDot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => d(x) * d(y)), lit(0.0), (acc, v) => acc + v)
-
-  def norm2(a: Column): Column =
-    aggregate(a, lit(0.0), (acc, v) => acc + d(v) * d(v))
-
-  /** Cosine similarity, ε-guard against zero vectors (numpy_store.py:606-621
-    * clips to [-1,1] and guards norms; the clip is a no-op for finite
-    * doubles except rounding spill, kept for parity). */
-  def hofCosine(a: Column, b: Column): Column = {
-    val den = sqrt(norm2(a)) * sqrt(norm2(b))
-    when(den <= lit(1e-12), lit(0.0))
-      .otherwise(least(greatest(hofDot(a, b) / den, lit(-1.0)), lit(1.0)))
-  }
 
   /** Sum of squared differences — the shared fold under both the exact
     * L2 distance and the PQ partial-distance tables (VectorSearch). */
   def squaredL2(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => (d(x) - d(y)) * (d(x) - d(y))),
       lit(0.0), (acc, v) => acc + v)
-
-  def hofL2Distance(a: Column, b: Column): Column = sqrt(squaredL2(a, b))
 
   /** L2 distance mapped to a similarity in (0,1]: 1/(1+d). */
   def l2Similarity(a: Column, b: Column): Column =

@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.engine.Lineage.LineageOps
 
@@ -48,29 +48,35 @@ object GraphAnalytics {
     * arboricity argument — where the naive a<b wedge join is Σ deg²,
     * which detonates on a super-hub (a degree-6k nation node
     * contributes 36M wedges; at 10× data, 3.6G — the round-9 q273
-    * sf1.0 failure). Returns (node, n_tri); absent nodes have none. */
+    * sf1.0 failure). Counts aggregate per rank and map back to ids
+    * with one join. Returns (node, n_tri); absent nodes have none. */
   def triangleCounts(canon: DataFrame): DataFrame = {
-    val closed = closedTriangles(canon)
-    closed.select(col("u").as("node"))
-      .unionByName(closed.select(col("v").as("node")))
-      .unionByName(closed.select(col("w").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("n_tri"))
+    val (closed, ranks) = closedTriangles(canon)
+    closed.select(col("ru").as("r"))
+      .unionByName(closed.select(col("rv").as("r")))
+      .unionByName(closed.select(col("rw").as("r")))
+      .groupBy(col("r")).agg(count(lit(1)).as("n_tri"))
+      .join(ranks, "r")
+      .select(col("node"), col("n_tri"))
   }
 
   /** Per-EDGE triangle support over a canonical list: (a, b, support);
     * only edges participating in ≥ 1 triangle appear (absent = 0).
     * Same degree-ordered enumeration as [[triangleCounts]] — each
-    * closed triangle charges its three edges in canonical (min, max)
-    * form. This is the k-truss peel's inner step. */
+    * closed triangle charges its three edges, counted on rank pairs;
+    * only the counted pairs map back to ids, re-canonicalized to
+    * (min, max) in the id order. This is the k-truss peel's inner
+    * step. */
   def edgeSupport(canon: DataFrame): DataFrame = {
-    val closed = closedTriangles(canon)
-    closed.select(least(col("u"), col("v")).as("a"),
-        greatest(col("u"), col("v")).as("b"))
-      .unionByName(closed.select(least(col("v"), col("w")).as("a"),
-        greatest(col("v"), col("w")).as("b")))
-      .unionByName(closed.select(least(col("u"), col("w")).as("a"),
-        greatest(col("u"), col("w")).as("b")))
-      .groupBy(col("a"), col("b")).agg(count(lit(1)).as("support"))
+    val (closed, ranks) = closedTriangles(canon)
+    closed.select(col("ru").as("rx"), col("rv").as("ry"))
+      .unionByName(closed.select(col("rv").as("rx"), col("rw").as("ry")))
+      .unionByName(closed.select(col("ru").as("rx"), col("rw").as("ry")))
+      .groupBy(col("rx"), col("ry")).agg(count(lit(1)).as("support"))
+      .join(ranks.select(col("r").as("rx"), col("node").as("x")), "rx")
+      .join(ranks.select(col("r").as("ry"), col("node").as("y")), "ry")
+      .select(least(col("x"), col("y")).as("a"),
+        greatest(col("x"), col("y")).as("b"), col("support"))
   }
 
   /** Per-node triangle counts DERIVED from a per-edge support frame:
@@ -86,135 +92,59 @@ object GraphAnalytics {
       .groupBy(col("node"))
       .agg(expr("sum(support) div 2").as("n_tri"))
 
-  /** Every triangle exactly once as (u, v, w) ranked low→high under
-    * the (degree, id) total order — the shared core of the node and
-    * edge census forms above.
+  /** Every triangle exactly once as long ranks (ru < rv < rw), with
+    * the (node, r) rank table that maps ranks back to ids — the
+    * shared core of the node and edge census forms above. One plan
+    * for every key type and scale (GraphX's split, OSDI 2014: the
+    * structure runs on compact long vertex ids, the original ids are
+    * joined back only for the output).
     *
-    * Two physically different, bit-identical plans (round-14: the
-    * co-purchase census was the one remaining super-linear ingest leg,
-    * α ~1.9–2.4 sf1→sf2 at 820M wedges through the shuffle):
+    * Correctness rests on INJECTIVITY alone: orient every edge from
+    * its lower rank to its higher one and each triangle has exactly
+    * one lowest corner ru, from which it is the wedge (ru→rv, ru→rw)
+    * with rv < rw, closed by the oriented edge rv→rw — so any
+    * injective rank enumerates each triangle exactly once. Ranking by
+    * (degree, node) only bounds the wedges at O(m^1.5).
     *
-    *  - PACKED (integral node ids whose (max id, max degree) fit a
-    *    single long as `degree·2^idBits + id`): the (degree, id) rank
-    *    becomes ONE long whose numeric order IS the lexicographic
-    *    rank order, so orientation is least/greatest, the wedge filter
-    *    is a single long compare, and the wedge rows that dominate the
-    *    census shuffle narrow from (u, v, dv, w, dw) to (ru, rv, rw).
-    *    The closing semi join takes SHUFFLE_HASH on the edge side: the
-    *    default sort-merge plan SORTS the wedge stream — per-task sort
-    *    buffers proportional to wedges/partitions are exactly the
-    *    memory cliff that turns 2× data into ~4× time — while the hash
-    *    build holds only edges/partitions rows per task (the q268
-    *    anti-join lever; both sides stay shuffled, nothing broadcast).
-    *    Bounds are measured from the degree frame (one tiny aggregate
-    *    on the ≤|V|-row frame), not assumed — ids or degrees that
-    *    don't fit fall back, so the packing can never corrupt.
-    *  - GENERIC (strings, negative/oversized ids, super-hubs): the
-    *    original struct-orientation form, unchanged.
-    */
-  private def closedTriangles(canon: DataFrame): DataFrame = {
-    val deg = degrees(canon)
-    packedBounds(canon, deg) match {
-      case Some(idBits) => closedTrianglesPacked(canon, deg, idBits)
-      case None => closedTrianglesGeneric(canon, deg)
-    }
-  }
-
-  /** id bits for the packed rank when every id is a non-negative
-    * integral fitting 2^idBits and every degree fits the remaining
-    * 62 − idBits bits (one spare bit keeps ranks non-negative). */
-  private[graft] def packedBounds(canon: DataFrame, deg: DataFrame)
-      : Option[Int] = {
-    val integral = canon.schema.fields.forall(f => f.dataType ==
-      org.apache.spark.sql.types.LongType || f.dataType ==
-      org.apache.spark.sql.types.IntegerType)
-    // dev A/B knob: GRAFT_CENSUS_PACKED=0 forces the generic plan so
-    // the packing's contribution is measurable in isolation (results
-    // are bit-identical either way — PackedCensusSpec)
-    if (sys.env.get("GRAFT_CENSUS_PACKED").contains("0")) None
-    else if (!integral) None
-    else {
-      // one 1-row aggregate over the degree frame (≤ |V| rows, already
-      // built for orientation) — measured bounds, never assumptions
-      val r = deg.agg(max(col("node").cast("long")).as("mi"),
-        min(col("node").cast("long")).as("lo"),
-        max(col("degree")).as("md")).head()
-      if (r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)) None
-      else {
-        val (maxId, minId, maxDeg) = (r.getLong(0), r.getLong(1), r.getLong(2))
-        val idBits = 64 - java.lang.Long.numberOfLeadingZeros(
-          math.max(maxId, 1L))
-        if (minId >= 0L && idBits <= 62 &&
-            maxDeg < (1L << (62 - idBits))) Some(idBits)
-        else None
-      }
-    }
-  }
-
-  private def closedTrianglesPacked(canon: DataFrame, deg: DataFrame,
-      idBits: Int): DataFrame = {
-    val mask = (1L << idBits) - 1L
-    def rank(id: Column, d: Column): Column =
-      d * lit(1L << idBits) + id.cast("long")
-    val withDeg = canon
-      .join(deg.select(col("node").as("a"), col("degree").as("da")), "a")
-      .join(deg.select(col("node").as("b"), col("degree").as("db")), "b")
-    // rank order == (degree, id) lexicographic order by construction,
-    // so least/greatest IS the orientation. Same LAZY cuts as the
-    // generic form (wedge legs + closing join all read these frames).
-    val oriented = withDeg.select(
-      least(rank(col("a"), col("da")), rank(col("b"), col("db"))).as("ru"),
-      greatest(rank(col("a"), col("da")), rank(col("b"), col("db"))).as("rv"))
+    * The rank is read off a range-partitioned sort of the degree frame
+    * (≤ |V| rows, no single-partition window): monotonically_increasing_id
+    * over sorted partitions is order-preserving and injective. A sort
+    * plus an index is not stable under recomputation (the range bounds
+    * come from a sample), so the table is materialized ONCE and both
+    * orient joins and the callers' map-back joins read that one frame.
+    *
+    * The wedge rows that dominate the census shuffle are three longs
+    * (ru, rv, rw), and the wedge filter is one long compare. The
+    * closing semi join takes SHUFFLE_HASH on the edge side: the
+    * default sort-merge plan SORTS the wedge stream — per-task sort
+    * buffers proportional to wedges/partitions are exactly the memory
+    * cliff that turns 2× data into ~4× time — while the hash build
+    * holds only edges/partitions rows per task (the q268 anti-join
+    * lever; both sides stay shuffled, nothing broadcast). */
+  private def closedTriangles(canon: DataFrame): (DataFrame, DataFrame) = {
+    val ranks = degrees(canon)
+      .orderBy(col("degree"), col("node"))
+      .select(col("node"), monotonically_increasing_id().as("r"))
+      .truncateLineage()
+    // LAZY cut: both wedge legs and the closing semi join read this
+    // frame — unchecked, the two rank joins behind it run three times
+    val oriented = canon
+      .join(ranks.select(col("node").as("a"), col("r").as("ra")), "a")
+      .join(ranks.select(col("node").as("b"), col("r").as("rb")), "b")
+      .select(least(col("ra"), col("rb")).as("ru"),
+        greatest(col("ra"), col("rb")).as("rv"))
       .truncateLineageLazy()
-    val dt = canon.schema("a").dataType
-    def unpack(c: Column): Column = c.bitwiseAND(lit(mask)).cast(dt)
-    oriented
+    // LAZY cut: the per-corner union of the callers reads this frame
+    // three times, and exchange reuse does not always cover the whole
+    // join
+    val closed = oriented
       .join(oriented.select(col("ru"), col("rv").as("rw")), Seq("ru"))
       .filter(col("rv") < col("rw"))
       .join(oriented.select(col("ru").as("rv"), col("rv").as("rw"))
         .hint("SHUFFLE_HASH"),
         Seq("rv", "rw"), "left_semi")
-      .select(unpack(col("ru")).as("u"), unpack(col("rv")).as("v"),
-        unpack(col("rw")).as("w"))
       .truncateLineageLazy()
-  }
-
-  private def closedTrianglesGeneric(canon: DataFrame,
-      deg: DataFrame): DataFrame = {
-    val withDeg = canon
-      .join(deg.select(col("node").as("a"), col("degree").as("da")), "a")
-      .join(deg.select(col("node").as("b"), col("degree").as("db")), "b")
-    // orient low-rank -> high-rank under the total order (degree, id);
-    // carry the head's rank so the wedge pair (v, w) can be ordered.
-    // LAZY cut: both wedge legs and the closing semi-join read this
-    // frame — unchecked, the two degree joins behind it run three
-    // times (measured 7.5 s -> 3.4 s on the sf0.1 knowledge-graph
-    // census). Lazy (not eager) so a caller whose plan PRUNES the
-    // triangle side (clustering().count() join-eliminates the
-    // unique-key left join) pays nothing for it
-    val oriented = withDeg.select(
-      when(col("da") < col("db") ||
-          (col("da") === col("db") && col("a") < col("b")),
-        struct(col("a").as("u"), col("b").as("v"), col("db").as("dv")))
-        .otherwise(
-          struct(col("b").as("u"), col("a").as("v"), col("da").as("dv")))
-        .as("e"))
-      .select(col("e.u").as("u"), col("e.v").as("v"), col("e.dv").as("dv"))
-      .truncateLineageLazy()
-    val w1 = oriented.select(col("u"), col("v"), col("dv"))
-    val w2 = oriented.select(col("u"), col("v").as("w"), col("dv").as("dw"))
-    // wedge at u over ordered out-neighbors; the closing edge (v, w)
-    // must be oriented v -> w because rank(v) < rank(w).
-    // LAZY cut: the per-corner union below reads this frame three
-    // times, and exchange reuse does not always cover the whole join
-    // (measured 14.1 s -> 8.1 s on the 41M-wedge co-purchase census)
-    w1.join(w2, Seq("u"))
-      .filter(col("dv") < col("dw") ||
-        (col("dv") === col("dw") && col("v") < col("w")))
-      .join(oriented.select(col("u").as("v"), col("v").as("w")),
-        Seq("v", "w"), "left_semi")
-      .select(col("u"), col("v"), col("w"))
-      .truncateLineageLazy()
+    (closed, ranks)
   }
 
   /** Degree assortativity (Newman 2002): one row (n_edges, sum_deg,

@@ -3,7 +3,6 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.text.TextFunctions
-import graft.dedup.Dedup
 import graft.semantic.SimilarityJoins
 import graft.engine.Lineage.LineageOps
 
@@ -99,7 +98,6 @@ object Ingestion {
 
     // 3. Embed unique contents only (dedup-before-embed: identical texts
     //    embed once), batched per partition.
-    val dim = embedder.dim
     val embedded = reps.select(col("node_id"), col("content"))
       .as[(Long, String)]
       .mapPartitions { it =>

@@ -2,7 +2,6 @@ package graft.query
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.operators.Filters
 import graft.operators.Filters.Cond
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.monitoring.AlertRules
 
 /** Pins the AlertManager semantics (alert_config.py:321-389): the

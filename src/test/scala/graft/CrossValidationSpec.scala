@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.quality.CrossValidation
 
 /** Pins cross-validation semantics (cross_validation.py:98-780) on

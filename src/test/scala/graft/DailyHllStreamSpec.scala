@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.sketch.DailyHll
 
 /** Pins the daily-HLL streaming twin behind q344: per-micro-batch

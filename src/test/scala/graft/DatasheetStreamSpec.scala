@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import graft.pipeline.Datasheet
 import graft.queries.Catalog
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.quality.GapDetection
 
 /** Pins gap-detection semantics (gap_detection.py:91-780) on crafted

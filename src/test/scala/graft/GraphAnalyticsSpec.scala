@@ -238,7 +238,6 @@ class GraphAnalyticsSpec extends SparkSpec {
   }
 
   test("q269 hits: star authorities/hubs max-normalize to exactly 1") {
-    import org.apache.spark.sql.functions._
     // all leaves point at the center: center is the sole authority
     // (auth = 1e6), every leaf the equal-best hub (hub = 1e6)
     val e = Seq(("l1", "c"), ("l2", "c"), ("l3", "c"))
@@ -278,7 +277,6 @@ class GraphAnalyticsSpec extends SparkSpec {
 
   test("q291 assortativity: star reads exactly -1; catalog r within [-1, 1]") {
     import graft.graph.GraphAnalytics
-    import org.apache.spark.sql.functions._
     // star K1,4: every edge pairs the hub (deg 4) with a leaf (deg 1)
     // — perfect disassortativity, the textbook r = -1 case
     val star = Seq(("h", "l1"), ("h", "l2"), ("h", "l3"), ("h", "l4"))
@@ -294,7 +292,6 @@ class GraphAnalyticsSpec extends SparkSpec {
 
   test("q292 rich club: clique phi = 1 at every feasible k") {
     import graft.graph.GraphAnalytics
-    import org.apache.spark.sql.functions._
     // K5: all degrees 4; for k < 4 the club is the whole clique
     // (phi = 1); at k >= 4 the club is empty (phi null)
     val k5 = (for {
@@ -342,7 +339,6 @@ class GraphAnalyticsSpec extends SparkSpec {
 
   test("q294 ppr: mass reaches only seed-reachable nodes; seeds dominate") {
     import graft.graph.PageRank
-    import org.apache.spark.sql.functions._
     // seed s feeds a chain s -> a -> b; the disconnected edge x -> y
     // must hold exactly zero mass
     val edges = Seq(("s", "a"), ("a", "b"), ("x", "y"))
@@ -379,7 +375,6 @@ class GraphAnalyticsSpec extends SparkSpec {
   }
 
   test("q268: predictions are non-edges ranked by shared-neighbor evidence") {
-    import org.apache.spark.sql.functions._
     val rows = graft.queries.Catalog.byName("q268_link_prediction")
       .run(spark, sf).collect()
     assert(rows.nonEmpty)

@@ -2,21 +2,24 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.rng.Seed
 import graft.graph.{GraphAnalytics, GraphOps, KGraph}
 
-/** Differential checks of the carried-frame graph kernels against naive
-  * driver-side references, on small adversarial graphs drawn by
-  * ScalaCheck from a fixed seed: self-loops, duplicate edges, isolated
-  * seeds, disconnected parts, tied weights, and ids whose numerals
-  * straddle 10^k digit boundaries (where string — and packed lex — order
-  * departs from numeric order) up to the codec's 10^12 guard.
+/** Differential checks of the carried-frame graph kernels and the
+  * triangle census against naive driver-side references, on small
+  * adversarial graphs drawn by ScalaCheck from a fixed seed:
+  * self-loops, duplicate edges, isolated seeds, disconnected parts,
+  * tied weights, and ids whose numerals straddle 10^k digit boundaries
+  * (where string — and packed lex — order departs from numeric order)
+  * up to the codec's 10^12 guard.
   *
   * Each property case is a BATCH of independent graphs, each under its
-  * own id type prefix, run as one disjoint union: BFS and local-dominance
-  * matching never cross components, so one Spark run checks every graph
-  * of the batch and the spec stays a few seconds of Tier-1.
+  * own id type prefix, run as one disjoint union: BFS, local-dominance
+  * matching and triangles never cross components, so one Spark run
+  * checks every graph of the batch and the spec stays a few seconds of
+  * Tier-1.
   */
 class GraphKernelDiffSpec extends SparkSpec {
   import spark.implicits._
@@ -43,9 +46,9 @@ class GraphKernelDiffSpec extends SparkSpec {
 
   private def id(i: Int, n: Long): String = s"${('a' + i).toChar}:$n"
 
-  private def check(prop: Prop): Unit = {
+  private def check(prop: Prop, batches: Int = 2): Unit = {
     val res = SCTest.check(SCTest.Parameters.default
-      .withMinSuccessfulTests(2).withInitialSeed(Seed(20261018L)), prop)
+      .withMinSuccessfulTests(batches).withInitialSeed(Seed(20261018L)), prop)
     assert(res.passed, res.status.toString)
   }
 
@@ -119,6 +122,84 @@ class GraphKernelDiffSpec extends SparkSpec {
       if (got != want) println(s"keyed BFS MISMATCH $maxHops on $batch")
       got == want
     })
+  }
+
+  /** Every triangle of a simple undirected edge list exactly once, as
+    * a triple ascending in `ord`: each edge (a < b) closes against the
+    * common neighbours above b. */
+  private def refTriangles[K](edges: Seq[(K, K)])(implicit ord: Ordering[K])
+      : Seq[(K, K, K)] = {
+    val adj = (edges ++ edges.map(_.swap)).groupMap(_._1)(_._2)
+      .map { case (k, vs) => k -> vs.toSet }
+    for {
+      (a, b) <- edges
+      (small, big) = if (adj(a).size <= adj(b).size) (adj(a), adj(b))
+        else (adj(b), adj(a))
+      c <- small.toSeq if big(c) && ord.gt(c, b)
+    } yield (a, b, c)
+  }
+
+  /** `edgeSupport` and `triangleCounts` of a canonical list == the
+    * driver enumeration over the same edges: rows, keys, column names
+    * and types, absent = 0. */
+  private def censusMatches[K](canon: DataFrame)(implicit ord: Ordering[K])
+      : Boolean = {
+    val edges = canon.collect().toSeq.map(r => (r.getAs[K](0), r.getAs[K](1)))
+    val tri = refTriangles(edges)
+    def pair(x: K, y: K) = (ord.min(x, y), ord.max(x, y))
+    val wantSup = tri.flatMap { case (a, b, c) =>
+        Seq(pair(a, b), pair(b, c), pair(a, c)) }
+      .groupMapReduce(identity)(_ => 1L)(_ + _)
+    val wantTri = tri.flatMap(t => Seq(t._1, t._2, t._3))
+      .groupMapReduce(identity)(_ => 1L)(_ + _)
+    val keyType = canon.schema("a").dataType
+    val sup = GraphAnalytics.edgeSupport(canon)
+    val tc = GraphAnalytics.triangleCounts(canon)
+    val gotSup = sup.collect().toSeq
+      .map(r => (r.getAs[K](0), r.getAs[K](1)) -> r.getLong(2))
+    val gotTri = tc.collect().toSeq.map(r => r.getAs[K](0) -> r.getLong(1))
+    val ok = sup.schema.map(f => (f.name, f.dataType)) ==
+        Seq(("a", keyType), ("b", keyType), ("support", LongType)) &&
+      tc.schema.map(f => (f.name, f.dataType)) ==
+        Seq(("node", keyType), ("n_tri", LongType)) &&
+      gotSup.length == wantSup.size && gotSup.toMap == wantSup &&
+      gotTri.length == wantTri.size && gotTri.toMap == wantTri
+    if (!ok) println(s"census MISMATCH ($keyType) on $edges")
+    ok
+  }
+
+  /** Graph i's raw long ids: numeral n at `rawBase(i) + n`. Bases are
+    * 2^41 apart and every numeral is below 2^40, so graphs stay
+    * disjoint; they take in negative ids and ids at and past 2^62. */
+  private val rawBase: Seq[Long] = Seq(-(1L << 62), -(1L << 50), -(1L << 45),
+    0L, 1L << 45, 1L << 50, 1L << 61, (1L << 62) - (1L << 41), 1L << 62,
+    Long.MaxValue - (1L << 41))
+
+  test("triangle census == driver enumeration on lex, string and raw long ids") {
+    check(Prop.forAllNoShrink(batchGen) { batch =>
+      val strings = directed(batch).toDF("from_id", "to_id")
+      val lex = strings.select(KGraph.encodeIdLex(col("from_id")).as("from_id"),
+        KGraph.encodeIdLex(col("to_id")).as("to_id"))
+      val raw = batch.zipWithIndex.flatMap { case (g, i) =>
+          g.edges.map(e => (rawBase(i) + e._1, rawBase(i) + e._2)) }
+        .toDF("from_id", "to_id")
+      censusMatches[Long](GraphAnalytics.canonical(lex)) &&
+        censusMatches[String](GraphAnalytics.canonical(strings)) &&
+        censusMatches[Long](GraphAnalytics.canonical(raw))
+    }, batches = 1)
+  }
+
+  test("triangle census through a lex-id hub of degree >= 2048") {
+    // 's' ids code at 115·2^44 and up (51 bits): one hub on 2100 leaves,
+    // 50 triangles closing through it and one that avoids it
+    val leaves = (1 to 2100).map(i => ("s:0", s"s:$i"))
+    val closing = (1 to 50).map(k => (s"s:${2 * k - 1}", s"s:${2 * k}"))
+    val apart = Seq(("s:3000", "s:3001"), ("s:3001", "s:3002"),
+      ("s:3000", "s:3002"))
+    val canon = GraphAnalytics.canonical((leaves ++ closing ++ apart)
+      .toDF("f", "t").select(KGraph.encodeIdLex(col("f")).as("from_id"),
+        KGraph.encodeIdLex(col("t")).as("to_id")))
+    assert(censusMatches[Long](canon))
   }
 
   /** Naive synchronous local-dominance matching: per round, every alive

@@ -28,6 +28,7 @@ import graft.queries.Catalog
   *     instances).
   */
 class PlanShapeSpec extends SparkSpec {
+  import PlanShapeSpec.Planned
 
   // Plan grading runs in an ISOLATED child session: the test session is
   // JVM-shared across suites, so sibling suites' conf changes, temp
@@ -41,12 +42,6 @@ class PlanShapeSpec extends SparkSpec {
     s.conf.set("spark.sql.session.timeZone", "UTC")
     s
   }
-
-  /** What the structural tests read of one catalog query's plan: the
-    * formatted physical plan, and whether the optimized plan windows
-    * without a partition spec. */
-  private final case class Planned(formatted: String,
-      unpartitionedWindow: Boolean)
 
   // Each catalog query is planned once, on first use, and every
   // structural test below reads that one plan (planning runs the
@@ -341,4 +336,12 @@ class PlanShapeSpec extends SparkSpec {
       conf.set("spark.sql.codegen.factoryMode", prevFactory)
     }
   }
+}
+
+object PlanShapeSpec {
+  /** What the structural tests read of one catalog query's plan: the
+    * formatted physical plan, and whether the optimized plan windows
+    * without a partition spec. */
+  private final case class Planned(formatted: String,
+      unpartitionedWindow: Boolean)
 }

@@ -8,8 +8,6 @@ import graft.engine.QueryExplainer.{RequestMeta, Step}
   * 459-496) on crafted steps, and the plan-extraction path on a real
   * executed query. */
 class QueryExplainerSpec extends SparkSpec {
-  import spark.implicits._
-
   private val req = RequestMeta("semantic_search", limit = Some(10),
     includeRelationships = false, maxDepth = 1, nFilters = 1,
     nAggregations = 0)

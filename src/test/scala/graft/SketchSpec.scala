@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.queries.Catalog
 
 /** Sketch-audit invariants (q250 HLL, q251 count-min). */

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.streaming.SprtMonitor
 
 /** Pins the streaming SPRT twin: per-micro-batch weekly partial
