@@ -310,17 +310,15 @@ object GraphAnalytics {
     * sorted triple so a triangle losing 2–3 edges at once is charged
     * once) and decrements the surviving edges of those triangles.
     * Round-by-round drops are IDENTICAL to the recount form
-    * ([[kTrussPeelRecount]], pinned by KTrussSpec): a triangle
+    * (KTrussSpec's reference peel): a triangle
     * survives iff all three edges survive, so a surviving edge's
     * recounted support is exactly its old support minus the dead
     * triangles it sat in. Per-round cost is frontier-proportional
     * (Σ min-endpoint-degree over dropped edges), not census-
     * proportional — the difference between 6 full O(m^1.5) sweeps
-    * and 1 sweep + small cascades. MASS-DROP rounds (more than half
-    * the surviving edges peel at once, the typical round 1 on a
-    * power-law projection) recount the REMNANT instead: the cascade
-    * would touch nearly every old triangle, while the remnant census
-    * is O(remnant^1.5). Rounds past the fixed point peel
+    * and 1 sweep + small cascades. The cascade is exact for any drop
+    * size, so every round takes it (q293's largest round, round 1 at
+    * sf0.1, drops ~5 % of the edges). Rounds past the fixed point peel
     * nothing, so a cap above convergence is exact — the same unroll
     * contract the oracle mirrors with full recounts per round. */
   def kTrussPeel(canon: DataFrame, k: Int, maxRounds: Int = 8,
@@ -349,139 +347,73 @@ object GraphAnalytics {
     val isAlive = col("layer") === 0
     val willDrop = isAlive && col("support") < k - 2
     // every checkpoint of the frame counts, in its own job, the rows the
-    // NEXT round will drop (and the first one the edge total) — no
-    // separate count job per round
-    var (frame, Seq(aliveCount, nDrop)) =
-      frame0.truncateLineageCounting(lit(true), willDrop)
+    // NEXT round will drop — no separate count job per round
+    var (frame, Seq(nDrop)) = frame0.truncateLineageCounting(willDrop)
     var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxRounds) {
+    while (nDrop > 0 && rounds < maxRounds) {
       rounds += 1
       // the drop set, survivors and this round's frontier are all
       // FILTERS over the one checkpointed frame — scans, never jobs
-      if (nDrop == 0) {
-        converged = true
-        rounds -= 1
-      } else {
-        val dropE = frame.filter(willDrop).select(col("a"), col("b"))
-        aliveCount -= nDrop
-        val next = if (2 * nDrop > aliveCount + nDrop) {
-          // MASS-DROP round (more than half the round's edges peel at
-          // once — never the co-purchase q293 case at k=4, where round
-          // 1 drops ~5%, but the cheap exact path for a caller's
-          // larger k or a sparser graph): the frontier cascade below
-          // would enumerate nearly every triangle of the OLD graph,
-          // while recounting the small remnant is O(remnant^1.5)
-          // wedges. Identical result — a triangle survives iff all
-          // three edges survive, so the remnant's recounted support
-          // equals old support minus dead triangles (KTrussSpec pins
-          // round-by-round parity across the branch boundary).
-          val remnant = frame.filter(isAlive && col("support") >= k - 2)
-            .select(col("a"), col("b"))
-            .truncateLineage() // edgeSupport self-joins it repeatedly
-          frame.join(edgeSupport(remnant)
-              .withColumnRenamed("support", "sup2"), Seq("a", "b"), "left")
-            .select(col("a"), col("b"),
-              when(isAlive, coalesce(col("sup2"), lit(0L)))
-                .otherwise(col("support")).as("support"),
-              when(willDrop, lit(rounds)).otherwise(col("layer"))
-                .as("layer"))
-        } else {
-          // triangles of the CURRENT graph (drops included — they are
-          // still alive this round) containing >= 1 dropped edge:
-          // pivot each dropped edge at its lower-degree endpoint, walk
-          // that endpoint's adjacency, close against the alive list.
-          // Degrees are recomputed from the SHRINKING frame each round
-          // ON PURPOSE: a hoisted build-once degree frame was measured
-          // (round 11) at 169.8 s vs 125.2 s sf1.0 — joining the
-          // full-graph 2M-row checkpoint twice per round costs more
-          // than re-aggregating the current remnant. The pivot choice
-          // is a cost heuristic only (the dead-triangle set of a
-          // dropped edge is its common-neighbor set from either
-          // endpoint).
-          val alive = frame.filter(isAlive).select(col("a"), col("b"))
-          val deg = degrees(alive)
-          val adj = alive.select(col("a").as("p"), col("b").as("v"))
-            .unionByName(alive.select(col("b").as("p"), col("a").as("v")))
-          val pivoted = dropE
-            .join(deg.select(col("node").as("a"), col("degree").as("da")),
-              "a")
-            .join(deg.select(col("node").as("b"), col("degree").as("db")),
-              "b")
-            .select(when(col("da") <= col("db"),
-                struct(col("a").as("p"), col("b").as("q")))
-              .otherwise(struct(col("b").as("p"), col("a").as("q")))
-              .as("e"))
-            .select(col("e.p").as("p"), col("e.q").as("q"))
-          val deadTri = pivoted
-            .join(adj, Seq("p"))
-            .filter(col("v") =!= col("q"))
-            .join(alive,
-              least(col("q"), col("v")) === col("a") &&
-                greatest(col("q"), col("v")) === col("b"), "left_semi")
-            .select(sort_array(array(col("p"), col("q"), col("v")))
-              .as("t"))
-            .select(col("t")(0).as("x"), col("t")(1).as("y"),
-              col("t")(2).as("z"))
-            .distinct()
-          // each dead triangle charges its SURVIVING edges -1; the
-          // delta only ever keys surviving edges (dropE anti-joined),
-          // so the blanket left join below leaves dead and dropping
-          // rows' support untouched (their dead column is null)
-          val delta = deadTri
-            .select(col("x").as("a"), col("y").as("b"))
-            .unionByName(deadTri.select(col("x").as("a"), col("z").as("b")))
-            .unionByName(deadTri.select(col("y").as("a"), col("z").as("b")))
-            .join(dropE, Seq("a", "b"), "left_anti")
-            .groupBy(col("a"), col("b")).agg(count(lit(1)).as("dead"))
-          frame.join(delta, Seq("a", "b"), "left")
-            .select(col("a"), col("b"),
-              (col("support") - coalesce(col("dead"), lit(0L)))
-                .as("support"),
-              when(willDrop, lit(rounds)).otherwise(col("layer"))
-                .as("layer"))
-        }
-        val (f, Seq(n)) = next.truncateLineageCounting(willDrop)
-        frame = f
-        nDrop = n
-      }
+      val dropE = frame.filter(willDrop).select(col("a"), col("b"))
+      // triangles of the CURRENT graph (drops included — they are
+      // still alive this round) containing >= 1 dropped edge:
+      // pivot each dropped edge at its lower-degree endpoint, walk
+      // that endpoint's adjacency, close against the alive list.
+      // Degrees are recomputed from the SHRINKING frame each round
+      // ON PURPOSE: a hoisted build-once degree frame was measured
+      // (round 11) at 169.8 s vs 125.2 s sf1.0 — joining the
+      // full-graph 2M-row checkpoint twice per round costs more
+      // than re-aggregating the current remnant. The pivot choice
+      // is a cost heuristic only (the dead-triangle set of a
+      // dropped edge is its common-neighbor set from either
+      // endpoint).
+      val alive = frame.filter(isAlive).select(col("a"), col("b"))
+      val deg = degrees(alive)
+      val adj = alive.select(col("a").as("p"), col("b").as("v"))
+        .unionByName(alive.select(col("b").as("p"), col("a").as("v")))
+      val pivoted = dropE
+        .join(deg.select(col("node").as("a"), col("degree").as("da")),
+          "a")
+        .join(deg.select(col("node").as("b"), col("degree").as("db")),
+          "b")
+        .select(when(col("da") <= col("db"),
+            struct(col("a").as("p"), col("b").as("q")))
+          .otherwise(struct(col("b").as("p"), col("a").as("q")))
+          .as("e"))
+        .select(col("e.p").as("p"), col("e.q").as("q"))
+      val deadTri = pivoted
+        .join(adj, Seq("p"))
+        .filter(col("v") =!= col("q"))
+        .join(alive,
+          least(col("q"), col("v")) === col("a") &&
+            greatest(col("q"), col("v")) === col("b"), "left_semi")
+        .select(sort_array(array(col("p"), col("q"), col("v")))
+          .as("t"))
+        .select(col("t")(0).as("x"), col("t")(1).as("y"),
+          col("t")(2).as("z"))
+        .distinct()
+      // each dead triangle charges its SURVIVING edges -1; the
+      // delta only ever keys surviving edges (dropE anti-joined),
+      // so the blanket left join below leaves dead and dropping
+      // rows' support untouched (their dead column is null)
+      val delta = deadTri
+        .select(col("x").as("a"), col("y").as("b"))
+        .unionByName(deadTri.select(col("x").as("a"), col("z").as("b")))
+        .unionByName(deadTri.select(col("y").as("a"), col("z").as("b")))
+        .join(dropE, Seq("a", "b"), "left_anti")
+        .groupBy(col("a"), col("b")).agg(count(lit(1)).as("dead"))
+      val next = frame.join(delta, Seq("a", "b"), "left")
+        .select(col("a"), col("b"),
+          (col("support") - coalesce(col("dead"), lit(0L)))
+            .as("support"),
+          when(willDrop, lit(rounds)).otherwise(col("layer"))
+            .as("layer"))
+      val (f, Seq(n)) = next.truncateLineageCounting(willDrop)
+      frame = f
+      nDrop = n
     }
     (frame.select(col("a"), col("b"), col("layer"))
       .withColumn("in_truss", col("layer") === 0), rounds)
-  }
-
-  /** The per-round FULL-RECOUNT peel — one degree-ordered edge-
-    * support census over the shrinking edge list every round. Kept as
-    * the parity reference for [[kTrussPeel]]'s incremental support
-    * maintenance (KTrussSpec pins round-by-round equality) and as the
-    * direct executable of the oracle's unrolled-CTE contract. */
-  private[graft] def kTrussPeelRecount(canon: DataFrame, k: Int,
-      maxRounds: Int = 8): (DataFrame, Int) = {
-    require(k >= 3, s"k-truss needs k >= 3 (got $k)")
-    var alive = canon.truncateLineage()
-    var peeled: DataFrame = null
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxRounds) {
-      rounds += 1
-      val sup = edgeSupport(alive)
-      val drop = alive.join(sup, Seq("a", "b"), "left")
-        .filter(coalesce(col("support"), lit(0L)) < k - 2)
-        .select(col("a"), col("b"), lit(rounds).as("layer"))
-        .truncateLineage()
-      if (drop.isEmpty) {
-        converged = true
-        rounds -= 1
-      } else {
-        peeled = if (peeled == null) drop else peeled.unionByName(drop)
-        alive = alive.join(drop.select(col("a"), col("b")),
-          Seq("a", "b"), "left_anti").truncateLineage()
-      }
-    }
-    val live = alive.select(col("a"), col("b"), lit(0).as("layer"))
-    val all =
-      if (peeled == null) live else live.unionByName(peeled)
-    (all.withColumn("in_truss", col("layer") === 0), rounds)
   }
 
   /** Synchronous label propagation for `rounds` rounds. Every node

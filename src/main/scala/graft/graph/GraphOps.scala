@@ -59,40 +59,59 @@ object GraphOps {
     */
   def multiHop(edges: DataFrame, seeds: DataFrame, maxHops: Int,
       dir: Direction = Outgoing, edgeFilter: Option[Column] = None,
-      preOriented: Boolean = false): DataFrame = {
-    // `preOriented`: edges is already (node_id, next_id, …) materialized
-    // and hash-partitioned (KGraph.orientedMaterialized — the analog of
-    // the reference's from/to edge indexes); skip the rebuild entirely.
+      preOriented: Boolean = false): DataFrame =
+    bfsFrame(walkEdges(edges, dir, edgeFilter, preOriented, Nil), seeds,
+      maxHops)
+
+  /** The edge index a walk joins: (node_id, next_id, `extra`…).
+    * `preOriented`: edges is already (node_id, next_id, …) materialized
+    * and hash-partitioned (KGraph.orientedMaterialized — the analog of
+    * the reference's from/to edge indexes), so without a filter it is
+    * used as is. Otherwise the (filtered, oriented) edge set is
+    * materialized once, spread by the join key, so no hop re-runs the
+    * filter and orientation. The checkpoint keeps no partitioning a
+    * hop's join can reuse (see Lineage: an AQE-coalesced shuffle output
+    * reads back as a plain scan), so the join may shuffle this side
+    * again; bucketing edges by node_id is what removes that shuffle on
+    * a cluster. */
+  private def walkEdges(edges: DataFrame, dir: Direction,
+      edgeFilter: Option[Column], preOriented: Boolean,
+      extra: Seq[String]): DataFrame = {
     val e0 = if (preOriented) edges else oriented(edges, dir)
-    // Materialize the (filtered, oriented) edge set once, spread by the
-    // join key, so no hop re-runs the filter and orientation. The
-    // checkpoint keeps no partitioning a hop's join can reuse (see
-    // Lineage: an AQE-coalesced shuffle output reads back as a plain
-    // scan), so the join may shuffle this side again; bucketing edges by
-    // node_id is what removes that shuffle on a cluster.
-    val e = edgeFilter match {
-      case None if preOriented => e0.select(col("node_id"), col("next_id"))
+    val keep = Seq(col("node_id"), col("next_id")) ++ extra.map(col)
+    edgeFilter match {
+      case None if preOriented => e0.select(keep: _*)
       case _ => edgeFilter.map(e0.filter).getOrElse(e0)
-        .select(col("node_id"), col("next_id"))
+        .select(keep: _*)
         .repartition(col("node_id"))
         .truncateLineage()
     }
-    bfsFrame(e, seeds, maxHops)
   }
 
-  /** The carried-frame BFS kernel behind [[multiHop]], the sampled
-    * multi-source walks (q249, q258) and q256's forward pass. ONE
-    * frame carries every reached row's state — (keys…, node_id,
-    * [sigma,] hop), `keys` naming the source a row was reached from in
-    * a multi-source walk — and each hop h is
+  /** A value [[bfsFrame]] carries on every frame row: `init` on the
+    * start rows, `step` computed for each arrival from its frontier row
+    * and edge, and `merge` folding a new row's first-level arrivals.
+    * [[Sigma]] counts shortest paths; [[multiHopPaths]] renders one. */
+  private[graft] case class Carry(name: String, init: Column, step: Column,
+      merge: Column => Column)
+
+  /** σ, the number of shortest paths: 1 at a start row, the frontier
+    * row's σ along each edge, summed over a node's first-level arrivals. */
+  private[graft] val Sigma = Carry("sigma", lit(1L), col("sigma"), c => sum(c))
+
+  /** The carried-frame BFS kernel behind [[multiHop]], [[multiHopPaths]],
+    * the sampled multi-source walks (q249, q258) and q256's forward
+    * pass. ONE frame carries every reached row's state — (keys…,
+    * node_id, [carry,] hop), `keys` naming the source a row was reached
+    * from in a multi-source walk — and each hop h is
     *
     *  - frontier: `frame.filter(hop === h-1)` — a scan, not a job;
-    *  - arrivals: frontier ⋈ e on node_id, tagged hop h;
+    *  - arrivals: frontier ⋈ e on node_id, tagged hop h, each with the
+    *    carry's `step`;
     *  - merge: (frame ∪ arrivals) grouped by (keys…, node_id) — ONE
-    *    min-hop aggregate, with σ (the number of shortest paths, when
-    *    `withSigma`) summed over the first-level arrivals only: an
-    *    already-reached row keeps its hop and σ, a new row sums its
-    *    arrivals' σ;
+    *    min-hop aggregate, with the carried value merged over the
+    *    first-level arrivals only: an already-reached row keeps its hop
+    *    and value, a new row folds its arrivals' values with `merge`;
     *  - one checkpoint of the merged frame, which also counts the new
     *    level through an Observation: an empty level stops the walk
     *    without a separate probe job.
@@ -101,30 +120,33 @@ object GraphOps {
     * over a single vertex-state collection): one materialization per
     * hop, where a distinct level, an anti-join against a growing
     * visited union and an emptiness probe cost three. `e` is
-    * (node_id, next_id); `start` carries `keys` and node_id
-    * (duplicates collapse). A keyed walk is a sampled multi-source walk
-    * (q249, q256, q258): its frontier is (seed × reached node)-bounded,
-    * so it is broadcast; an unkeyed walk's frontier can be O(n), so
-    * `multiHop` leaves the join strategy to AQE. */
+    * (node_id, next_id, plus any column the carry's step reads);
+    * `start` carries `keys` and node_id (duplicates collapse). A keyed
+    * walk is a sampled multi-source walk (q249, q256, q258): its
+    * frontier is (seed × reached node)-bounded, so it is broadcast; an
+    * unkeyed walk's frontier can be O(n), so the join strategy is
+    * AQE's. */
   private[graft] def bfsFrame(e: DataFrame, start: DataFrame, maxHops: Int,
-      keys: Seq[String] = Nil, withSigma: Boolean = false): DataFrame = {
+      keys: Seq[String] = Nil, carry: Option[Carry] = None): DataFrame = {
     val id = keys.map(col) :+ col("node_id")
-    val sigma = if (withSigma) Seq(col("sigma")) else Nil
+    val carried = carry.map(c => col(c.name)).toSeq
     var (frame, Seq(n)) = start.select(id: _*).distinct()
-      .select(id ++ sigma.map(_ => lit(1L).as("sigma")) :+ lit(0).as("hop"): _*)
+      .select(id ++ carry.map(c => c.init.as(c.name)) :+ lit(0).as("hop"): _*)
       .truncateLineageCounting(lit(true))
     var h = 1
     while (h <= maxHops && n > 0) {
-      val front = frame.filter(col("hop") === h - 1).select(id ++ sigma: _*)
+      val front = frame.filter(col("hop") === h - 1).select(id ++ carried: _*)
       val arrivals = (if (keys.nonEmpty) broadcast(front) else front)
         .join(e, "node_id")
-        .select(keys.map(col) ++ (col("next_id").as("node_id") +: sigma) :+
-          lit(h).as("hop"): _*)
-      // a reached row keeps its hop and σ; a new row sums its arrivals' σ
+        .select(keys.map(col) ++ (col("next_id").as("node_id") +:
+          carry.map(c => c.step.as(c.name)).toSeq) :+ lit(h).as("hop"): _*)
+      // a reached row keeps its hop and carried value; a new row merges
+      // its arrivals' values
       val merged = frame.unionByName(arrivals).groupBy(id: _*)
-        .agg(min(col("hop")).as("hop"), sigma.map(s =>
-          coalesce(max(when(col("hop") < h, s)), sum(s)).as("sigma")): _*)
-        .select(id ++ sigma :+ col("hop"): _*)
+        .agg(min(col("hop")).as("hop"), carry.map(c =>
+          coalesce(max(when(col("hop") < h, col(c.name))),
+            c.merge(col(c.name))).as(c.name)).toSeq: _*)
+        .select(id ++ carried :+ col("hop"): _*)
       val (next, Seq(m)) = merged.truncateLineageCounting(col("hop") === h)
       frame = next
       n = m
@@ -137,7 +159,8 @@ object GraphOps {
     * node — the distributed twin of the reference's path-recording
     * traversal (enhanced_mcp_endpoint.py:76-171, paths rendered as
     * [n1, "--type-->", n2] and capped by the caller; graph_storage_adapter
-    * .py:319-359 node-id paths via `nodesOnly`).
+    * .py:319-359 node-id paths via `nodesOnly`). Returns
+    * (node_id, hop, path).
     *
     * The reference keeps the FIRST path found, which depends on queue
     * insertion order; a distributed engine needs an order-free rule, so
@@ -146,47 +169,22 @@ object GraphOps {
     * ending at the same node render with the same arrow count and tail
     * id, so none is a string-prefix of another and appending one more
     * edge preserves their ordering — min-of-extensions-of-mins is the
-    * global min (the per-level `min` aggregate is map-side combinable,
-    * so each hop stays one join + one partial aggregate at scale).
+    * global min. So the path is a [[Carry]] of [[bfsFrame]]: the seed
+    * id, extended along each edge, merged by `min` (map-side
+    * combinable, so each hop stays one join + one partial aggregate at
+    * scale).
     */
   def multiHopPaths(edges: DataFrame, seeds: DataFrame, maxHops: Int,
       dir: Direction = Outgoing, edgeFilter: Option[Column] = None,
       preOriented: Boolean = false, nodesOnly: Boolean = false): DataFrame = {
-    val e0 = if (preOriented) edges else oriented(edges, dir)
-    val keep = if (nodesOnly) Seq(col("node_id"), col("next_id"))
-      else Seq(col("node_id"), col("next_id"), col("relation_type"))
-    // pre-oriented unfiltered edges are already hash-partitioned and
-    // materialized (KGraph.orientedMaterialized) — don't re-shuffle them
-    val e = edgeFilter match {
-      case None if preOriented => e0.select(keep: _*)
-      case _ => edgeFilter.map(e0.filter).getOrElse(e0)
-        .select(keep: _*)
-        .repartition(col("node_id"))
-        .truncateLineage()
-    }
-    var reached = seeds.select(col("node_id")).distinct()
-      .withColumn("hop", lit(0))
-      .withColumn("path", col("node_id"))
-      .truncateLineage()
-    var frontier = reached
-    var h = 1
-    while (h <= maxHops && !frontier.isEmpty) {
-      val ext =
-        if (nodesOnly) concat(col("path"), lit(" > "), col("next_id"))
-        else concat(col("path"), lit(" --"), col("relation_type"),
-          lit("--> "), col("next_id"))
-      val next = frontier.join(e, "node_id")
-        .select(col("next_id").as("node_id"), ext.as("cand"))
-        .groupBy(col("node_id")).agg(min(col("cand")).as("path"))
-        .join(reached.select(col("node_id")), Seq("node_id"), "left_anti")
-        .withColumn("hop", lit(h))
-        .select(col("node_id"), col("hop"), col("path"))
-        .truncateLineage()
-      reached = reached.unionByName(next)
-      frontier = next
-      h += 1
-    }
-    reached
+    val ext =
+      if (nodesOnly) concat(col("path"), lit(" > "), col("next_id"))
+      else concat(col("path"), lit(" --"), col("relation_type"),
+        lit("--> "), col("next_id"))
+    bfsFrame(walkEdges(edges, dir, edgeFilter, preOriented,
+        if (nodesOnly) Nil else Seq("relation_type")), seeds, maxHops,
+        carry = Some(Carry("path", col("node_id"), ext, c => min(c))))
+      .select(col("node_id"), col("hop"), col("path"))
   }
 
   /** Shortest path WITH reconstruction: min-hop node-id path from the
@@ -258,71 +256,24 @@ object GraphOps {
         col("n_edges").cast("double") / greatest(col("n_nodes"), lit(1L)))
   }
 
-  /** Sequence chains (insight_discovery.py:647-689): follow OUTGOING
-    * edges from root nodes (nodes with no predecessors) until a sink,
-    * length-capped (the reference caps at 20; cycles are excluded by the
-    * cap plus the DAG-ness of typed-FK graphs — the reference's visited
-    * set is per-chain, which the cap subsumes for small depths).
-    * Returns one row per complete root→sink chain: (start_id, end_id, len).
-    */
-  def chains(edges: DataFrame, maxLen: Int = 20,
-      seedFilter: Option[Column] = None, preOriented: Boolean = false): DataFrame = {
-    // spread by the join key and materialized once; the checkpoint keeps
-    // no partitioning the level joins can reuse (see Lineage), so a
-    // join may shuffle this side again
-    val out =
-      if (preOriented) edges.select(col("node_id").as("cur"), col("next_id"))
-      else edges
-        .select(col("from_id").as("cur"), col("to_id").as("next_id"))
-        .repartition(col("cur"))
-        .truncateLineage()
-    val roots0 = out.select(col("cur").as("node_id")).distinct()
-      .join(out.select(col("next_id").as("node_id")).distinct(),
-        Seq("node_id"), "left_anti")
-    val roots = seedFilter.map(roots0.filter).getOrElse(roots0)
-    var frontier = roots
-      .select(col("node_id").as("start_id"), col("node_id").as("cur"), lit(0).as("len"))
-      .truncateLineage()
-    var done: DataFrame = null
-    var h = 0
-    while (h < maxLen && !frontier.isEmpty) {
-      // ONE left-outer join per level: unmatched rows are sinks (complete
-      // chains), matched rows extend the frontier. Checkpointing the join
-      // output materializes both halves in a single pass.
-      val step = frontier
-        .join(out, Seq("cur"), "left_outer")
-        .truncateLineage()
-      val finished = step.filter(col("next_id").isNull)
-        .select(col("start_id"), col("cur").as("end_id"), col("len"))
-      done = if (done == null) finished else done.unionByName(finished)
-      frontier = step.filter(col("next_id").isNotNull)
-        .select(col("start_id"), col("next_id").as("cur"), (col("len") + 1).as("len"))
-      h += 1
-    }
-    // chains COMPLETE at exactly maxLen still count (only longer ones are
-    // capped away) — classify the final frontier's sinks
-    if (h == maxLen && !frontier.isEmpty) {
-      val boundary = frontier
-        .join(out.select(col("cur")).distinct(), Seq("cur"), "left_anti")
-        .select(col("start_id"), col("cur").as("end_id"), col("len"))
-      done = if (done == null) boundary else done.unionByName(boundary)
-    }
-    if (done == null) // no roots (fully cyclic or empty graph)
-      frontier.sparkSession.emptyDataFrame
-        .select(lit("").as("start_id"), lit("").as("end_id"), lit(0).as("len"))
-        .limit(0)
-    else done
-  }
-
-  /** Chain COUNTING without chain enumeration: dynamic programming on
-    * (node, length) counts. Each level joins the aggregated frontier
-    * (≤ |V| rows) against the edge table and re-aggregates, so per-level
-    * work is bounded by |E| — not by the number of root→sink paths, which
-    * grows multiplicatively through fan-out. Returns one row per
-    * (len, end_id) with the number of complete chains — identical to
-    * `chains(...).groupBy(len, end_id).count()`, at a fraction of the
-    * cost. This is the 100 TB form: enumeration materializes O(paths),
-    * counting materializes O(V) per level. */
+  /** Sequence chains (insight_discovery.py:647-689), counted: follow
+    * OUTGOING edges from root nodes (nodes with no predecessors) until a
+    * sink, length-capped (the reference caps at 20; cycles are excluded
+    * by the cap plus the DAG-ness of typed-FK graphs — the reference's
+    * visited set is per-chain, which the cap subsumes for small depths;
+    * a chain longer than the cap is dropped, one of exactly `maxLen`
+    * edges still counts). Returns one row per (len, end_id) with the
+    * number of complete root→sink chains.
+    *
+    * Dynamic programming on (node, length) counts, not chain
+    * enumeration: each level joins the aggregated frontier (≤ |V| rows)
+    * against the edge table and re-aggregates, so per-level work is
+    * bounded by |E| — not by the number of root→sink paths, which grows
+    * multiplicatively through fan-out. Each level is one left-outer
+    * join (unmatched rows are sinks, matched rows extend the frontier),
+    * checkpointed once, and the frontier aggregate's checkpoint, which
+    * also counts it: an empty frontier stops the walk without a probe
+    * job. */
   def chainCounts(edges: DataFrame, maxLen: Int = 20,
       seedFilter: Option[Column] = None, preOriented: Boolean = false): DataFrame = {
     val out =
@@ -335,29 +286,30 @@ object GraphOps {
       .join(out.select(col("next_id").as("node_id")).distinct(),
         Seq("node_id"), "left_anti")
     val roots = seedFilter.map(roots0.filter).getOrElse(roots0)
-    var frontier = roots
+    var (frontier, Seq(n)) = roots
       .select(col("node_id").as("cur"), lit(0).as("len"), lit(1L).as("cnt"))
-      .truncateLineage()
+      .truncateLineageCounting(lit(true))
     var done: DataFrame = null
     var h = 0
-    while (h < maxLen && !frontier.isEmpty) {
+    while (h < maxLen && n > 0) {
       val step = frontier.join(out, Seq("cur"), "left_outer").truncateLineage()
       val finished = step.filter(col("next_id").isNull)
         .select(col("len"), col("cur").as("end_id"), col("cnt").as("n_chains"))
       done = if (done == null) finished else done.unionByName(finished)
-      // truncate the aggregated (small) frontier too: the loop guard's
-      // isEmpty and the next join otherwise each re-run this aggregate
-      // against the checkpointed step — twice per level
-      frontier = step.filter(col("next_id").isNotNull)
+      // truncate the aggregated (small) frontier too: the next join
+      // otherwise re-runs this aggregate against the checkpointed step
+      val (next, Seq(m)) = step.filter(col("next_id").isNotNull)
         .groupBy(col("next_id"), col("len"))
         .agg(sum(col("cnt")).as("cnt"))
         .select(col("next_id").as("cur"), (col("len") + 1).as("len"), col("cnt"))
-        .truncateLineage()
+        .truncateLineageCounting(lit(true))
+      frontier = next
+      n = m
       h += 1
     }
     // complete chains of exactly maxLen still count — classify the final
     // frontier's sinks before aggregating
-    if (h == maxLen && !frontier.isEmpty) {
+    if (h == maxLen && n > 0) {
       val boundary = frontier
         .join(out.select(col("cur")).distinct(), Seq("cur"), "left_anti")
         .select(col("len"), col("cur").as("end_id"), col("cnt").as("n_chains"))

@@ -124,11 +124,10 @@ object HyperBall {
       .truncateLineage()
   }
 
-  /** [[estimateRow]] over pivoted registers: present and the scaled
-    * register sum are row-local sums over the 16 columns (a zero
-    * column is an absent register — pow2 CASE yields NULL there,
-    * coalesced to 0), so the only aggregate left is the corpus
-    * reduction. */
+  /** One-row neighborhood-function estimate at hop `t` over pivoted
+    * registers: present and the scaled register sum are row-local sums
+    * over the 16 columns (a zero column is an absent register), so the
+    * only aggregate left is the corpus reduction. */
   def estimateRowPivoted(regs: DataFrame, t: Int): DataFrame = {
     val present = (0 until M)
       .map(i => when(col(s"r$i") > 0, lit(1L)).otherwise(lit(0L)))
@@ -155,34 +154,6 @@ object HyperBall {
         graft.functions.ExactRound.microMean6(col("nf_micro"),
           col("n_nodes")).as("avg_ball_est"))
   }
-
-  /** One synchronous merge round along undirected canonical edges
-    * (a, b): every node absorbs its neighbors' registers. The SPARSE
-    * (node, j, r) form — the reference that HyperBallSpec holds the
-    * pivoted rounds q343 runs ([[mergeRoundPivoted]]) equal to. */
-  def mergeRound(regs: DataFrame, canon: DataFrame): DataFrame = {
-    val fromB = canon.join(regs.withColumnRenamed("node", "b"), "b")
-      .select(col("a").as("node"), col("j"), col("r"))
-    val fromA = canon.join(regs.withColumnRenamed("node", "a"), "a")
-      .select(col("b").as("node"), col("j"), col("r"))
-    regs.select(col("node"), col("j"), col("r"))
-      .unionByName(fromB).unionByName(fromA)
-      .groupBy(col("node"), col("j")).agg(max(col("r")).as("r"))
-      .truncateLineage()
-  }
-
-  /** One-row neighborhood-function estimate at hop `t`. */
-  def estimateRow(regs: DataFrame, t: Int): DataFrame =
-    regs.groupBy(col("node"))
-      .agg(count(lit(1)).as("present"),
-        sum(expr(pow2Scaled21Sql("r"))).as("sumpow"))
-      .select(expr(estMicroSql("present", "sumpow")).as("est_micro"))
-      .agg(count(lit(1)).as("n_nodes"),
-        sum(col("est_micro")).as("nf_micro"))
-      .select(lit(t).as("t"), col("n_nodes"),
-        (col("nf_micro") / lit(1e6)).as("nf_est"),
-        graft.functions.ExactRound.microMean6(col("nf_micro"),
-          col("n_nodes")).as("avg_ball_est"))
 
   // ---- oracle twins (same generated CASE text) ----------------------
 

@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.engine.Lineage.LineageOps
 
@@ -71,32 +71,10 @@ object PageRank {
   def ranks(edges: DataFrame, iterations: Int = 3,
       index: Option[DataFrame] = None,
       nodeSet: Option[DataFrame] = None): DataFrame = {
-    // The static frames (weighted edge list, node set) and each
-    // iteration's rank frame are lineage-truncated: without the cut,
-    // iteration k re-executes every previous iteration's join DAG (the
-    // BFS operators use the same pattern, GraphOps.scala). The edge
-    // list carries outdeg pre-joined once, so an iteration is exactly
-    // one hash join (ranks onto edges, both keyed by from_id) + one
-    // keyed integer sum + the left join onto the node set.
     val e = index.getOrElse(edgeIndex(edges).truncateLineage())
-    val all = nodeSet.getOrElse(
-      nodes(edges).repartition(col("node_id")).truncateLineage())
-    var r = all.withColumn("rank", lit(1.0))
-    for (_ <- 1 to iterations) {
-      val contrib = e
-        .join(r.withColumnRenamed("node_id", "from_id"), Seq("from_id"))
-        .select(col("to_id").as("node_id"),
-          round(col("rank") / col("outdeg") * lit(Nano), 0)
-            .cast("long").as("c"))
-        .groupBy(col("node_id"))
-        .agg(sum(col("c")).as("s"))
-      r = all.join(contrib, Seq("node_id"), "left")
-        .select(col("node_id"),
-          (lit(1.0 - Damping) + lit(Damping) *
-            (coalesce(col("s"), lit(0L)) / lit(Nano))).as("rank"))
-        .truncateLineage()
-    }
-    r
+    val all = nodeSet.getOrElse(nodesOf(edges))
+    iterate(e, col("rank") / col("outdeg"), lit(1.0 - Damping), all,
+      all.withColumn("rank", lit(1.0)), iterations)
   }
 
   /** Confidence-WEIGHTED ranks: contributions split proportionally to
@@ -106,8 +84,8 @@ object PageRank {
     * are exact two-decimal literals; they quantize to MICRO-unit
     * integers up front, so W(u) = Σ w_micro is an exact integer and the
     * per-edge share r·w/W quantizes to nano-units exactly like the
-    * uniform path. Same one-join-one-sum iteration shape and the same
-    * determinism contract as [[ranks]]. */
+    * uniform path. Same iteration and the same determinism contract as
+    * [[ranks]]. */
   def weightedRanks(edges: DataFrame, iterations: Int = 3,
       nodeSet: Option[DataFrame] = None): DataFrame = {
     val w = edges.select(col("from_id"), col("to_id"),
@@ -116,24 +94,9 @@ object PageRank {
     val e = w.join(outw, Seq("from_id"))
       .repartition(col("from_id"))
       .truncateLineage()
-    val all = nodeSet.getOrElse(
-      nodes(edges).repartition(col("node_id")).truncateLineage())
-    var r = all.withColumn("rank", lit(1.0))
-    for (_ <- 1 to iterations) {
-      val contrib = e
-        .join(r.withColumnRenamed("node_id", "from_id"), Seq("from_id"))
-        .select(col("to_id").as("node_id"),
-          round(col("rank") * col("w") / col("ww") * lit(Nano), 0)
-            .cast("long").as("c"))
-        .groupBy(col("node_id"))
-        .agg(sum(col("c")).as("s"))
-      r = all.join(contrib, Seq("node_id"), "left")
-        .select(col("node_id"),
-          (lit(1.0 - Damping) + lit(Damping) *
-            (coalesce(col("s"), lit(0L)) / lit(Nano))).as("rank"))
-        .truncateLineage()
-    }
-    r
+    val all = nodeSet.getOrElse(nodesOf(edges))
+    iterate(e, col("rank") * col("w") / col("ww"), lit(1.0 - Damping), all,
+      all.withColumn("rank", lit(1.0)), iterations)
   }
 
   /** PERSONALIZED ranks (Haveliwala 2002, topic-sensitive PageRank):
@@ -144,17 +107,15 @@ object PageRank {
     * The curation use: score entities by proximity to a trusted seed
     * domain set, the standard seed-expansion primitive.
     *
-    * Same one-join-one-sum iteration, the same nano-unit quantized
-    * contribution contract as [[ranks]], and the same lineage
-    * truncation; non-seed nodes start at 0 so round 1's rank frame is
-    * already seed-proximity mass, not uniform noise. */
+    * Same iteration and the same nano-unit quantized contribution
+    * contract as [[ranks]]; non-seed nodes start at 0 so round 1's rank
+    * frame is already seed-proximity mass, not uniform noise. */
   def personalizedRanks(edges: DataFrame, seeds: DataFrame,
       iterations: Int = 3,
       index: Option[DataFrame] = None,
       nodeSet: Option[DataFrame] = None): DataFrame = {
     val e = index.getOrElse(edgeIndex(edges).truncateLineage())
-    val all = nodeSet.getOrElse(
-      nodes(edges).repartition(col("node_id")).truncateLineage())
+    val all = nodeSet.getOrElse(nodesOf(edges))
     val seeded = all.join(seeds.select(col("node_id")).distinct(),
         Seq("node_id"), "left_semi")
       .withColumn("seed", lit(1.0))
@@ -162,19 +123,37 @@ object PageRank {
         Seq("node_id"), "left")
       .select(col("node_id"), coalesce(col("seed"), lit(0.0)).as("seed"))
       .truncateLineage()
-    var r = withSeed.withColumn("rank", col("seed") * lit(1.0 - Damping))
-      .select(col("node_id"), col("rank"))
+    iterate(e, col("rank") / col("outdeg"), lit(1.0 - Damping) * col("seed"),
+      withSeed, withSeed.withColumn("rank", col("seed") * lit(1.0 - Damping))
+        .select(col("node_id"), col("rank")), iterations)
+  }
+
+  /** The node set, spread by node_id and materialized once. */
+  private def nodesOf(edges: DataFrame): DataFrame =
+    nodes(edges).repartition(col("node_id")).truncateLineage()
+
+  /** The one PageRank iteration, `iterations` times from `start`
+    * (node_id, rank): every edge of `e` (from_id, to_id, …) carries the
+    * nano-quantized `share` of its source's rank to its target — ONE
+    * hash join of the rank frame onto the edge list (both keyed by
+    * from_id) and ONE keyed integer sum — and every node of `base`
+    * takes `restart` + 0.85 · its incoming sum (a left join, so a node
+    * with no in-edges keeps the restart term). Each iteration's rank
+    * frame is lineage-truncated: without the cut, iteration k
+    * re-executes every previous iteration's join DAG. */
+  private def iterate(e: DataFrame, share: Column, restart: Column,
+      base: DataFrame, start: DataFrame, iterations: Int): DataFrame = {
+    var r = start
     for (_ <- 1 to iterations) {
       val contrib = e
         .join(r.withColumnRenamed("node_id", "from_id"), Seq("from_id"))
         .select(col("to_id").as("node_id"),
-          round(col("rank") / col("outdeg") * lit(Nano), 0)
-            .cast("long").as("c"))
+          round(share * lit(Nano), 0).cast("long").as("c"))
         .groupBy(col("node_id"))
         .agg(sum(col("c")).as("s"))
-      r = withSeed.join(contrib, Seq("node_id"), "left")
+      r = base.join(contrib, Seq("node_id"), "left")
         .select(col("node_id"),
-          (lit(1.0 - Damping) * col("seed") + lit(Damping) *
+          (restart + lit(Damping) *
             (coalesce(col("s"), lit(0L)) / lit(Nano))).as("rank"))
         .truncateLineage()
     }

@@ -139,7 +139,7 @@ object CurationQueries {
     // the rank artifacts carry PACKED lex ids (round 15): the top-k
     // cut under (rank DESC, node_id) is order-isomorphic to the string
     // cut (KGraphCodecSpec), so only the 50 surviving rows decode
-    PageRank.ranks(KGraph.materialized(s, dir), PrIters,
+    PageRank.ranks(KGraph.lexEdgesMaterialized(s, dir), PrIters,
         index = Some(KGraph.rankEdgesMaterialized(s, dir)),
         nodeSet = Some(KGraph.nodeSetMaterialized(s, dir)))
       .orderBy(col("rank").desc, col("node_id"))

@@ -584,7 +584,7 @@ object GraphAnalyticsQueries {
     // integer σ summed over each node's first-level arrivals
     val fwd = GraphOps.bfsFrame(e,
       seeds.select(col("src"), col("src").as("node_id")), BcHops,
-      keys = Seq("src"), withSigma = true)
+      keys = Seq("src"), carry = Some(GraphOps.Sigma))
     // the backward pass only walks edges out of reached nodes: restrict
     // the index ONCE (one scan) instead of re-scanning it per level; a
     // semi-join, so the reached set needs no distinct
@@ -789,7 +789,6 @@ object GraphAnalyticsQueries {
   }
 
   private def q268(s: SparkSession, dir: String): DataFrame = {
-    val canonS = KGraph.canonicalMaterialized(s, dir)
     // round-14 (guide §2.3 "narrower types"): the wedge join + pair
     // aggregate below hash/compare ~22M (na, nb) keys at sf0.1 — on
     // the id STRINGS that was 784%+528% of executed time in
@@ -851,13 +850,8 @@ object GraphAnalyticsQueries {
     // list proportionally wider, keeping the per-task slice bounded).
     // sf2 verified under the 48g min-of-2 protocol — see BENCH_NOTES
     // round 14.
-    // dev A/B knob (the ADVICE-r13 sf2 verification): =0 restores the
-    // default sort-merge anti join so the hint's cost is measurable in
-    // isolation at any scale; results identical either way
-    val edgeSide = canon.select(col("a").as("na"), col("b").as("nb"))
-    val existing =
-      if (sys.env.get("GRAFT_Q268_SHUFFLEHASH").contains("0")) edgeSide
-      else shuffleHashIfCompact(s, edgeSide, canonS.count())
+    val existing = shuffleHashIfCompact(s,
+      canon.select(col("a").as("na"), col("b").as("nb")), canon.count())
     pairs
       .join(existing, Seq("na", "nb"), "left_anti")
       // the top-k runs entirely on packed longs (lex codec: long order

@@ -4,7 +4,6 @@ import org.apache.spark.sql.functions._
 import graft.engine.QueryEngine
 import graft.engine.QueryEngine._
 import graft.operators.Filters.Cond
-import graft.graph.GraphOps
 import graft.temporal.TemporalOps
 import graft.text.TextFunctions
 
@@ -162,15 +161,6 @@ class EngineStatsSpec extends SparkSpec {
     assert(runs.head.getAs[Int]("start_idx") === 1)
     assert(runs.head.getAs[Int]("end_idx") === 2)
     assert(runs.head.getAs[Long]("len") === 2)
-  }
-
-  test("chains: root-to-sink paths with fan-out") {
-    // a→b→c, a→b→d: root a, sinks c,d ⇒ two chains of len 2
-    val e = Seq(("a", "b"), ("b", "c"), ("b", "d"))
-      .toDF("from_id", "to_id")
-    val ch = GraphOps.chains(e).orderBy("end_id").collect()
-    assert(ch.map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSeq ===
-      Seq(("a", "c", 2), ("a", "d", 2)))
   }
 
   test("vector expressions: length mismatch and null elements give NULL (HOF parity)") {

@@ -115,7 +115,7 @@ class GraphKernelDiffSpec extends SparkSpec {
       val start = seeds.toDF("s").select(KGraph.encodeIdLex(col("s")).as("s"))
         .select(col("s"), col("s").as("node_id"))
       val got = GraphOps.bfsFrame(e, start, maxHops, keys = Seq("s"),
-          withSigma = true)
+          carry = Some(GraphOps.Sigma))
         .select(KGraph.decodeIdLex(col("s")), KGraph.decodeIdLex(col("node_id")),
           col("hop"), col("sigma"))
         .as[(String, String, Int, Long)].collect().toSet

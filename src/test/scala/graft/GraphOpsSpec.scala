@@ -85,19 +85,20 @@ class GraphOpsSpec extends SparkSpec {
     assert(n == Set("c", "d"))
   }
 
-  test("chains handles diamond fan-in and the length cap") {
-    // e→a→b→{c→d, d}: root e, sinks d via two paths
-    val got = GraphOps.chains(edges).as[(String, String, Int)].collect().toSet
-    assert(got == Set(("e", "d", 4), ("e", "d", 3)))
-    // cap cuts incomplete chains entirely
-    val capped = GraphOps.chains(edges, maxLen = 2).collect()
-    assert(capped.isEmpty)
-  }
-
   test("chainCounts equals enumerated chains, aggregated") {
+    // e→a→b→{c→d, d}: root e, sink d through two paths (diamond fan-in)
     val counted = GraphOps.chainCounts(edges)
       .as[(Int, String, Long)].collect().toSet
     assert(counted == Set((3, "d", 1L), (4, "d", 1L)))
+    // the cap drops longer chains entirely and keeps one of exactly
+    // maxLen edges
+    assert(GraphOps.chainCounts(edges, maxLen = 3)
+      .as[(Int, String, Long)].collect().toSet == Set((3, "d", 1L)))
+    assert(GraphOps.chainCounts(edges, maxLen = 2).collect().isEmpty)
+    // fan-out: a→b→c, a→b→d ends one chain at each sink
+    val e1 = Seq(("a", "b"), ("b", "c"), ("b", "d")).toDF("from_id", "to_id")
+    val c1 = GraphOps.chainCounts(e1).as[(Int, String, Long)].collect().toSet
+    assert(c1 == Set((2, "c", 1L), (2, "d", 1L)))
     // multi-root fan-in sums counts per (len, end)
     val e2 = Seq(("r1", "m"), ("r2", "m"), ("m", "z")).toDF("from_id", "to_id")
     val c2 = GraphOps.chainCounts(e2).as[(Int, String, Long)].collect().toSet

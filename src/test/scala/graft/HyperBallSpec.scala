@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.engine.Lineage.LineageOps
 import graft.graph.{HyperBall, KGraph}
 
 /** q343's HyperBall — the oracle proves cross-engine agreement but
@@ -12,6 +14,35 @@ import graft.graph.{HyperBall, KGraph}
   * independent and the N(t) sum averages them down).
   */
 class HyperBallSpec extends SparkSpec {
+
+  /** One synchronous merge round along undirected canonical edges
+    * (a, b) in the SPARSE (node, j, r) form — the oracle's CTE shape,
+    * and the reference the pivoted rounds q343 runs
+    * ([[HyperBall.mergeRoundPivoted]]) must equal. */
+  private def mergeRound(regs: DataFrame, canon: DataFrame): DataFrame = {
+    val fromB = canon.join(regs.withColumnRenamed("node", "b"), "b")
+      .select(col("a").as("node"), col("j"), col("r"))
+    val fromA = canon.join(regs.withColumnRenamed("node", "a"), "a")
+      .select(col("b").as("node"), col("j"), col("r"))
+    regs.select(col("node"), col("j"), col("r"))
+      .unionByName(fromB).unionByName(fromA)
+      .groupBy(col("node"), col("j")).agg(max(col("r")).as("r"))
+      .truncateLineage()
+  }
+
+  /** One-row neighborhood-function estimate at hop `t` over sparse
+    * registers, through the oracle's CASE tables. */
+  private def estimateRow(regs: DataFrame, t: Int): DataFrame =
+    regs.groupBy(col("node"))
+      .agg(count(lit(1)).as("present"),
+        sum(expr(HyperBall.pow2Scaled21Sql("r"))).as("sumpow"))
+      .select(expr(HyperBall.estMicroSql("present", "sumpow")).as("est_micro"))
+      .agg(count(lit(1)).as("n_nodes"),
+        sum(col("est_micro")).as("nf_micro"))
+      .select(lit(t).as("t"), col("n_nodes"),
+        (col("nf_micro") / lit(1e6)).as("nf_est"),
+        graft.functions.ExactRound.microMean6(col("nf_micro"),
+          col("n_nodes")).as("avg_ball_est"))
 
   test("estimated neighborhood function tracks the exact ball census") {
     val canon = KGraph.canonicalMaterialized(spark, sf)
@@ -34,11 +65,11 @@ class HyperBallSpec extends SparkSpec {
 
     var regs = HyperBall.registers0(nodes)
     val est = scala.collection.mutable.ArrayBuffer(
-      HyperBall.estimateRow(regs, 0).collect()(0)
+      estimateRow(regs, 0).collect()(0)
         .getAs[Double]("nf_est"))
     for (t <- 1 to 3) {
-      regs = HyperBall.mergeRound(regs, canon)
-      est += HyperBall.estimateRow(regs, t).collect()(0)
+      regs = mergeRound(regs, canon)
+      est += estimateRow(regs, t).collect()(0)
         .getAs[Double]("nf_est")
     }
 
@@ -60,15 +91,15 @@ class HyperBallSpec extends SparkSpec {
       .unionByName(canon.select(col("b").as("node"))).distinct()
     var sparse = HyperBall.registers0(nodes)
     var piv = HyperBall.registers0Pivoted(nodes)
-    def rows(df: org.apache.spark.sql.DataFrame) =
+    def rows(df: DataFrame) =
       df.collect().map(_.toSeq).toSeq
     assert(rows(HyperBall.estimateRowPivoted(piv, 0)) ==
-      rows(HyperBall.estimateRow(sparse, 0)))
+      rows(estimateRow(sparse, 0)))
     for (t <- 1 to 3) {
-      sparse = HyperBall.mergeRound(sparse, canon)
+      sparse = mergeRound(sparse, canon)
       piv = HyperBall.mergeRoundPivoted(piv, canon)
       assert(rows(HyperBall.estimateRowPivoted(piv, t)) ==
-        rows(HyperBall.estimateRow(sparse, t)),
+        rows(estimateRow(sparse, t)),
         s"pivoted/sparse estimates diverge at t=$t")
     }
   }

@@ -195,15 +195,17 @@ class IterationShapeSpec extends SparkSpec {
     // two-triangle-sharing-an-edge graph peels in TWO (the shared
     // edge's support decays to 0 after round 1 — KTrussSpec's cascade
     // case). The stage difference is the honest stage budget of ONE
-    // live-frontier round (measured 12 with AQE on: the frontier x
+    // live-frontier round (measured 16 with AQE on: the frontier x
     // adjacency triangle enumeration, the dead-triangle dedup + delta
     // aggregate, the support/alive update and its checkpoint, whose
     // job also counts the next round's drops — many tiny stages, each
-    // frontier-sized). The failure this guards is the q192 one:
-    // a lineage edit that re-executes PRIOR rounds inside later ones
-    // is quadratic in rounds and blows the band immediately. (Stage
-    // COUNT cannot distinguish census-sized work from frontier-sized
-    // work — that regression is caught by the bench floor instead.)
+    // frontier-sized). Every peel round takes this cascade, whatever
+    // share of the edges it drops (here 3 of 3, 4 of 5 and 1 of 1).
+    // The failure this guards is the q192 one: a lineage edit that
+    // re-executes PRIOR rounds inside later ones is quadratic in
+    // rounds and lands at >= 2x the pin. (Stage COUNT cannot
+    // distinguish census-sized work from frontier-sized work — that
+    // regression is caught by the bench floor instead.)
     def edges(rows: Seq[(Long, Long)]) =
       rows.toDF("a", "b").localCheckpoint()
     val oneRound = edges(Seq((1L, 2L), (1L, 3L), (2L, 3L)))
@@ -220,7 +222,7 @@ class IterationShapeSpec extends SparkSpec {
     }
     val delta = s2 - s1
     info(s"stages: 1-round graph=$s1, 2-round graph=$s2, cascade-round delta=$delta")
-    assert(delta >= 5 && delta <= 60,
+    assert(delta >= 5 && delta <= 32,
       s"per-cascade-round stage delta drifted: $delta (1-round $s1, 2-round $s2)")
   }
 
@@ -233,25 +235,40 @@ class IterationShapeSpec extends SparkSpec {
     // the checkpoint (which also counts the new level) = 3 stages. The
     // failure this guards is a per-hop materialization added back (an
     // isEmpty probe, a separately checkpointed level, a distinct or a
-    // visited anti-join): each adds at least one stage per hop.
+    // visited anti-join): each adds at least one stage per hop. The
+    // same chain pins q71/q72's path walk (the same kernel, carrying a
+    // rendered path) and q63's chain counting (a level is one
+    // checkpointed left-outer join and one checkpointed frontier
+    // aggregate, whose job also counts the frontier).
     val chain = (0 until 11).map(i => (f"n$i%02d", f"n${i + 1}%02d"))
       .toDF("node_id", "next_id").localCheckpoint()
     val head = Seq("n00").toDF("node_id")
-    def hops(n: Int): Int = {
-      var reached = 0L
-      val s = submittedStages {
-        reached = GraphOps.multiHop(chain, head, n, preOriented = true)
-          .count()
+    def perHop(rows: Int => Long, want: Int => Long): Double = {
+      def hops(n: Int): Int = {
+        var got = 0L
+        val s = submittedStages { got = rows(n) }
+        assert(got == want(n), s"$n hops should give ${want(n)} rows, got $got")
+        s
       }
-      assert(reached == n + 1, s"$n hops should reach ${n + 1} nodes, got $reached")
-      s
+      hops(2) // warm
+      val (s3, s5) = (hops(3), hops(5))
+      info(s"stages: 3 hops=$s3, 5 hops=$s5, per-hop delta=${(s5 - s3) / 2.0}")
+      (s5 - s3) / 2.0
     }
-    hops(2) // warm
-    val (s3, s5) = (hops(3), hops(5))
-    val delta = (s5 - s3) / 2.0
-    info(s"stages: 3 hops=$s3, 5 hops=$s5, per-hop delta=$delta")
-    assert(delta >= 1 && delta <= 3,
-      s"per-hop stage delta drifted: $delta (3-hop $s3, 5-hop $s5)")
+    val bfs = perHop(n =>
+      GraphOps.multiHop(chain, head, n, preOriented = true).count(), _ + 1L)
+    val paths = perHop(n => GraphOps.multiHopPaths(chain, head, n,
+      preOriented = true, nodesOnly = true).count(), _ + 1L)
+    // the 11-edge chain is longer than either cap: no complete chain
+    val counts = perHop(n => GraphOps.chainCounts(chain, maxLen = n,
+      preOriented = true).count(), _ => 0L)
+    assert(bfs >= 1 && bfs <= 3, s"multiHop per-hop stage delta drifted: $bfs")
+    assert(paths >= 1 && paths <= 3,
+      s"multiHopPaths per-hop stage delta drifted: $paths")
+    // measured 3 (multiHop), 3 (multiHopPaths) and 4 (chainCounts); an
+    // emptiness probe per hop read 6 and 5
+    assert(counts >= 1 && counts <= 4,
+      s"chainCounts per-level stage delta drifted: $counts")
   }
 
   test("q338 localMaxMatching: stage count grows by a pinned per-round delta") {

@@ -2,12 +2,14 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.engine.Lineage.LineageOps
 import graft.graph.GraphAnalytics
 
 /** Parity pin for the live-frontier k-truss peel: the incremental
   * support maintenance in [[GraphAnalytics.kTrussPeel]] must produce
-  * EXACTLY the recount form's output — same layers, same rounds — on
-  * every graph, because q293's oracle runs the full-recount unroll.
+  * EXACTLY the recount form's output ([[kTrussPeelRecount]] below) —
+  * same layers, same rounds — on every graph, because q293's oracle
+  * runs the full-recount unroll.
   * The dangerous shapes: a triangle losing 2–3 edges in one round
   * (must be charged once, not twice), a support row decayed to zero
   * (must still peel next round), and cascades deeper than one round.
@@ -24,9 +26,40 @@ class KTrussSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
         r.getBoolean(3))).toSet
 
+  /** The per-round FULL-RECOUNT peel — one degree-ordered edge-support
+    * census over the shrinking edge list every round: the direct
+    * executable of the oracle's unrolled-CTE contract. */
+  private def kTrussPeelRecount(canon: DataFrame, k: Int,
+      maxRounds: Int): (DataFrame, Int) = {
+    var alive = canon.truncateLineage()
+    var peeled: DataFrame = null
+    var rounds = 0
+    var converged = false
+    while (!converged && rounds < maxRounds) {
+      rounds += 1
+      val sup = GraphAnalytics.edgeSupport(alive)
+      val drop = alive.join(sup, Seq("a", "b"), "left")
+        .filter(coalesce(col("support"), lit(0L)) < k - 2)
+        .select(col("a"), col("b"), lit(rounds).as("layer"))
+        .truncateLineage()
+      if (drop.isEmpty) {
+        converged = true
+        rounds -= 1
+      } else {
+        peeled = if (peeled == null) drop else peeled.unionByName(drop)
+        alive = alive.join(drop.select(col("a"), col("b")),
+          Seq("a", "b"), "left_anti").truncateLineage()
+      }
+    }
+    val live = alive.select(col("a"), col("b"), lit(0).as("layer"))
+    val all =
+      if (peeled == null) live else live.unionByName(peeled)
+    (all.withColumn("in_truss", col("layer") === 0), rounds)
+  }
+
   private def assertParity(edges: DataFrame, k: Int, cap: Int): Unit = {
     val (inc, rInc) = GraphAnalytics.kTrussPeel(edges, k, cap)
-    val (rec, rRec) = GraphAnalytics.kTrussPeelRecount(edges, k, cap)
+    val (rec, rRec) = kTrussPeelRecount(edges, k, cap)
     assert(rInc == rRec, s"round counts differ: inc=$rInc rec=$rRec")
     assert(board(inc) == board(rec), "peel boards differ")
   }
