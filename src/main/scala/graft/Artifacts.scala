@@ -22,15 +22,11 @@ object Artifacts {
 
   /** In build order: an artifact's dependencies come before it. */
   val all: Seq[Artifact] = Seq(
+    kgraph("kgraph.lexedges")(KGraph.lexEdgesMaterialized),
     kgraph("kgraph.edges")(KGraph.materialized),
-    kgraph("kgraph.oriented.in")(
-      KGraph.orientedMaterialized(_, _, GraphOps.Incoming)),
-    kgraph("kgraph.oriented.out")(
-      KGraph.orientedMaterialized(_, _, GraphOps.Outgoing)),
+    kgraph("kgraph.canonical")(KGraph.canonicalMaterialized),
     kgraph("kgraph.oriented.both")(
       KGraph.orientedMaterialized(_, _, GraphOps.Both)),
-    kgraph("kgraph.canonical")(KGraph.canonicalMaterialized),
-    kgraph("kgraph.lexedges")(KGraph.lexEdgesMaterialized),
     kgraph("kgraph.rankedges")(KGraph.rankEdgesMaterialized),
     kgraph("kgraph.nodeset")(KGraph.nodeSetMaterialized),
     kgraph("kgraph.canonlex")(KGraph.canonicalLexMaterialized),

@@ -76,7 +76,7 @@ object Bench {
 
     "q226_cluster_cohesion" -> 0.59, // post-DedupIndex (was 10.85)
     // round-14 re-pin DOWN: reciprocity leg reads the cached edge
-    // artifact instead of re-deriving KGraph.edges
+    // artifact instead of re-deriving the edge list from the tables
     "q231_graph_mixing" -> 2.90,
     "q254_entity_resolution" -> 2.92,
     "q256_betweenness" -> 5.23,

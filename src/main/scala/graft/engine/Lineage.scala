@@ -74,13 +74,7 @@ object Lineage {
   }
 
   implicit final class LineageOps(private val df: DataFrame) extends AnyVal {
-    def truncateLineage(): DataFrame = {
-      val spark = df.sparkSession
-      val reliable =
-        spark.conf.get(ReliableKey, "false").toBoolean &&
-          spark.sparkContext.getCheckpointDir.isDefined
-      if (reliable) df.checkpoint() else df.localCheckpoint()
-    }
+    def truncateLineage(): DataFrame = cut(eager = true)
 
     /** [[truncateLineage]] that also counts, in the SAME job, the rows
       * of the checkpointed frame matching each of `conds` (through an
@@ -108,13 +102,16 @@ object Lineage {
       * an eager cut would execute the subtree even when the optimizer
       * proves it dead, a lazy one costs nothing unless referenced —
       * while still deduplicating multi-reference consumers. */
-    def truncateLineageLazy(): DataFrame = {
+    def truncateLineageLazy(): DataFrame = cut(eager = false)
+
+    /** The one checkpoint call: reliable when the session opts in and
+      * has a checkpoint dir, local otherwise. */
+    private def cut(eager: Boolean): DataFrame = {
       val spark = df.sparkSession
       val reliable =
         spark.conf.get(ReliableKey, "false").toBoolean &&
           spark.sparkContext.getCheckpointDir.isDefined
-      if (reliable) df.checkpoint(eager = false)
-      else df.localCheckpoint(eager = false)
+      if (reliable) df.checkpoint(eager) else df.localCheckpoint(eager)
     }
   }
 }

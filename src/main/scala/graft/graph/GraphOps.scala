@@ -64,10 +64,11 @@ object GraphOps {
       maxHops)
 
   /** The edge index a walk joins: (node_id, next_id, `extra`…).
-    * `preOriented`: edges is already (node_id, next_id, …) materialized
-    * and hash-partitioned (KGraph.orientedMaterialized — the analog of
-    * the reference's from/to edge indexes), so without a filter it is
-    * used as is. Otherwise the (filtered, oriented) edge set is
+    * `preOriented`: edges is already (node_id, next_id, …): a packed
+    * traversal index (KGraph.incomingLexMaterialized, bothLexMaterialized
+    * — the analog of the reference's from/to edge indexes) or
+    * KGraph.orientedMaterialized, so without a filter it is used as
+    * is. Otherwise the (filtered, oriented) edge set is
     * materialized once, spread by the join key, so no hop re-runs the
     * filter and orientation. The checkpoint keeps no partitioning a
     * hop's join can reuse (see Lineage: an AQE-coalesced shuffle output

@@ -12,48 +12,97 @@ import graft.engine.Lineage.LineageOps
   * shape as the reference's property graph (nodes + typed edges,
   * memory_core/model/relationship.py:19-47).
   *
-  * The identical edge list is expressible as a DuckDB WITH-clause
-  * (see GraphQueries.edgesSql) so every traversal result can be
-  * oracle-checked.
+  * Stored once, packed: the base artifact is the edge list on 64-bit
+  * lex ids ([[lexEdgesMaterialized]]) and every index derives from it;
+  * the edge properties are functions of the endpoint types, and the
+  * string forms are renderings of the base. The identical edge list is
+  * expressible as a DuckDB WITH-clause ([[edgesSql]]) so every
+  * traversal result can be oracle-checked.
   */
 object KGraph {
 
-  private def n(prefix: String, c: String) =
-    concat(lit(prefix + ":"), col(c).cast("string"))
+  private case class Arm(table: String, from: Char, fromKey: String,
+      to: Char, toKey: String, relation: String, confidence: Double,
+      distinct: Boolean = false)
 
-  /** Materialized edge table, built once per (session, sfDir) — the
-    * analog of the reference's persisted graph store (queries traverse a
-    * prebuilt graph; they don't re-derive it from raw tables). On a
-    * cluster this is the ingestion pipeline's index-build output, stored
-    * bucketed by from_id. Cached via the shared session-keyed artifact
-    * cache (graft.engine.SessionCache). */
+  /** The knowledge graph's six edge arms, declared once: each row of
+    * `table` (each distinct key pair, if `distinct`) links node
+    * `from:<fromKey>` to `to:<toKey>`. The arms pair distinct ordered
+    * type chars, so relation and confidence are functions of the
+    * endpoint types and the packed list loses nothing. [[edgesSql]]
+    * states the same list independently, for the oracle. */
+  private val arms: Seq[Arm] = Seq(
+    Arm("orders", 'o', "o_orderkey", 'c', "o_custkey", "placed_by", 1.0),
+    Arm("customer", 'c', "c_custkey", 'n', "c_nationkey", "located_in", 0.9),
+    Arm("supplier", 's', "s_suppkey", 'n', "s_nationkey", "located_in", 0.9),
+    Arm("nation", 'n', "n_nationkey", 'r', "n_regionkey", "part_of", 0.95),
+    Arm("lineitem", 'o', "l_orderkey", 'p', "l_partkey", "contains", 0.8,
+      distinct = true),
+    Arm("lineitem", 'p', "l_partkey", 's', "l_suppkey", "supplied_by", 0.7,
+      distinct = true))
+  require(arms.map(a => (a.from, a.to)).distinct.size == arms.size,
+    "KGraph arms must pair distinct ordered type chars")
+
+  /** The one base of the knowledge graph: the packed lex edge list
+    * (from_id, to_id), built once per (session, sfDir) from the
+    * tables' integer keys by arithmetic ([[encodeKeyLex]]) — no id
+    * string is built or parsed. Every other KGraph artifact and view
+    * derives from it. */
+  def lexEdgesMaterialized(spark: SparkSession, dir: String): DataFrame =
+    SessionCache.getOrBuild(spark, s"kgraph|$dir|lexedges")(
+      arms.map { a =>
+        val keys = Tables.load(spark, dir, a.table)
+          .select(col(a.fromKey).as("f"), col(a.toKey).as("t"))
+        (if (a.distinct) keys.distinct() else keys).select(
+          encodeKeyLex(a.from, col("f")).as("from_id"),
+          encodeKeyLex(a.to, col("t")).as("to_id"))
+      }.reduce(_ unionByName _).truncateLineage())
+
+  /** The typed edge list (from_id, to_id, relation_type, confidence)
+    * with string node ids ("o:<key>", "c:<key>", ...), materialized once
+    * per (session, sfDir): the rendering of [[lexEdgesMaterialized]]
+    * that the string-keyed catalog queries read. */
   def materialized(spark: SparkSession, dir: String): DataFrame =
     SessionCache.getOrBuild(spark, s"kgraph|$dir")(
-      edges(spark, dir).truncateLineage())
-
-  /** Direction-oriented edge tables, hash-partitioned on the traversal
-    * key and materialized once per (session, sfDir, direction) — the
-    * analog of the reference's from/to edge indexes
-    * (sqlite_storage.py:913-935: edges(from_node_id), edges(to_node_id)).
-    * BFS hops against these only shuffle the frontier side. */
-  def orientedMaterialized(spark: SparkSession, dir: String,
-      direction: GraphOps.Direction): DataFrame =
-    SessionCache.getOrBuild(spark, s"kgraph|$dir|$direction")(
-      GraphOps.oriented(materialized(spark, dir), direction)
-        .repartition(col("node_id"))
+      lexEdgesMaterialized(spark, dir).select(
+          decodeIdLex(col("from_id")).as("from_id"),
+          decodeIdLex(col("to_id")).as("to_id"),
+          relationType(col("from_id"), col("to_id")).as("relation_type"),
+          confidence(col("from_id"), col("to_id")).as("confidence"))
         .truncateLineage())
 
-  /** Canonical undirected edge list (a < b, deduped, self-loops
-    * dropped), hash-partitioned on `a` and materialized once per
-    * (session, sfDir) — the whole-graph-analytics index artifact
-    * (GraphAnalytics triangles / k-core / LPA all start from it), built
-    * at ingestion time exactly like the oriented traversal indexes
-    * above. */
+  /** [[materialized]] oriented for a traversal direction (node_id,
+    * next_id, relation_type, confidence): a view, except for
+    * [[GraphOps.Both]], which q11 and q72 walk unfiltered, materialized
+    * on node_id (on a view q72 ran 3.05 → 3.66 s at sf0.1). */
+  def orientedMaterialized(spark: SparkSession, dir: String,
+      direction: GraphOps.Direction): DataFrame = {
+    val o = GraphOps.oriented(materialized(spark, dir), direction)
+    if (direction != GraphOps.Both) o
+    else SessionCache.getOrBuild(spark, s"kgraph|$dir|$direction")(
+      o.repartition(col("node_id")).truncateLineage())
+  }
+
+  /** Canonical undirected string edge list (a < b, deduped, no self
+    * loops), materialized from [[materialized]] on `a` for q343, which
+    * ran 16.6 → 20.9 s at sf0.1 on a view decoded from
+    * [[canonicalLexMaterialized]]. */
   def canonicalMaterialized(spark: SparkSession, dir: String): DataFrame =
     SessionCache.getOrBuild(spark, s"kgraph|$dir|canonical")(
       GraphAnalytics.canonical(materialized(spark, dir))
         .repartition(col("a"))
         .truncateLineage())
+
+  /** 10^(12−len) as an exact long for len ∈ [1, 12], null otherwise —
+    * one lookup in a literal array, shared by both encoders and
+    * [[decodeIdLex]] so the codec directions cannot desynchronize
+    * (ADVICE r14). It replaced a 12-branch CASE whose generated code,
+    * in a stage that encodes and decodes, grew past the JVM's 64 KB
+    * method limit and fell back to the interpreter. */
+  private val lexScales: Seq[Long] =
+    (1 to 12).map(l => math.pow(10, 12 - l).toLong)
+  private def lexScale(len: Column): Column =
+    get(typedLit(lexScales), len.cast("int") - 1)
 
   /** STRING-ORDER-PRESERVING id ↔ long codec (round 14), the one
     * packed form of a node id. Packing by numeric value would break
@@ -69,38 +118,63 @@ object KGraph {
     * len ≤ 12 < 16, so (prefix, f, len) packs lexicographically into
     * one non-negative long. Ids whose numeral exceeds 12 digits raise
     * rather than mis-order (ids reach ~2×10^8 at sf2 — 10^12 is
-    * 4,000× headroom). KGraphCodecSpec pins order-preservation + roundtrip. */
-  /** 10^(12−len) as an exact long for len ∈ [1, 12], null otherwise —
-    * one lookup in a literal array, shared by [[encodeIdLex]] and
-    * [[decodeIdLex]] so the two codec directions cannot desynchronize
-    * (ADVICE r14). It replaced a 12-branch CASE whose generated code,
-    * in a stage that encodes and decodes, grew past the JVM's 64 KB
-    * method limit and fell back to the interpreter. */
-  private val lexScales: Seq[Long] =
-    (1 to 12).map(l => math.pow(10, 12 - l).toLong)
-  private def lexScale(len: Column): Column =
-    get(typedLit(lexScales), len.cast("int") - 1)
+    * 4,000× headroom). KGraphCodecSpec pins order-preservation + roundtrip.
+    *
+    * The one packing expression of both encoders: `t` the type char's
+    * code, `f` the padded numeral num·10^(12−len). */
+  private def packLex(t: Column, f: Column, len: Column): Column =
+    t * lit(1L << 44) + f * lit(16L) + len
 
   private[graft] def encodeIdLex(c: Column): Column = {
     val num = c.substr(lit(3), length(c)).cast("long")
     val len = (length(c) - 2).cast("long")
-    val scale = lexScale(len)
+    val f = num * lexScale(len)
     // canonical-numeral guard (ADVICE r14): Spark's string→long cast
     // tolerates leading zeros, a '+' sign and surrounding whitespace,
     // all of which this codec would silently mis-order ("c:007" would
     // decode to "c:7"). A numeral is canonical iff num ≥ 10^(len−1)
-    // — equivalently num·scale ≥ 10^11, reusing the product the
-    // encoding needs anyway (no per-row string construction in this
-    // hot path); len = 1 is special-cased because "0" is canonical.
+    // — equivalently f ≥ 10^11, reusing the product the encoding needs
+    // anyway (no per-row string construction in this hot path);
+    // len = 1 is special-cased because "0" is canonical.
     // No overflow: num < 10^len (len chars), so num·10^(12−len) < 10^13.
     when(num.isNotNull && num >= 0L && len <= 12L &&
-        (len === 1L || num * scale >= lit(100000000000L)),
-      ascii(substring(c, 1, 1)).cast("long") * lit(1L << 44) +
-        num * scale * lit(16L) + len)
+        (len === 1L || f >= lit(100000000000L)),
+      packLex(ascii(substring(c, 1, 1)).cast("long"), f, len))
       .otherwise(raise_error(concat(
         lit("KGraph.encodeIdLex: non-canonical or out-of-range numeral" +
           " (leading zeros/sign/whitespace, or outside [0, 10^12)): "), c)))
   }
+
+  /** The packed LEX id of node "t:<key>" straight from an integer key
+    * column: equals `encodeIdLex` of the rendered id, with the numeral's
+    * digit count read off comparisons against powers of ten — no string
+    * is built or parsed. A key outside [0, 10^12), or null, raises. */
+  private[graft] def encodeKeyLex(t: Char, key: Column): Column = {
+    val num = key.cast("long")
+    val len = lexScales.init.foldLeft(lit(1L))((n, p) =>
+      n + (num >= lit(p)).cast("long"))
+    when(num.isNotNull && num >= 0L && num < lit(1000000000000L),
+      packLex(lit(t.toLong), num * lexScale(len), len))
+      .otherwise(raise_error(format_string(
+        s"KGraph.encodeKeyLex: '$t' key %s is null or outside [0, 10^12)",
+        key)))
+  }
+
+  /** The value `v` of the arm an edge (from, to) of packed ids belongs
+    * to, read off its endpoint type chars. */
+  private def byArm(from: Column, to: Column)(v: Arm => Any): Column = {
+    def is(a: Arm) = lexTypeIs(from, a.from) && lexTypeIs(to, a.to)
+    arms.tail.foldLeft(when(is(arms.head), lit(v(arms.head))))((c, a) =>
+      c.when(is(a), lit(v(a))))
+  }
+
+  /** relation_type of the packed edge (from, to). */
+  private[graft] def relationType(from: Column, to: Column): Column =
+    byArm(from, to)(_.relation)
+
+  /** confidence (a double) of the packed edge (from, to). */
+  private[graft] def confidence(from: Column, to: Column): Column =
+    byArm(from, to)(_.confidence)
 
   /** Node-type test on a packed LEX id without decoding: the layout
     * puts ascii(type char) at bits 44+ — `lexTypeIs(id, 's')` ⟺
@@ -177,38 +251,17 @@ object KGraph {
     * words; guide §2.3 — the q193/q268 lever, which won ×1.4 at sf1.0
     * on the same frame shape). The LEX codec keeps string order, so
     * (rank DESC, node_id) top-k cuts are isomorphic; consumers decode
-    * their ≤100 output rows after the LIMIT. Consumers that mix in
-    * per-call string-keyed frames (q233's weighted edges) must encode
-    * them the same way. */
-  /** The encoded edge list is MATERIALIZED before the index build
-    * fans it out (outdeg aggregate + join + repartition = three
-    * consumers): left as a view, the optimizer collapses the encode
-    * projection into every consumer and pushes the codec's isnotnull
-    * constraints into the join — the same
-    * expression-in-join-stage pathology the round-15 dedup work
-    * measured at ~50×; the packed build read ~185 s at sf1.0 as a
-    * view vs seconds materialized. One encode pass, then long-only
-    * ops. */
-  def lexEdgesMaterialized(spark: SparkSession, dir: String): DataFrame =
-    SessionCache.getOrBuild(spark, s"kgraph|$dir|lexedges")(
-      materialized(spark, dir).select(
-        encodeIdLex(col("from_id")).as("from_id"),
-        encodeIdLex(col("to_id")).as("to_id")).truncateLineage())
-
+    * their ≤100 output rows after the LIMIT. */
   def rankEdgesMaterialized(spark: SparkSession, dir: String): DataFrame =
     SessionCache.getOrBuild(spark, s"kgraph|$dir|rankedges")(
       PageRank.edgeIndex(lexEdgesMaterialized(spark, dir)).truncateLineage())
 
-  /** PACKED (encodeIdLex) canonical undirected edge list, materialized
-    * once per (session, sfDir) — round 15: q268/q192/q193 each encoded
-    * the canonical artifact per call (2·|E| codec
-    * evaluations, plus a per-call lazy checkpoint in q268). The lex
-    * codec is order-ISOMORPHIC and injective, so canonical() over the
-    * encoded edge list IS the encoded canonical list (least/greatest
-    * commute with the order-preserving map, ≠ and DISTINCT with
-    * injectivity) — consumers' semantics are unchanged
-    * (KGraphCodecSpec pins the set equality). Built from [[lexEdgesMaterialized]]
-    * (already materialized): one distinct, no codec in the plan. */
+  /** PACKED canonical undirected edge list (a < b, deduped, self-loops
+    * dropped), hash-partitioned on `a` and materialized once per
+    * (session, sfDir) — the whole-graph-analytics index (triangles,
+    * k-core, LPA). One distinct over [[lexEdgesMaterialized]], no codec
+    * in the plan: the codec is order-isomorphic and injective, so this
+    * is the encoded string canonical list (KGraphCodecSpec pins it). */
   def canonicalLexMaterialized(spark: SparkSession, dir: String)
       : DataFrame =
     SessionCache.getOrBuild(spark, s"kgraph|$dir|canonlex")(
@@ -218,19 +271,13 @@ object KGraph {
 
   /** PACKED oriented traversal indexes (node_id, next_id) for the BFS
     * family, hash-partitioned on node_id and materialized once per
-    * (session, sfDir) — round 15: q12's 3-hop incoming walk and q14's
-    * both-directions shortest-path BFS shuffled string-keyed frontier
-    * frames every hop (the frame IS the key — guide §2.3, the
-    * q63/q249/q258 lever, which won ×1.4–2.1 at sf1.0 on the same
-    * shape). The KG's (from_id, to_id) pairs are globally unique
-    * (every edge arm pairs a distinct ordered type-prefix pair), so
-    * the directed edge set equals the typed edge list's projection
-    * with no duplicate pairs, and a traversal over it reaches exactly
-    * the rows the string oriented index reaches (multiHop merges each
-    * level per node either way). Outgoing traversals read
-    * [[rankEdgesMaterialized]] (same rows, already packed and
-    * partitioned on from_id); these two cover the other directions.
-    * Built from [[lexEdgesMaterialized]] — shuffle-only, no codec in the plan. */
+    * (session, sfDir) — round 15: string-keyed frontier frames cost
+    * q12/q14 every hop (guide §2.3). The KG's (from_id, to_id) pairs
+    * are globally unique (every arm pairs a distinct ordered type
+    * pair), so a walk over these reaches exactly the rows a walk over
+    * the string oriented view reaches. Outgoing walks read
+    * [[rankEdgesMaterialized]] (same rows, partitioned on from_id).
+    * Shuffle-only over [[lexEdgesMaterialized]], no codec in the plan. */
   def incomingLexMaterialized(spark: SparkSession, dir: String)
       : DataFrame =
     SessionCache.getOrBuild(spark, s"kgraph|$dir|inlex")(
@@ -259,37 +306,9 @@ object KGraph {
       PageRank.nodes(lexEdgesMaterialized(spark, dir))
         .repartition(col("node_id")).truncateLineage())
 
-  /** Typed edges: from_id, to_id, relation_type, confidence. */
-  def edges(spark: SparkSession, dir: String): DataFrame = {
-    val orders = Tables.load(spark, dir, "orders")
-    val customer = Tables.load(spark, dir, "customer")
-    val supplier = Tables.load(spark, dir, "supplier")
-    val nation = Tables.load(spark, dir, "nation")
-    val lineitem = Tables.load(spark, dir, "lineitem")
-
-    orders.select(n("o", "o_orderkey").as("from_id"),
-        n("c", "o_custkey").as("to_id"),
-        lit("placed_by").as("relation_type"), lit(1.0).as("confidence"))
-      .unionByName(customer.select(n("c", "c_custkey").as("from_id"),
-        n("n", "c_nationkey").as("to_id"),
-        lit("located_in").as("relation_type"), lit(0.9).as("confidence")))
-      .unionByName(supplier.select(n("s", "s_suppkey").as("from_id"),
-        n("n", "s_nationkey").as("to_id"),
-        lit("located_in").as("relation_type"), lit(0.9).as("confidence")))
-      .unionByName(nation.select(n("n", "n_nationkey").as("from_id"),
-        n("r", "n_regionkey").as("to_id"),
-        lit("part_of").as("relation_type"), lit(0.95).as("confidence")))
-      .unionByName(lineitem.select(n("o", "l_orderkey").as("from_id"),
-        n("p", "l_partkey").as("to_id")).distinct()
-        .select(col("from_id"), col("to_id"),
-          lit("contains").as("relation_type"), lit(0.8).as("confidence")))
-      .unionByName(lineitem.select(n("p", "l_partkey").as("from_id"),
-        n("s", "l_suppkey").as("to_id")).distinct()
-        .select(col("from_id"), col("to_id"),
-          lit("supplied_by").as("relation_type"), lit(0.7).as("confidence")))
-  }
-
-  /** The same edge list as a DuckDB CTE body (oracle side). */
+  /** The same edge list as a DuckDB CTE body (oracle side). A literal,
+    * stated apart from [[arms]], so the oracle does not share the
+    * engine's declaration. */
   val edgesSql: String =
     """edges AS (
       |  SELECT 'o:'||o_orderkey AS from_id, 'c:'||o_custkey AS to_id,

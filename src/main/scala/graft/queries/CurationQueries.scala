@@ -171,21 +171,12 @@ object CurationQueries {
   //          literals), so every per-edge share quantizes identically
   //          cross-engine.
   private def q233(s: SparkSession, dir: String): DataFrame = {
-    import graft.engine.Lineage.LineageOps
-    // the packed node-set artifact keys the iteration, so the per-call
-    // weighted edge frame must speak the same packed keyspace; output
-    // decodes after the (order-isomorphic) top-k cut, like q147. The
-    // encoded frame is MATERIALIZED before weightedRanks fans it out
-    // (weight normalizer aggregate + join) — left as a view, the
-    // optimizer collapses the 12-branch codec into both consumers and
-    // the join constraints (the round-15 expression-in-join pathology;
-    // measured 33.2 s vs 27.3 s string at sf1.0 without the barrier)
-    val enc = KGraph.materialized(s, dir).select(
-        KGraph.encodeIdLex(col("from_id")).as("from_id"),
-        KGraph.encodeIdLex(col("to_id")).as("to_id"),
-        col("confidence"))
-      .truncateLineage()
-    PageRank.weightedRanks(enc, PrIters,
+    // the packed base edge list with each edge's confidence read off
+    // its endpoint types; weightedRanks materializes its own index.
+    // Output decodes after the (order-isomorphic) top-k cut, like q147
+    val e = KGraph.lexEdgesMaterialized(s, dir)
+    PageRank.weightedRanks(e.withColumn("confidence",
+          KGraph.confidence(col("from_id"), col("to_id"))), PrIters,
         nodeSet = Some(KGraph.nodeSetMaterialized(s, dir)))
       .orderBy(col("rank").desc, col("node_id"))
       .limit(PrTop)

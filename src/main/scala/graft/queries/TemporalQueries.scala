@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.engine.Lineage.LineageOps
 import graft.temporal.TemporalOps
 import graft.text.{TextFunctions => TF}
 
@@ -1236,7 +1237,7 @@ object TemporalQueries {
   private def q275(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.ExactRound
     val d = daily(s, dir).select(col("k"), col("idx"), col("cnt"))
-      .localCheckpoint()
+      .truncateLineage()
     val pairs = d.select(col("k"), col("idx").as("i"), col("cnt").as("ci"))
       .join(d.select(col("k"), col("idx").as("j"), col("cnt").as("cj")),
         Seq("k"))
@@ -1304,7 +1305,7 @@ object TemporalQueries {
   private def q276(s: SparkSession, dir: String): DataFrame = {
     val W = org.apache.spark.sql.expressions.Window
     val d = daily(s, dir).select(col("k"), col("idx"), col("cnt"))
-      .localCheckpoint()
+      .truncateLineage()
     val slopes = d.select(col("k"), col("idx").as("i"), col("cnt").as("ci"))
       .join(d.select(col("k"), col("idx").as("j"), col("cnt").as("cj")),
         Seq("k"))

@@ -2,6 +2,7 @@ package graft.security
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.graph.GraphOps
 
 /** Privacy-level access control re-expressed as data-plane set algebra.
   *
@@ -29,8 +30,8 @@ import org.apache.spark.sql.functions._
   * every parent's permissions transitively, with a visited-set guard on
   * cycles (`memory_core/security/rbac.py:622-659`
   * get_role_permissions). [[roleClosure]] computes the same reachability
-  * as an iterated equi-join to fixpoint; `distinct` plays the visited
-  * set, so cyclic hierarchies converge instead of looping.
+  * as a keyed BFS; the frame of reached roles plays the visited set, so
+  * cyclic hierarchies converge instead of looping.
   *
   * Scale contract: role tables are principal metadata — dozens to
   * thousands of rows, never data-scale — so the closure loop (bounded
@@ -42,32 +43,22 @@ object AccessControl {
 
   /** Transitive role reachability: (role_id, ancestor) pairs, reflexive.
     * roles: (role_id, permissions array, parent_roles array).
-    * Iterates reach ⋈ parent-edges to fixpoint; cycle-safe via distinct.
+    * A BFS over the parent edges keyed by the starting role
+    * (`GraphOps.bfsFrame`): it stops at its first empty level, which is
+    * where the hierarchy stops growing, and a reached role is never
+    * re-entered, so cyclic hierarchies converge.
+    *
+    * Like every `bfsFrame` walk it leaves one checkpoint per level, of
+    * tiny role metadata: a long-lived session that calls it per request
+    * frees them with `Lineage.releaseTransient`, as Bench, Profile and
+    * ScaleCheck do after each query.
     */
   def roleClosure(roles: DataFrame): DataFrame = {
-    val edges = roles
-      .select(col("role_id"), explode(col("parent_roles")).as("parent"))
-    var reach = roles.select(col("role_id"), col("role_id").as("ancestor"))
-      .distinct().cache()
-    var n = reach.count()
-    var grew = true
-    while (grew) {
-      val next = reach
-        .unionByName(
-          reach.join(broadcast(edges.withColumnRenamed("role_id", "via")),
-              reach("ancestor") === col("via"))
-            .select(reach("role_id"), col("parent").as("ancestor")))
-        .distinct().cache()
-      val m = next.count() // materializes next before the unpersist below
-      reach.unpersist()
-      grew = m > n
-      reach = next
-      n = m
-    }
-    // hand back an uncached frame: recomputing the bounded-depth join
-    // chain is cheap, and catalog queries re-run must not accumulate
-    // storage entries in long-lived sessions
-    reach.unpersist()
+    val parents = roles.select(col("role_id").as("node_id"),
+      explode(col("parent_roles")).as("next_id"))
+    val start = roles.select(col("role_id"), col("role_id").as("node_id"))
+    GraphOps.bfsFrame(parents, start, Int.MaxValue, keys = Seq("role_id"))
+      .select(col("role_id"), col("node_id").as("ancestor"))
   }
 
   /** (role_id, permission_id): each role's own plus inherited

@@ -7,8 +7,8 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.rng.Seed
 import graft.graph.{GraphAnalytics, GraphOps, KGraph}
 
-/** Differential checks of the carried-frame graph kernels and the
-  * triangle census against naive driver-side references, on small
+/** Differential checks of the carried-frame graph kernels, the k-core
+  * peel and the triangle census against naive driver-side references, on small
   * adversarial graphs drawn by ScalaCheck from a fixed seed:
   * self-loops, duplicate edges, isolated seeds, disconnected parts,
   * tied weights, and ids whose numerals straddle 10^k digit boundaries
@@ -17,7 +17,7 @@ import graft.graph.{GraphAnalytics, GraphOps, KGraph}
   *
   * Each property case is a BATCH of independent graphs, each under its
   * own id type prefix, run as one disjoint union: BFS, local-dominance
-  * matching and triangles never cross components, so one Spark run
+  * matching, the k-core peel and triangles never cross components, so one Spark run
   * checks every graph of the batch and the spec stays a few seconds of
   * Tier-1.
   */
@@ -200,6 +200,52 @@ class GraphKernelDiffSpec extends SparkSpec {
       .toDF("f", "t").select(KGraph.encodeIdLex(col("f")).as("from_id"),
         KGraph.encodeIdLex(col("t")).as("to_id")))
     assert(censusMatches[Long](canon))
+  }
+
+  /** Naive synchronous k-core peel, the q192 contract: each round drops
+    * every node of degree < k in the surviving edges, with its edges.
+    * Returns node -> layer (the dropping round; 0 for an endpoint of an
+    * edge that survives) and the number of rounds that dropped a node.
+    * A node whose edges all leave with its neighbours leaves the output,
+    * as in the oracle. */
+  private def refKCore(edges: Seq[(String, String)], k: Int)
+      : (Map[String, Int], Int) = {
+    var alive = edges
+    var layer = Map.empty[String, Int]
+    var rounds = 0
+    var done = false
+    while (!done) {
+      val drop = (alive.map(_._1) ++ alive.map(_._2))
+        .groupMapReduce(identity)(_ => 1)(_ + _).filter(_._2 < k).keySet
+      done = drop.isEmpty
+      if (!done) {
+        rounds += 1
+        layer ++= drop.map(_ -> rounds)
+        alive = alive.filterNot(e => drop(e._1) || drop(e._2))
+      }
+    }
+    (layer ++ (alive.map(_._1) ++ alive.map(_._2)).map(_ -> 0), rounds)
+  }
+
+  test("kCorePeel == driver synchronous peel on packed ids, k in {2, 3}") {
+    check(Prop.forAllNoShrink(batchGen, Gen.oneOf(2, 3)) { (batch, k) =>
+      // canonical input (a < b in id order, distinct, no self-loops),
+      // the q192 contract
+      val canon = directed(batch).filter(e => e._1 != e._2)
+        .map { case (x, y) => if (x < y) (x, y) else (y, x) }.distinct
+      val (want, wantRounds) = refKCore(canon, k)
+      val (out, rounds) = GraphAnalytics.kCorePeel(canon.toDF("x", "y")
+        .select(KGraph.encodeIdLex(col("x")).as("a"),
+          KGraph.encodeIdLex(col("y")).as("b")), k)
+      val got = out.select(KGraph.decodeIdLex(col("node")), col("layer"),
+          col("in_core"))
+        .as[(String, Int, Boolean)].collect()
+      val ok = rounds == wantRounds && got.length == want.size &&
+        got.forall { case (v, l, c) => want.get(v).contains(l) && c == (l == 0) }
+      if (!ok) println(s"k-core MISMATCH k=$k ($rounds vs $wantRounds rounds) " +
+        s"on $canon")
+      ok
+    })
   }
 
   /** Naive synchronous local-dominance matching: per round, every alive

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.graph.{GraphAnalytics, KGraph}
 
@@ -10,6 +11,78 @@ import graft.graph.{GraphAnalytics, KGraph}
   * bit-for-bit — support is a per-undirected-edge count, so the
   * packing must not leak into the result. */
 class KGraphCodecSpec extends SparkSpec {
+
+  private def n(prefix: String, c: String) =
+    concat(lit(prefix + ":"), col(c).cast("string"))
+
+  /** The string edge list built straight from the tables, as the engine
+    * built it before the packed base: an independent reference for the
+    * packed base and everything derived from it. */
+  private def referenceEdges(spark: SparkSession, dir: String): DataFrame = {
+    val orders = Tables.load(spark, dir, "orders")
+    val customer = Tables.load(spark, dir, "customer")
+    val supplier = Tables.load(spark, dir, "supplier")
+    val nation = Tables.load(spark, dir, "nation")
+    val lineitem = Tables.load(spark, dir, "lineitem")
+
+    orders.select(n("o", "o_orderkey").as("from_id"),
+        n("c", "o_custkey").as("to_id"),
+        lit("placed_by").as("relation_type"), lit(1.0).as("confidence"))
+      .unionByName(customer.select(n("c", "c_custkey").as("from_id"),
+        n("n", "c_nationkey").as("to_id"),
+        lit("located_in").as("relation_type"), lit(0.9).as("confidence")))
+      .unionByName(supplier.select(n("s", "s_suppkey").as("from_id"),
+        n("n", "s_nationkey").as("to_id"),
+        lit("located_in").as("relation_type"), lit(0.9).as("confidence")))
+      .unionByName(nation.select(n("n", "n_nationkey").as("from_id"),
+        n("r", "n_regionkey").as("to_id"),
+        lit("part_of").as("relation_type"), lit(0.95).as("confidence")))
+      .unionByName(lineitem.select(n("o", "l_orderkey").as("from_id"),
+        n("p", "l_partkey").as("to_id")).distinct()
+        .select(col("from_id"), col("to_id"),
+          lit("contains").as("relation_type"), lit(0.8).as("confidence")))
+      .unionByName(lineitem.select(n("p", "l_partkey").as("from_id"),
+        n("s", "l_suppkey").as("to_id")).distinct()
+        .select(col("from_id"), col("to_id"),
+          lit("supplied_by").as("relation_type"), lit(0.7).as("confidence")))
+  }
+
+  private def msgs(t: Throwable): Seq[String] =
+    Option(t).toSeq.flatMap(x => x.getMessage +: msgs(x.getCause))
+
+  test("materialized == the reference string edge list row for row; " +
+    "encodeKeyLex == encodeIdLex of the rendered id") {
+    import spark.implicits._
+    val ref = referenceEdges(spark, sf)
+    val got = KGraph.materialized(spark, sf)
+    assert(got.schema.map(f => (f.name, f.dataType)) ==
+      ref.schema.map(f => (f.name, f.dataType)))
+    def rows(df: DataFrame) = df.as[(String, String, String, Double)]
+      .collect().toSeq.sorted
+    val want = rows(ref)
+    assert(want.nonEmpty)
+    assert(rows(got) == want)
+    // the integer encoder against the string encoder on every digit
+    // count and 10^k boundary, 0 through 10^12 − 1, under two types
+    val numerals = Seq(0L, 1L, 2L, 9L, 10L, 11L, 99L, 100L, 101L, 999L,
+      1000L, 99999L, 100000L, 999999999999L) ++
+      (1 to 11).flatMap(k => Seq(math.pow(10, k).toLong - 1,
+        math.pow(10, k).toLong))
+    Seq('c', 's').foreach { t =>
+      val pairs = numerals.toDF("k").select(
+          KGraph.encodeKeyLex(t, col("k")),
+          KGraph.encodeIdLex(concat(lit(s"$t:"), col("k").cast("string"))))
+        .as[(Long, Long)].collect()
+      pairs.foreach { case (a, b) => assert(a == b, s"'$t' key: $a != $b") }
+    }
+    // a key it cannot pack raises instead of mis-encoding
+    Seq(Some(1000000000000L), Some(-1L), None).foreach { k =>
+      val ex = intercept[Exception](Seq(k).toDF("k")
+        .select(KGraph.encodeKeyLex('c', col("k"))).collect())
+      assert(msgs(ex).exists(m => m != null && m.contains("encodeKeyLex")),
+        s"key $k did not raise")
+    }
+  }
 
   test("long-keyed census == string-keyed census on the real graph") {
     // the knowledge graph is multipartite by node type (o-c, c-n, s-n,
@@ -48,8 +121,6 @@ class KGraphCodecSpec extends SparkSpec {
     // raises past 12 digits instead of mis-ordering
     val e = intercept[Exception](Seq("c:1000000000000").toDF("id")
       .select(KGraph.encodeIdLex(col("id"))).collect())
-    def msgs(t: Throwable): Seq[String] =
-      Option(t).toSeq.flatMap(x => x.getMessage +: msgs(x.getCause))
     assert(msgs(e).exists(m => m != null && m.contains("encodeIdLex")))
     // non-canonical numerals Spark's cast tolerates but the codec would
     // silently mis-order (ADVICE r14): leading zeros, sign, whitespace
@@ -134,12 +205,13 @@ class KGraphCodecSpec extends SparkSpec {
   test("canonicalLexMaterialized == encodeIdLex(canonicalMaterialized) " +
     "as an edge set on the real graph") {
     // the shared packed canonical artifact (round 15) must be exactly
-    // the lex-encoded string canonical list: least/greatest commute
-    // with the order-preserving codec and DISTINCT with injectivity —
-    // q268/q192/q193/q231 all read it in place of a per-call encode
+    // the lex-encoded canonical list of the reference string edges:
+    // least/greatest commute with the order-preserving codec and
+    // DISTINCT with injectivity — q268/q192/q193/q231 all read it in
+    // place of a per-call encode
     val viaArtifact = KGraph.canonicalLexMaterialized(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val viaEncode = KGraph.canonicalMaterialized(spark, sf)
+    val viaEncode = GraphAnalytics.canonical(referenceEdges(spark, sf))
       .select(KGraph.encodeIdLex(col("a")).as("a"),
         KGraph.encodeIdLex(col("b")).as("b"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -153,13 +225,13 @@ class KGraphCodecSpec extends SparkSpec {
     "on the real graph") {
     // q12/q14 (round 15) walk these in place of the string oriented
     // indexes: each must hold exactly the encoded (node_id, next_id)
-    // pairs of the corresponding string orientation — the KG's
+    // pairs of the reference string edges' orientation — the KG's
     // (from, to) pairs are globally unique, so pair-set equality is
     // full traversal equivalence (multiHop merges each level per node)
-    def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+    def pairs(df: DataFrame): Set[(Long, Long)] =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     def encPairs(d: graft.graph.GraphOps.Direction): Set[(Long, Long)] =
-      pairs(KGraph.orientedMaterialized(spark, sf, d)
+      pairs(graft.graph.GraphOps.oriented(referenceEdges(spark, sf), d)
         .select(KGraph.encodeIdLex(col("node_id")),
           KGraph.encodeIdLex(col("next_id"))).distinct())
     val in = pairs(KGraph.incomingLexMaterialized(spark, sf))

@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * every `spark.graft.*` conf key that `src/main` reads. A dev knob added
   * for one measurement and left behind is a second code path the oracle,
   * the bench and the specs never run with; this spec makes adding one a
-  * deliberate edit here rather than a line nobody counts.
+  * deliberate edit here rather than a line nobody counts. It also pins
+  * that every lineage cut honours `spark.graft.reliableCheckpoints`.
   */
 class SettableOptionsSpec extends AnyFunSuite {
 
@@ -53,5 +54,18 @@ class SettableOptionsSpec extends AnyFunSuite {
       key.findAllIn(text) }.toSet
     assert(named == ConfKeys,
       s"added: ${named -- ConfKeys}; no longer named: ${ConfKeys -- named}")
+  }
+
+  test("no src/main file outside engine/Lineage.scala checkpoints directly") {
+    // a direct localCheckpoint()/checkpoint() ignores the session's
+    // reliable-checkpoint opt-in: every lineage cut goes through
+    // Lineage.LineageOps
+    val call = """localCheckpoint\(|\.checkpoint\(""".r
+    val lineage = Seq("engine", "Lineage.scala").mkString(File.separator)
+    val direct = sources.filterNot(_._1.endsWith(lineage)).flatMap {
+      case (path, text) => call.findAllMatchIn(text)
+        .map(m => s"$path:${text.take(m.start).count(_ == '\n') + 1}")
+    }
+    assert(direct.isEmpty, s"direct checkpoint calls: ${direct.mkString(", ")}")
   }
 }
