@@ -169,7 +169,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus.toString
     val spark = GraftSession.builder("graft-bench", Some(s"local[$cpus]"),
         cpus.toInt)
       .config("spark.ui.enabled", "false")

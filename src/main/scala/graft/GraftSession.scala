@@ -38,13 +38,16 @@ object GraftSession {
       org.apache.logging.log4j.Level.ERROR)
     catch { case _: Throwable => () }
 
-  /** The dev mains' session: local[SPARK_GRAFT_CPUS] (nproc when that
-    * is unset), UI off, graft SQL functions registered, WARN logging
-    * with the audited warnings quiet. */
+  /** The mains' core count: SPARK_GRAFT_CPUS, nproc when that is unset. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  /** The dev mains' session: local[N] with N = [[cpus]], UI off, graft SQL
+    * functions registered, WARN logging with the audited warnings
+    * quiet. */
   def local(appName: String): SparkSession = {
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors())
-    val spark = builder(appName, Some(s"local[$cpus]"), cpus)
+    val n = cpus
+    val spark = builder(appName, Some(s"local[$n]"), n)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     GraftExtensions.register(spark)

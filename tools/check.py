@@ -11,7 +11,7 @@ Usage: python3 tools/check.py [sfdir] [outdir] [--skip-verify] [names...]
 
 Dev tool only — not part of the shipped library.
 """
-import json, math, subprocess, sys, os
+import json, math, subprocess, sys, os, shutil, tempfile
 import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -113,11 +113,21 @@ def canon(cols, rows):
 _CON = None
 _OUTDIR = None
 
+# DuckDB spills to <cwd>/.tmp by default, with no cap but the free disk:
+# one runaway oracle once filled the disk with 19 GB and segfaulted its
+# worker, breaking the pool. Each worker spills to its own directory
+# under the run's scratch directory instead, capped at its share of this
+# budget, so such a query fails alone with DuckDB's out-of-temp-space
+# error and the other compares go on.
+TEMP_BUDGET_GB = 8
 
-def _init_worker(sfdir, outdir, threads=2):
+
+def _init_worker(sfdir, outdir, scratch, temp_gb, threads=2):
     global _CON, _OUTDIR
     _CON = duckdb.connect()
     _CON.execute("SET TimeZone='UTC'")
+    _CON.execute(f"SET temp_directory='{scratch}/{os.getpid()}'")
+    _CON.execute(f"SET max_temp_directory_size='{temp_gb}GiB'")
     # 2 threads per pooled worker (16 workers share the box); the
     # serial targeted path keeps DuckDB's all-cores default so a single
     # heavy oracle (q293's unrolled recount) isn't throttled
@@ -152,7 +162,8 @@ def _compare_one(item):
         dcols, dfams, drows = arrow_cols_rows(
             _CON.sql(sql).fetch_arrow_table())
     except Exception as e:
-        return name, f"error: {str(e)[:200]}", f"ERROR    {name}: {e}", \
+        tag = "TEMPFULL" if "max_temp_directory_size" in str(e) else "ERROR   "
+        return name, f"error: {str(e)[:200]}", f"{tag} {name}: {e}", \
             _board(False, False, False, None, None, str(e)[:500])
     sc, sr = canon(scols, srows)
     dc, dr = canon(dcols, drows)
@@ -218,16 +229,21 @@ def main():
     # Process pool over query names (round-10 verdict item: the full
     # 348-query board was ~15 min single-threaded). Tiny targeted runs
     # skip the pool — fork+init costs more than the compare.
-    if len(items) > 4:
-        import concurrent.futures as cf
-        workers = min(16, os.cpu_count() or 8)
-        with cf.ProcessPoolExecutor(
-                max_workers=workers, initializer=_init_worker,
-                initargs=(sfdir, outdir)) as pool:
-            results = list(pool.map(_compare_one, items, chunksize=4))
-    else:
-        _init_worker(sfdir, outdir, threads=None)
-        results = [_compare_one(it) for it in items]
+    scratch = tempfile.mkdtemp(prefix="graft-check-")
+    try:
+        if len(items) > 4:
+            import concurrent.futures as cf
+            workers = min(16, os.cpu_count() or 8)
+            with cf.ProcessPoolExecutor(
+                    max_workers=workers, initializer=_init_worker,
+                    initargs=(sfdir, outdir, scratch,
+                              TEMP_BUDGET_GB / workers)) as pool:
+                results = list(pool.map(_compare_one, items, chunksize=4))
+        else:
+            _init_worker(sfdir, outdir, scratch, TEMP_BUDGET_GB, threads=None)
+            results = [_compare_one(it) for it in items]
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
     ok = fail = 0
     statuses = {}
     board = {}
