@@ -9,8 +9,23 @@ import org.apache.spark.sql.SparkSession
   * in our similarity joins handles the key-skew AQE can't), shuffle
   * partition count tracks parallelism rather than the 200 default, and
   * graft's native SQL functions are registered up front.
+  *
+  * Generated code is compiled once per JVM, not once per session.
+  * Spark caches each compiled class under (context class loader, code),
+  * and with artifact isolation on, each session's tasks run under that
+  * session's own class loader, so every `newSession()` recompiled every
+  * class the JVM had already compiled. graft adds no session artifacts
+  * (no jars, files or classes), so isolation is off and all sessions
+  * share one loader. The cache holds [[CodegenCacheEntries]] classes,
+  * not Spark's 100, so a pass over the headliners does not evict its
+  * own classes (docs/TUNING.md, "Code generation across sessions").
   */
 object GraftSession {
+
+  /** `spark.sql.codegen.cache.maxEntries`: about 3× the 1,331 classes
+    * one JVM compiles with no cap over the 4 ingest builds and two
+    * passes of the 49 headliners at sf0.01. */
+  val CodegenCacheEntries = 4096
 
   def builder(appName: String = "graft", master: Option[String] = None,
       shufflePartitions: Int = Runtime.getRuntime.availableProcessors())
@@ -21,6 +36,9 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries",
+        CodegenCacheEntries.toString)
       .config("spark.sql.session.timeZone", "UTC")
     master.map(b.master).getOrElse(b)
   }

@@ -2,8 +2,10 @@ package graft
 
 import java.util.concurrent.atomic.AtomicLongArray
 import scala.collection.immutable.ListMap
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerTaskEnd}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 import graft.engine.{Lineage, QueryExplainer, SessionCache}
@@ -30,10 +32,12 @@ import graft.queries.{Catalog, Q}
   *
   * Each run is one record: wall seconds and the listener's counts of
   * jobs, tasks, executor run and GC time, disk and memory spill,
-  * shuffle-write time and bytes, and shuffle fetch wait. For each query
-  * the report prints the formatted executed plan and the QueryExplainer
-  * digest of its last run. The last stdout line is every record as one
-  * JSON object.
+  * shuffle-write time and bytes, and shuffle fetch wait. It also holds
+  * the classes Spark compiled during the run and the seconds spent
+  * compiling them: deltas of JVM-wide counters, so other work in the
+  * JVM during the run counts too. For each query the report prints the
+  * formatted executed plan and the QueryExplainer digest of its last
+  * run. The last stdout line is every record as one JSON object.
   */
 object Profile {
 
@@ -41,6 +45,7 @@ object Profile {
     * artifact build (empty for a query). */
   final case class Record(name: String, kind: String, run: Int,
       wallS: Double, counters: ListMap[String, Long],
+      codegenCompiles: Long, codegenS: Double,
       builds: Seq[(String, Double)])
 
   /** Resolved arguments: artifact names and groups, then queries. */
@@ -101,15 +106,20 @@ object Profile {
         : (T, Record) = {
       GraftBridge.drainListeners(sc)
       counters.take(): Unit
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val compileNs0 = CodeGenerator.compileTime
       val t0 = System.nanoTime()
       val out = body
       val wall = (System.nanoTime() - t0) / 1e9
       GraftBridge.drainListeners(sc)
-      (out, Record(name, kind, run, wall, counters.take(), Nil))
+      (out, Record(name, kind, run, wall, counters.take(),
+        CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0,
+        (CodeGenerator.compileTime - compileNs0) / 1e9, Nil))
     }
     def report(r: Record): Record = {
       println(f"[profile] ${r.name}%-28s run ${r.run}: ${r.wallS}%8.2f s " +
         r.counters.map { case (k, v) => s"$k=$v" }.mkString(" ") +
+        f" codegen_compiles=${r.codegenCompiles} codegen_s=${r.codegenS}%.2f" +
         r.builds.map { case (a, s) => f" $a=$s%.2fs" }.mkString)
       r
     }
@@ -167,6 +177,8 @@ object Profile {
       "records" -> records.map(r => ListMap[String, Any](
           "name" -> r.name, "kind" -> r.kind, "run" -> r.run,
           "wall_s" -> secs(r.wallS)) ++ r.counters ++
+        Seq("codegen_compiles" -> r.codegenCompiles,
+          "codegen_s" -> secs(r.codegenS)) ++
         (if (r.builds.isEmpty) Nil else Seq("builds" ->
           ListMap(r.builds.map { case (a, s) => a -> secs(s) }: _*))))))
   }

@@ -81,7 +81,9 @@ object Evaluation {
 
   /** DuckDB oracle twin: a full SELECT over relation `src`, which must
     * expose columns `score_micro` and `y` — same histogram, same pair
-    * statistic, same integer rounding, iteration for iteration. */
+    * statistic, same integer rounding, iteration for iteration. `ma` is
+    * MATERIALIZED because DuckDB inlines a CTE into each of its seven
+    * readers, and q175's `src` is a deep training chain. */
   object sql {
     def binaryMetricsSelect(src: String): String =
       s"""SELECT metric, value FROM (
@@ -95,7 +97,7 @@ object Evaluation {
          |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n
          |        AS BIGINT) AS cn
          |    FROM mh),
-         |  ma AS (
+         |  ma AS MATERIALIZED (
          |    SELECT COALESCE(CAST(sum(p) AS BIGINT), 0) AS np,
          |      COALESCE(CAST(sum(n) AS BIGINT), 0) AS nn,
          |      COALESCE(CAST(sum(p * (2 * cn + n)) AS BIGINT), 0) AS u2,

@@ -19,6 +19,8 @@ class ProfileSpec extends SparkSpec {
         ("kgraph.lexedges", "artifact", 2), ("kgraph.canonlex", "artifact", 2),
         ("q12_multihop_bfs_in", "query", 1), ("q12_multihop_bfs_in", "query", 2)))
       recs.foreach(r => assert(r.counters.keys.toSeq == Profile.CounterKeys))
+      // a second run reuses the classes the first run compiled
+      recs.filter(_.run == 2).foreach(r => assert(r.codegenCompiles == 0, r))
       // each run rebuilds each named artifact, and nothing else
       recs.filter(_.kind == "artifact").foreach { r =>
         assert(r.builds.map(_._1) == Seq(r.name))
@@ -41,6 +43,8 @@ class ProfileSpec extends SparkSpec {
         .readTree(Profile.json(sf, recs))
       assert(json.get("metric").asText == "profile")
       assert(json.get("records").size == recs.size)
+      json.get("records").forEach(r => assert(
+        r.has("codegen_compiles") && r.get("codegen_s").asDouble >= 0, r))
     } finally {
       SessionCache.invalidate(s)
       Lineage.releaseTransient(s, keep, blocking = true): Unit

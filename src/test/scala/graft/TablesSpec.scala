@@ -88,6 +88,16 @@ class TablesSpec extends SparkSpec {
     }
   }
 
+  test("loading the micros tables leaves the session's confs unchanged") {
+    val s = spark.newSession()
+    val before = s.conf.getAll
+    val dir = copyOfTables()
+    Tables.names.foreach(n => Tables.load(s, dir, n))
+    Tables.names.foreach(n => Tables.load(s, sf, n))
+    assert(s.conf.getAll == before)
+    assert(!s.conf.getAll.contains(NanosAsLong))
+  }
+
   test("a table file rewritten with an added column is inferred again") {
     val dir = copyOfTables()
     val table = s"$dir/region.parquet"
