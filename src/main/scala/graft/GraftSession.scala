@@ -40,6 +40,10 @@ object GraftSession {
       .config("spark.sql.codegen.cache.maxEntries",
         CodegenCacheEntries.toString)
       .config("spark.sql.session.timeZone", "UTC")
+      // early events files carry TIMESTAMP(NANOS), which Spark rejects
+      // unless it reads them as long (Tables.load); other columns read
+      // the same either way
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     master.map(b.master).getOrElse(b)
   }
 

@@ -89,10 +89,7 @@ object ScaleCheck {
       // refreshed sf1.0 board — a 2x first-trial-only spread). One
       // untimed execution per query in the first trial warms the JIT
       // and the codegen cache, which the trial sessions share
-      // (GraftSession.builder: one class loader for every session). The
-      // second trial still compiles the classes whose code inlines its
-      // own partition count, such as its shuffles' partition-id
-      // projections.
+      // (GraftSession.builder: one class loader for every session).
       // SPARK_GRAFT_SCALECHECK_WARM=0 skips it (halves a quick run).
       if (p == parts.head &&
           sys.env.getOrElse("SPARK_GRAFT_SCALECHECK_WARM", "1") != "0")

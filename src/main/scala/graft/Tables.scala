@@ -2,10 +2,6 @@ package graft
 
 import java.util.concurrent.ConcurrentHashMap
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit,
-  TimestampLogicalTypeAnnotation}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType,
@@ -24,14 +20,14 @@ import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType,
   * the path. A load at the same version reads with that schema and
   * launches no job; any other version infers again and replaces the
   * entry. The confs are part of the key, not of the version: a session
-  * that read nanos timestamps as long infers a different schema from the
-  * same files.
+  * that reads nanos timestamps as long infers a different schema from
+  * the same files.
   *
-  * The loader leaves the caller's session as it found it, except for
-  * one legacy encoding: an events file whose `ts` is TIMESTAMP(NANOS),
-  * which vanilla Spark rejects. Only then does it set
-  * `spark.sql.legacy.parquet.nanosAsLong` on the session, because the
-  * scan reads that conf when it runs, not when it is planned.
+  * The loader sets no conf on the caller's session. Early events files
+  * carry `ts` as TIMESTAMP(NANOS), which vanilla Spark rejects; every
+  * session built by [[GraftSession.builder]] reads such a column as long
+  * (`spark.sql.legacy.parquet.nanosAsLong`), and the loader truncates it
+  * to micros.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -46,18 +42,14 @@ object Tables {
     new ConcurrentHashMap[(String, Map[String, String]), Inferred]()
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val path = s"$sfDir/$name.parquet"
-    val files = listing(spark, path)
-    // read nanos as long and truncate to microseconds: the same value
-    // DuckDB produces when it reads the nanos column as TIMESTAMP
-    if (name == "events" && tsIsNanos(spark, files))
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = read(spark, path, files)
+    val df = read(spark, s"$sfDir/$name.parquet")
     // Normalize ts to TIMESTAMP (LTZ) whatever the file carries: nanos
-    // read as long (legacy conf above), or plain micros that Spark 4
-    // infers as TIMESTAMP_NTZ. The session timezone is UTC, so the
-    // NTZ→LTZ cast is the identity on the wall-clock reading and the
-    // instant-based functions (unix_micros, windows) keep working.
+    // read as long, truncated to microseconds (the same value DuckDB
+    // produces when it reads the nanos column as TIMESTAMP), or plain
+    // micros that Spark 4 infers as TIMESTAMP_NTZ. The session timezone
+    // is UTC, so the NTZ→LTZ cast is the identity on the wall-clock
+    // reading and the instant-based functions (unix_micros, windows)
+    // keep working.
     if (name == "events" && df.schema("ts").dataType == LongType)
       df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
     else if (name == "events" && df.schema("ts").dataType == TimestampNTZType)
@@ -65,41 +57,19 @@ object Tables {
     else df
   }
 
-  /** (path, length, mtime) of every file under `path`, sorted; nothing
-    * for a missing path, so its read fails with Spark's own error. */
-  private def listing(spark: SparkSession, path: String)
-      : Seq[(String, Long, Long)] = {
+  /** `spark.read.parquet(path)`, with the schema inferred once per
+    * version of the path's files and parquet confs. */
+  private def read(spark: SparkSession, path: String): DataFrame = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
+    // a missing path lists nothing and misses, so the read below fails
+    // with Spark's own error
+    val files = try {
       val it = fs.listFiles(p, true)
       Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
         .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
         .toSeq.sorted
     } catch { case _: java.io.FileNotFoundException => Nil }
-  }
-
-  /** Whether the first parquet file's footer gives `ts` the NANOS unit. */
-  private def tsIsNanos(spark: SparkSession,
-      files: Seq[(String, Long, Long)]): Boolean =
-    files.map(_._1).find(_.endsWith(".parquet")).exists { f =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
-        new Path(f), spark.sparkContext.hadoopConfiguration))
-      val schema = try reader.getFooter.getFileMetaData.getSchema
-        finally reader.close()
-      schema.containsField("ts") && (schema.getType(schema.getFieldIndex("ts"))
-        .getLogicalTypeAnnotation match {
-          case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
-          case _ => false
-        })
-    }
-
-  /** `spark.read.parquet(path)`, with the schema inferred once per
-    * version of the path's files and parquet confs. */
-  private def read(spark: SparkSession, path: String,
-      files: Seq[(String, Long, Long)]): DataFrame = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val key = (fs.makeQualified(p).toString,
       spark.conf.getAll.filter(_._1.contains("parquet")))
     Option(inferred.get(key)).filter(_.files == files) match {

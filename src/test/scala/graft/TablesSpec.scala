@@ -49,9 +49,7 @@ class TablesSpec extends SparkSpec {
   /** The schema `spark.read.parquet` infers, with events' ts normalized
     * from the micros the test data carries. */
   private def inferred(dir: String, name: String): StructType = {
-    val s = spark.newSession()
-    if (name == "events") s.conf.set(NanosAsLong, "true")
-    val df = s.read.parquet(s"$dir/$name.parquet")
+    val df = spark.newSession().read.parquet(s"$dir/$name.parquet")
     if (name == "events") df.withColumn("ts", col("ts").cast(TimestampType))
       .schema
     else df.schema
@@ -88,14 +86,13 @@ class TablesSpec extends SparkSpec {
     }
   }
 
-  test("loading the micros tables leaves the session's confs unchanged") {
+  test("loading the tables leaves the session's confs unchanged") {
     val s = spark.newSession()
     val before = s.conf.getAll
     val dir = copyOfTables()
     Tables.names.foreach(n => Tables.load(s, dir, n))
     Tables.names.foreach(n => Tables.load(s, sf, n))
     assert(s.conf.getAll == before)
-    assert(!s.conf.getAll.contains(NanosAsLong))
   }
 
   test("a table file rewritten with an added column is inferred again") {
@@ -142,8 +139,10 @@ class TablesSpec extends SparkSpec {
     assert(ts("true") == Success(LongType))
     assert(ts("false") != Success(LongType))
     assert(ts("true") == Success(LongType))
-    // the events loader reads nanos as long and truncates them to micros
-    val events = Tables.load(session("false"), dir.toString, "events")
+    // a session from GraftSession.builder reads nanos as long, and the
+    // events loader truncates them to micros
+    assert(spark.newSession().conf.get(NanosAsLong) == "true")
+    val events = Tables.load(spark.newSession(), dir.toString, "events")
     assert(events.schema("ts").dataType == TimestampType)
     assert(events.selectExpr("unix_micros(ts)").collect().map(_.getLong(0))
       .toSeq == Seq.fill(3)(nanos / 1000))
