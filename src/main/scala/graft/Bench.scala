@@ -231,7 +231,9 @@ object Bench {
         val t = (System.nanoTime() - t0) / 1e9
         // release the query's transient checkpoint blocks OUTSIDE its
         // timed window (unpersist is async); shared artifacts survive
-        graft.engine.Lineage.releaseTransient(spark, keepIds, blocking = true): Unit
+        val released = graft.engine.Lineage.releaseTransient(spark, keepIds,
+          blocking = true)
+        System.err.println(s"[bench] ${q.name} released $released blocks")
         (q.name, t, ok)
       }
     }

@@ -47,17 +47,19 @@ object GraftSession {
     master.map(b.master).getOrElse(b)
   }
 
-  /** Silence the partitionless-window WARN for batch mains: every
-    * catalog site that windows without a partition is a documented
-    * metadata-/eval-bounded frame (pinned by PlanShapeSpec's window
-    * allowlist), so the per-task WARN is pure noise — and in round 9
-    * the spam displaced Bench's single stdout result line out of the
-    * driver's tail buffer, recording a fully-green round as
-    * unparseable. Spec/interactive sessions keep the default level. */
+  /** Silence two audited WARN streams for batch mains. The
+    * partitionless-window WARN: every such catalog site is a bounded
+    * frame pinned by PlanShapeSpec's window allowlist, and in round 9
+    * the spam pushed Bench's stdout result line out of the driver's
+    * tail buffer. `RDD.unpersist`'s WARN for each released local
+    * checkpoint (logger `MapPartitionsRDD`): Bench prints one
+    * released-block count per query instead. Spec/interactive sessions
+    * keep the default level. */
   def quietAuditedWarnings(): Unit =
-    try org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window",
-      org.apache.logging.log4j.Level.ERROR)
+    try Seq("org.apache.spark.sql.execution.window",
+        "org.apache.spark.rdd.MapPartitionsRDD").foreach(
+      org.apache.logging.log4j.core.config.Configurator.setLevel(_,
+        org.apache.logging.log4j.Level.ERROR))
     catch { case _: Throwable => () }
 
   /** The mains' core count: SPARK_GRAFT_CPUS, nproc when that is unset. */

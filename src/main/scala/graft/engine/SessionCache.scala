@@ -3,7 +3,6 @@ package graft.engine
 import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
 
 /** Per-(session, key) cache for materialized ingestion-time artifacts —
   * the KGraph edge indexes, the DedupIndex pair/cluster tables, and the
@@ -70,15 +69,11 @@ object SessionCache {
     }
   }
 
-  /** Ids of the RDDs that the live artifacts on `sc` read: the
-    * `LogicalRDD` leaves of each cached frame's analyzed plan (a
-    * checkpointed frame's plan is one such leaf). */
+  /** Ids of the RDDs the live artifacts on `sc` read. */
   private[engine] def liveRddIds(sc: SparkContext): Set[Int] = {
     import scala.jdk.CollectionConverters._
     cache.values().asScala.filter(_.session.sparkContext eq sc)
-      .flatMap(_.df.queryExecution.analyzed.collect {
-        case r: LogicalRDD => r.rdd.id })
-      .toSet
+      .flatMap(e => Lineage.planRddIds(e.df)).toSet
   }
 
   /** Drop every cached artifact belonging to `spark` (the frames'

@@ -1,7 +1,8 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
+import graft.engine.Lineage
 import graft.engine.Lineage.LineageOps
 
 /** Whole-graph analytics over undirected edge lists: triangle counting /
@@ -24,8 +25,7 @@ import graft.engine.Lineage.LineageOps
   *  - triangle enumeration keeps edges canonical (a < b) so each
   *    triangle is emitted exactly once, and the wedge join streams
   *    against a hash-partitioned edge list;
-  *  - iterative loops truncate lineage per round (reliable checkpoints
-  *    on a cluster — see graft.engine.Lineage).
+  *  - iterative loops run on the round driver, `Lineage.rounds`.
   */
 object GraphAnalytics {
 
@@ -229,16 +229,12 @@ object GraphAnalytics {
         .otherwise(lit(0.0)))
 
   /** One peel round's edge removal: drop every edge with an endpoint
-    * in `drop`. Two anti-joins on the node key with NO join-strategy
-    * hint — the drop set's size is wildly round-dependent (round 1
-    * removes EVERY node of degree < k, which on a power-law graph with
-    * k above the modal degree is O(n) nodes; later cascade rounds
-    * remove only neighbors of the previous drop), so the strategy must
-    * be a runtime decision. Both inputs are lineage-truncated by the
-    * caller, so AQE sees real sizes and broadcasts small drop sets
-    * while shuffling the O(n) first-round peel — a forced broadcast
-    * here is a driver-memory / 8 GB-cap failure at 100×.
-    * Package-visible so IterationShapeSpec can pin the unhinted plan. */
+    * in `drop`. Two anti-joins with NO join-strategy hint: round 1
+    * drops EVERY node of degree < k (O(n) on a power-law graph), later
+    * rounds only the last drop's neighbours, so AQE decides on the cut
+    * inputs' real sizes — a forced broadcast is a driver-memory / 8
+    * GB-cap failure at 100×. Package-visible so IterationShapeSpec can
+    * pin the unhinted plan. */
   private[graft] def dropEdges(alive: DataFrame, drop: DataFrame): DataFrame =
     alive
       .join(drop.select(col("node").as("a")), Seq("a"), "left_anti")
@@ -252,32 +248,22 @@ object GraphAnalytics {
     * peeled, 0 for k-core members; plus the round count actually run
     * (the spec hook pinning convergence under the cap).
     *
-    * Each round is: degrees of the surviving edge list (one aggregate)
-    * + two anti-joins dropping edges with a peeled endpoint
-    * ([[dropEdges]] — strategy left to AQE, see there). Peel cascades
-    * are graph-diameter-bounded; `maxRounds` caps adversarial chains
-    * and the caller asserts convergence. */
+    * The driver carries the surviving edges. Each round cuts its drop
+    * set (degree < k; the cut's job counts it) and anti-joins it away
+    * ([[dropEdges]]); an empty drop set returns the edges unchanged,
+    * which ends the peel. `maxRounds` caps adversarial chains and the
+    * caller asserts convergence. */
   def kCorePeel(canon: DataFrame, k: Int, maxRounds: Int = 16)
-      : (DataFrame, Int) = {
-    var alive = canon.truncateLineage()
-    var peeled: DataFrame = null
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxRounds) {
-      rounds += 1
-      val deg = degrees(alive)
-      // the drop set's size is counted on its own checkpoint job —
-      // no separate isEmpty probe per round
-      val (drop, Seq(nDrop)) = deg.filter(col("degree") < k)
-        .select(col("node"), lit(rounds).as("layer"))
-        .truncateLineageCounting(lit(true))
-      if (nDrop == 0) {
-        converged = true
-        rounds -= 1
-      } else {
-        peeled = if (peeled == null) drop else peeled.unionByName(drop)
-        alive = dropEdges(alive, drop).truncateLineage()
-      }
+      : (DataFrame, Int) = Lineage.releasing {
+    val peeled = Seq.newBuilder[DataFrame]
+    val (alive, rounds) = Lineage.rounds(canon.truncateLineage(), maxRounds) {
+        (alive, r) =>
+      val dropped = Observation()
+      val drop = degrees(alive).filter(col("degree") < k)
+        .select(col("node"), lit(r).as("layer"))
+        .observe(dropped, count(lit(1)).as("n")).truncateLineage()
+      if (dropped.get("n") == 0L) alive
+      else { peeled += drop; dropEdges(alive, drop) }
     }
     // isolated survivors of the last drop don't exist: every node in
     // `alive` has degree >= k by the converged test. Core members are
@@ -286,10 +272,9 @@ object GraphAnalytics {
       .unionByName(alive.select(col("b").as("node")))
       .distinct()
       .select(col("node"), lit(0).as("layer"))
-    val all =
-      if (peeled == null) core else core.unionByName(peeled)
-    (all.withColumn("in_core", col("layer") === 0), rounds)
-  }
+    ((core +: peeled.result()).reduce(_ unionByName _)
+      .withColumn("in_core", col("layer") === 0), rounds)
+  }(_._1)
 
   /** Synchronous k-truss peel (Cohen 2008, "Trusses: cohesive
     * subgraphs for social network analysis"): round r removes every
@@ -300,44 +285,28 @@ object GraphAnalytics {
     * layer = the peel round (0 = truss member), like [[kCorePeel]]'s
     * onion layers.
     *
-    * LIVE-FRONTIER form (the q269 trick applied to the peel; cf.
-    * the sequential truss decompositions in Wang & Cheng 2012, which
-    * all decrement neighbors of removed edges rather than recount):
-    * the full degree-ordered edge-support census (O(m^1.5) wedges by
-    * arboricity — the q191/q273 triangle plan) runs ONCE, up front;
-    * every later round only enumerates the triangles that CONTAIN a
-    * just-dropped edge (drop-frontier × adjacency, dedup'd on the
-    * sorted triple so a triangle losing 2–3 edges at once is charged
-    * once) and decrements the surviving edges of those triangles.
-    * Round-by-round drops are IDENTICAL to the recount form
-    * (KTrussSpec's reference peel): a triangle
-    * survives iff all three edges survive, so a surviving edge's
-    * recounted support is exactly its old support minus the dead
-    * triangles it sat in. Per-round cost is frontier-proportional
-    * (Σ min-endpoint-degree over dropped edges), not census-
-    * proportional — the difference between 6 full O(m^1.5) sweeps
-    * and 1 sweep + small cascades. The cascade is exact for any drop
-    * size, so every round takes it (q293's largest round, round 1 at
-    * sf0.1, drops ~5 % of the edges). Rounds past the fixed point peel
+    * LIVE-FRONTIER form (cf. the sequential truss decompositions in
+    * Wang & Cheng 2012, which decrement neighbors of removed edges
+    * rather than recount): the full edge-support census (O(m^1.5)
+    * wedges — the q191/q273 triangle plan) runs ONCE, up front; every
+    * later round enumerates only the triangles that CONTAIN a
+    * just-dropped edge (dedup'd on the sorted triple, so a triangle
+    * losing 2–3 edges at once is charged once) and decrements their
+    * surviving edges. Drops are IDENTICAL to the recount form: a
+    * triangle survives iff all three edges survive. Per-round cost is
+    * frontier-proportional (Σ min-endpoint-degree over dropped edges),
+    * and exact for any drop size. Rounds past the fixed point peel
     * nothing, so a cap above convergence is exact — the same unroll
     * contract the oracle mirrors with full recounts per round. */
   def kTrussPeel(canon: DataFrame, k: Int, maxRounds: Int = 8,
-      initialSupport: Option[DataFrame] = None): (DataFrame, Int) = {
+      initialSupport: Option[DataFrame] = None): (DataFrame, Int) =
+      Lineage.releasing {
     require(k >= 3, s"k-truss needs k >= 3 (got $k)")
-    // ONE frame carries (a, b, support, layer) — layer 0 = alive,
-    // r > 0 = peeled in round r. The round-12 form kept support on the
-    // edge row but still checkpointed TWO frames per round (the drop
-    // set and the survivor set) plus a count job — three actions per
-    // round, and the final result unioned six per-round drop
-    // checkpoints that stayed pinned to the end. With the layer riding
-    // on the edge row too (round-15 form), each round is ONE
-    // checkpoint of the next frame, which also counts the next round's
-    // drops, and the final result IS the frame — no union,
-    // nothing pinned across rounds. At sf0.1 roughly half of q293's
-    // wall was per-round job scheduling (round-14 listener probe), so the
-    // job-count cut is the measured lever. Support-0 edges are
-    // materialized up front (the census omits them) so the drop
-    // filter never needs a join again.
+    // ONE frame carries (a, b, support, layer) — layer 0 = alive, r > 0
+    // = peeled in round r — so a round is ONE cut, which also counts the
+    // next round's drops, and the result IS the frame (per-round job
+    // scheduling was half of q293's sf0.1 wall, round-14 probe).
+    // Support-0 edges join in up front (the census omits them).
     val frame0 = canon
       .join(initialSupport.getOrElse(edgeSupport(canon)),
         Seq("a", "b"), "left")
@@ -346,12 +315,10 @@ object GraphAnalytics {
         lit(0).as("layer"))
     val isAlive = col("layer") === 0
     val willDrop = isAlive && col("support") < k - 2
-    // every checkpoint of the frame counts, in its own job, the rows the
-    // NEXT round will drop — no separate count job per round
-    var (frame, Seq(nDrop)) = frame0.truncateLineageCounting(willDrop)
-    var rounds = 0
-    while (nDrop > 0 && rounds < maxRounds) {
-      rounds += 1
+    // every cut of the frame counts, in its own job, the rows the NEXT
+    // round will drop — no separate count job per round
+    val (frame, rounds) = Lineage.rounds(frame0, maxRounds,
+        Some(_ => willDrop)) { (frame, r) =>
       // the drop set, survivors and this round's frontier are all
       // FILTERS over the one checkpointed frame — scans, never jobs
       val dropE = frame.filter(willDrop).select(col("a"), col("b"))
@@ -402,19 +369,16 @@ object GraphAnalytics {
         .unionByName(deadTri.select(col("y").as("a"), col("z").as("b")))
         .join(dropE, Seq("a", "b"), "left_anti")
         .groupBy(col("a"), col("b")).agg(count(lit(1)).as("dead"))
-      val next = frame.join(delta, Seq("a", "b"), "left")
+      frame.join(delta, Seq("a", "b"), "left")
         .select(col("a"), col("b"),
           (col("support") - coalesce(col("dead"), lit(0L)))
             .as("support"),
-          when(willDrop, lit(rounds)).otherwise(col("layer"))
+          when(willDrop, lit(r)).otherwise(col("layer"))
             .as("layer"))
-      val (f, Seq(n)) = next.truncateLineageCounting(willDrop)
-      frame = f
-      nDrop = n
     }
     (frame.select(col("a"), col("b"), col("layer"))
       .withColumn("in_truss", col("layer") === 0), rounds)
-  }
+  }(_._1)
 
   /** Synchronous label propagation for `rounds` rounds. Every node
     * starts with its own id as label; each round it adopts the most
@@ -428,31 +392,32 @@ object GraphAnalytics {
     * `min(struct(-c, label))` top-1 — the aggregate form of "max count,
     * tie → smallest label", chosen over a row_number window because it
     * partial-aggregates before the shuffle instead of sorting the full
-    * exploded frame (3.1× on the sf0.1 knowledge graph). Lineage
-    * truncates per round. */
-  def labelPropagation(canon: DataFrame, rounds: Int): DataFrame = {
+    * exploded frame (3.1× on the sf0.1 knowledge graph). The driver
+    * cuts every 6th round: a handful of rounds chains as one linear DAG,
+    * and the cut bounds plan depth on long runs. */
+  def labelPropagation(canon: DataFrame, rounds: Int): DataFrame =
+      Lineage.releasing {
     val adj = canon.select(col("a").as("u"), col("b").as("v"))
       .unionByName(canon.select(col("b").as("u"), col("a").as("v")))
       .truncateLineage()
-    // round 1 in closed form: every label is its owner, so "most
-    // frequent neighbor label, tie → smallest" is just min(neighbor) —
-    // one aggregate instead of a join + two
-    var labels = adj.groupBy(col("u"))
-      .agg(min(col("v")).as("label"))
-      .select(col("u").as("node"), col("label"))
-    for (r <- 2 to rounds) {
-      labels = adj
+    // the round-0 labels (every node its own) are never planned: round
+    // 1 in closed form — "most frequent neighbor label, tie → smallest"
+    // over distinct owner labels is just min(neighbor) — is one
+    // aggregate instead of a join + two
+    val own = adj.select(col("u").as("node"), col("u").as("label"))
+      .distinct()
+    Lineage.rounds(own, rounds, every = 6) { (labels, r) =>
+      if (r == 1) adj.groupBy(col("u"))
+        .agg(min(col("v")).as("label"))
+        .select(col("u").as("node"), col("label"))
+      else adj
         .join(labels.select(col("node").as("v"), col("label")), Seq("v"))
         .groupBy(col("u"), col("label")).agg(count(lit(1)).as("c"))
         .groupBy(col("u"))
         .agg(min(struct((-col("c")).as("negc"), col("label"))).as("m"))
         .select(col("u").as("node"), col("m.label").as("label"))
-      // bound plan depth on long runs; a handful of rounds chains as
-      // one linear DAG (no intermediate materialization needed)
-      if (r % 6 == 0) labels = labels.truncateLineage()
-    }
-    labels
-  }
+    }._1
+  }(identity)
 
   /** Distributed greedy weighted matching by LOCAL DOMINANCE (Preis
     * 1999's locally-heaviest-edge argument in its synchronous
@@ -474,22 +439,17 @@ object GraphAnalytics {
     * unrollable budget (each round matches every locally-dominant
     * edge simultaneously, so coverage grows fast; residual edges are
     * the caller's readout). */
-  def localMaxMatching(edges: DataFrame, rounds: Int): DataFrame = {
+  def localMaxMatching(edges: DataFrame, rounds: Int): DataFrame =
+      Lineage.releasing {
     require(rounds >= 1, "need at least one matching round")
     // ONE frame carries (a, b, w, round): round 0 = alive, r > 0 =
-    // matched in round r. An edge whose endpoint another edge matched
-    // leaves the frame, so it shrinks like the live graph. The alive
-    // set is a filter over it, so each round checkpoints one frame, and
-    // the frame's alive count, observed on that same checkpoint job,
-    // stops the loop once nothing is left to match (later rounds would
-    // match nothing).
+    // matched in round r; an edge a neighbour's match removed leaves it.
+    // Each cut counts the alive rows: none left ends the loop.
     val me = struct(col("w"), col("a"), col("b"))
-    var (frame, Seq(nAlive)) = edges
-      .select(col("a"), col("b"), col("w"), lit(0).as("round"))
-      .truncateLineageCounting(lit(true))
-    var r = 1
-    while (r <= rounds && nAlive > 0) {
-      val alive = frame.filter(col("round") === 0)
+    val isAlive = col("round") === 0
+    Lineage.rounds(edges.select(col("a"), col("b"), col("w"),
+        lit(0).as("round")), rounds, Some(_ => isAlive)) { (frame, r) =>
+      val alive = frame.filter(isAlive)
       val best = alive.select(col("a").as("node"), me.as("e"))
         .unionByName(alive.select(col("b").as("node"), me.as("e")))
         .groupBy(col("node")).agg(max(col("e")).as("e"))
@@ -501,7 +461,7 @@ object GraphAnalytics {
         .filter(col("votes") === 2)
       val pairs = dom.select(col("e.a").as("node"), col("e"))
         .unionByName(dom.select(col("e.b").as("node"), col("e")))
-      val (next, Seq(n)) = frame
+      frame
         .join(pairs.select(col("node").as("a"), col("e").as("ma")),
           Seq("a"), "left")
         .join(pairs.select(col("node").as("b"), col("e").as("mb")),
@@ -512,13 +472,8 @@ object GraphAnalytics {
             .when(col("ma").isNotNull || col("mb").isNotNull, lit(-1))
             .otherwise(lit(0)).as("round"))
         .filter(col("round") >= 0)
-        .truncateLineageCounting(col("round") === 0)
-      frame = next
-      nAlive = n
-      r += 1
-    }
-    frame.filter(col("round") > 0)
-  }
+    }._1.filter(col("round") > 0)
+  }(identity)
 
   /** SQL twin of one [[localMaxMatching]] round: CTEs deriving
     * `dom_<r>` (this round's matched edges) and `e_<next>` (the

@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.engine.Lineage
 import graft.engine.Lineage.LineageOps
 
 /** Graph traversal operators over plain `edges` DataFrames
@@ -12,10 +13,11 @@ import graft.engine.Lineage.LineageOps
   * mcp_integration/enhanced_mcp_endpoint.py:76-270). Here each hop is a
   * distributed hash join on the node id; depth is small (≤5 per the
   * reference defaults) so the loop is driver-side orchestration of
-  * Catalyst plans, with `Lineage.truncateLineage` cutting lineage per hop
-  * so plans don't grow exponentially (reliable checkpoints on a cluster
-  * when `spark.graft.reliableCheckpoints` + a checkpoint dir are set;
-  * localCheckpoint otherwise).
+  * Catalyst plans on the one round driver, `Lineage.rounds`, which cuts
+  * lineage per hop so plans don't grow exponentially (reliable
+  * checkpoints on a cluster when `spark.graft.reliableCheckpoints` + a
+  * checkpoint dir are set; localCheckpoint otherwise) and releases each
+  * superseded hop's blocks.
   *
   * Scale notes (100 TB): every hop shuffles on the join key only; the
   * BFS carries one reached-set frame and merges each level into it with
@@ -60,21 +62,17 @@ object GraphOps {
   def multiHop(edges: DataFrame, seeds: DataFrame, maxHops: Int,
       dir: Direction = Outgoing, edgeFilter: Option[Column] = None,
       preOriented: Boolean = false): DataFrame =
-    bfsFrame(walkEdges(edges, dir, edgeFilter, preOriented, Nil), seeds,
-      maxHops)
+    Lineage.releasing(bfsFrame(walkEdges(edges, dir, edgeFilter,
+      preOriented, Nil), seeds, maxHops))(identity)
 
   /** The edge index a walk joins: (node_id, next_id, `extra`…).
-    * `preOriented`: edges is already (node_id, next_id, …): a packed
-    * traversal index (KGraph.incomingLexMaterialized, bothLexMaterialized
-    * — the analog of the reference's from/to edge indexes) or
-    * KGraph.orientedMaterialized, so without a filter it is used as
-    * is. Otherwise the (filtered, oriented) edge set is
-    * materialized once, spread by the join key, so no hop re-runs the
-    * filter and orientation. The checkpoint keeps no partitioning a
-    * hop's join can reuse (see Lineage: an AQE-coalesced shuffle output
-    * reads back as a plain scan), so the join may shuffle this side
-    * again; bucketing edges by node_id is what removes that shuffle on
-    * a cluster. */
+    * `preOriented`: edges is already (node_id, next_id, …), a packed
+    * traversal index (the analog of the reference's from/to edge
+    * indexes), used as is without a filter. Otherwise the (filtered,
+    * oriented) edge set is cut once, spread by the join key, so no hop
+    * re-runs the filter; the cut keeps no partitioning a hop's join can
+    * reuse (see Lineage), so bucketing edges by node_id is what removes
+    * that shuffle on a cluster. */
   private def walkEdges(edges: DataFrame, dir: Direction,
       edgeFilter: Option[Column], preOriented: Boolean,
       extra: Seq[String]): DataFrame = {
@@ -113,14 +111,12 @@ object GraphOps {
     *    min-hop aggregate, with the carried value merged over the
     *    first-level arrivals only: an already-reached row keeps its hop
     *    and value, a new row folds its arrivals' values with `merge`;
-    *  - one checkpoint of the merged frame, which also counts the new
-    *    level through an Observation: an empty level stops the walk
-    *    without a separate probe job.
+    *  - one [[Lineage.rounds]] cut of the merged frame, which also
+    *    counts the new level: an empty level stops the walk without a
+    *    separate probe job.
     *
     * This is the GraphX superstep shape (one join plus one aggregate
-    * over a single vertex-state collection): one materialization per
-    * hop, where a distinct level, an anti-join against a growing
-    * visited union and an emptiness probe cost three. `e` is
+    * over a single vertex-state collection). `e` is
     * (node_id, next_id, plus any column the carry's step reads);
     * `start` carries `keys` and node_id (duplicates collapse). A keyed
     * walk is a sampled multi-source walk (q249, q256, q258): its
@@ -131,11 +127,10 @@ object GraphOps {
       keys: Seq[String] = Nil, carry: Option[Carry] = None): DataFrame = {
     val id = keys.map(col) :+ col("node_id")
     val carried = carry.map(c => col(c.name)).toSeq
-    var (frame, Seq(n)) = start.select(id: _*).distinct()
-      .select(id ++ carry.map(c => c.init.as(c.name)) :+ lit(0).as("hop"): _*)
-      .truncateLineageCounting(lit(true))
-    var h = 1
-    while (h <= maxHops && n > 0) {
+    // each cut counts the level just reached (every start row is hop 0)
+    Lineage.rounds(start.select(id: _*).distinct()
+        .select(id ++ carry.map(c => c.init.as(c.name)) :+ lit(0).as("hop"): _*),
+        maxHops, Some(h => col("hop") === h)) { (frame, h) =>
       val front = frame.filter(col("hop") === h - 1).select(id ++ carried: _*)
       val arrivals = (if (keys.nonEmpty) broadcast(front) else front)
         .join(e, "node_id")
@@ -143,17 +138,12 @@ object GraphOps {
           carry.map(c => c.step.as(c.name)).toSeq) :+ lit(h).as("hop"): _*)
       // a reached row keeps its hop and carried value; a new row merges
       // its arrivals' values
-      val merged = frame.unionByName(arrivals).groupBy(id: _*)
+      frame.unionByName(arrivals).groupBy(id: _*)
         .agg(min(col("hop")).as("hop"), carry.map(c =>
           coalesce(max(when(col("hop") < h, col(c.name))),
             c.merge(col(c.name))).as(c.name)).toSeq: _*)
         .select(id ++ carried :+ col("hop"): _*)
-      val (next, Seq(m)) = merged.truncateLineageCounting(col("hop") === h)
-      frame = next
-      n = m
-      h += 1
-    }
-    frame
+    }._1
   }
 
   /** Multi-hop BFS that also reconstructs one rendered path per reached
@@ -182,10 +172,10 @@ object GraphOps {
       if (nodesOnly) concat(col("path"), lit(" > "), col("next_id"))
       else concat(col("path"), lit(" --"), col("relation_type"),
         lit("--> "), col("next_id"))
-    bfsFrame(walkEdges(edges, dir, edgeFilter, preOriented,
-        if (nodesOnly) Nil else Seq("relation_type")), seeds, maxHops,
-        carry = Some(Carry("path", col("node_id"), ext, c => min(c))))
-      .select(col("node_id"), col("hop"), col("path"))
+    Lineage.releasing(bfsFrame(walkEdges(edges, dir, edgeFilter,
+        preOriented, if (nodesOnly) Nil else Seq("relation_type")), seeds,
+        maxHops, carry = Some(Carry("path", col("node_id"), ext, c => min(c))))
+      .select(col("node_id"), col("hop"), col("path")))(identity)
   }
 
   /** Shortest path WITH reconstruction: min-hop node-id path from the
@@ -270,13 +260,12 @@ object GraphOps {
     * enumeration: each level joins the aggregated frontier (≤ |V| rows)
     * against the edge table and re-aggregates, so per-level work is
     * bounded by |E| — not by the number of root→sink paths, which grows
-    * multiplicatively through fan-out. Each level is one left-outer
-    * join (unmatched rows are sinks, matched rows extend the frontier),
-    * checkpointed once, and the frontier aggregate's checkpoint, which
-    * also counts it: an empty frontier stops the walk without a probe
-    * job. */
+    * multiplicatively through fan-out. Each level is one cut left-outer
+    * join (unmatched rows are sinks, matched rows extend the frontier)
+    * and the driver's counted cut of the frontier aggregate. */
   def chainCounts(edges: DataFrame, maxLen: Int = 20,
-      seedFilter: Option[Column] = None, preOriented: Boolean = false): DataFrame = {
+      seedFilter: Option[Column] = None, preOriented: Boolean = false)
+      : DataFrame = Lineage.releasing {
     val out =
       if (preOriented) edges.select(col("node_id").as("cur"), col("next_id"))
       else edges
@@ -287,42 +276,32 @@ object GraphOps {
       .join(out.select(col("next_id").as("node_id")).distinct(),
         Seq("node_id"), "left_anti")
     val roots = seedFilter.map(roots0.filter).getOrElse(roots0)
-    var (frontier, Seq(n)) = roots
-      .select(col("node_id").as("cur"), lit(0).as("len"), lit(1L).as("cnt"))
-      .truncateLineageCounting(lit(true))
-    var done: DataFrame = null
-    var h = 0
-    while (h < maxLen && n > 0) {
+    val finished = Seq.newBuilder[DataFrame]
+    val (frontier, h) = Lineage.rounds(roots
+        .select(col("node_id").as("cur"), lit(0).as("len"), lit(1L).as("cnt")),
+        maxLen, Some(_ => lit(true))) { (frontier, _) =>
       val step = frontier.join(out, Seq("cur"), "left_outer").truncateLineage()
-      val finished = step.filter(col("next_id").isNull)
+      finished += step.filter(col("next_id").isNull)
         .select(col("len"), col("cur").as("end_id"), col("cnt").as("n_chains"))
-      done = if (done == null) finished else done.unionByName(finished)
-      // truncate the aggregated (small) frontier too: the next join
-      // otherwise re-runs this aggregate against the checkpointed step
-      val (next, Seq(m)) = step.filter(col("next_id").isNotNull)
+      // the driver cuts the aggregated (small) frontier too: the next
+      // join otherwise re-runs this aggregate against the cut step
+      step.filter(col("next_id").isNotNull)
         .groupBy(col("next_id"), col("len"))
         .agg(sum(col("cnt")).as("cnt"))
         .select(col("next_id").as("cur"), (col("len") + 1).as("len"), col("cnt"))
-        .truncateLineageCounting(lit(true))
-      frontier = next
-      n = m
-      h += 1
     }
     // complete chains of exactly maxLen still count — classify the final
     // frontier's sinks before aggregating
-    if (h == maxLen && n > 0) {
-      val boundary = frontier
-        .join(out.select(col("cur")).distinct(), Seq("cur"), "left_anti")
-        .select(col("len"), col("cur").as("end_id"), col("cnt").as("n_chains"))
-      done = if (done == null) boundary else done.unionByName(boundary)
-    }
-    if (done == null) // no roots (fully cyclic or empty graph)
+    val done = finished.result() ++ (if (h < maxLen) Nil else Seq(frontier
+      .join(out.select(col("cur")).distinct(), Seq("cur"), "left_anti")
+      .select(col("len"), col("cur").as("end_id"), col("cnt").as("n_chains"))))
+    if (done.isEmpty) // no roots (fully cyclic or empty graph)
       frontier.sparkSession.emptyDataFrame
         .select(lit(0).as("len"), lit("").as("end_id"), lit(0L).as("n_chains"))
         .limit(0)
-    else done.groupBy(col("len"), col("end_id"))
+    else done.reduce(_ unionByName _).groupBy(col("len"), col("end_id"))
       .agg(sum(col("n_chains")).as("n_chains"))
-  }
+  }(identity)
 
   /** Connected components by alternating large-star / small-star
     * contraction (Kiveris et al. 2014, "Connected Components in
@@ -335,15 +314,10 @@ object GraphOps {
     * component's minimum member — labels are the min member id, the
     * same contract as min-label propagation.
     *
-    * Why this form: the previous single-operator contraction (merge
-    * every node into min(self, neighbors), round 7) collapses cliques
-    * in one round but only shortens a CHAIN by one edge per round —
-    * O(n) rounds on path graphs, and past `maxIter` it silently
-    * returned partially-merged labels. The two-phase alternation is
-    * the published fix: worst-case O(log^2 n) rounds deterministic,
-    * ~log n observed (the 256-node-path spec pins <= 2*log2(n)+4),
-    * cliques still collapse in one round, and non-convergence now
-    * THROWS instead of mislabeling. Per-round cost is two
+    * Why this form: a single min(self, neighbors) contraction shortens
+    * a CHAIN by one edge per round (O(n) rounds); the two-phase form is
+    * O(log^2 n) worst case, ~log n observed (the 256-node-path spec pins
+    * <= 2*log2(n)+4), and non-convergence THROWS. Per-round cost is two
     * neighborhood-min aggregates + one node-sized role aggregate for
     * the convergence test, all over the current (shrinking) edge list.
     *
@@ -360,20 +334,31 @@ object GraphOps {
   /** [[connectedComponents]] plus the number of rounds to the fixed
     * point — the spec hook that pins the O(log n) observed bound. */
   private[graft] def componentsAndRounds(edges: DataFrame, maxIter: Int)
-      : (DataFrame, Int) = {
+      : (DataFrame, Int) = Lineage.releasing {
     // normalized child>parent edge list; self-loops drop (a node with
     // only self-loops is not emitted, matching the round-7 contract).
     // NOT deduplicated up front: every aggregate below absorbs
     // duplicates and `next` is rebuilt distinct each round, so an
     // upfront distinct would only add a full-edge shuffle.
-    var e = edges.select(
+    val e0 = edges.select(
         greatest(col("from_id"), col("to_id")).as("a"),
         least(col("from_id"), col("to_id")).as("b"))
       .filter(col("a") =!= col("b"))
       .truncateLineage()
-    var converged = e.isEmpty
-    var i = 0
-    while (!converged && i < maxIter) {
+    // fixed-point test (see scaladoc): any node that is child+parent
+    // or a twice-parented child disproves the star forest. Each round's
+    // edge list is distinct, so counting child edges per node is exact;
+    // the input is tested only for emptiness, as round 1 always runs.
+    def converged(e: DataFrame, round: Int): Boolean =
+      if (round == 0) e.isEmpty
+      else e.select(col("a").as("n"), lit(1L).as("c"), lit(0L).as("p"))
+        .unionByName(
+          e.select(col("b").as("n"), lit(0L).as("c"), lit(1L).as("p")))
+        .groupBy(col("n"))
+        .agg(sum(col("c")).as("nc"), max(col("p")).as("np"))
+        .filter(col("nc") > 1L || (col("nc") > 0L && col("np") > 0L))
+        .isEmpty
+    def starRound(e: DataFrame): DataFrame = {
       // large-star: for every node u, connect each strictly-larger
       // neighbor v to m(u) = min(neighborhood(u) + u). m <= u < v keeps
       // the child>parent invariant; each undirected edge is re-emitted
@@ -392,27 +377,17 @@ object GraphOps {
       // a itself to m(a) = min of those neighbors. b >= m with b == m
       // filtered keeps child>parent.
       val sm = large.groupBy(col("a")).agg(min(col("b")).as("m"))
-      val next = large.join(sm, Seq("a"))
+      large.join(sm, Seq("a"))
         .filter(col("b") =!= col("m"))
         .select(col("b").as("a"), col("m").as("b"))
         .unionByName(sm.select(col("a"), col("m").as("b")))
         .distinct()
-        .truncateLineage()
-      // fixed-point test (see scaladoc): any node that is child+parent
-      // or a twice-parented child disproves the star forest. `next` is
-      // distinct, so counting child edges per node is exact.
-      converged = next
-        .select(col("a").as("n"), lit(1L).as("c"), lit(0L).as("p"))
-        .unionByName(
-          next.select(col("b").as("n"), lit(0L).as("c"), lit(1L).as("p")))
-        .groupBy(col("n"))
-        .agg(sum(col("c")).as("nc"), max(col("p")).as("np"))
-        .filter(col("nc") > 1L || (col("nc") > 0L && col("np") > 0L))
-        .isEmpty
-      e = next
-      i += 1
     }
-    if (!converged && i == maxIter)
+    // a converged edge list is its own next round: the driver stops there
+    val (e, i) = Lineage.rounds(e0, maxIter) { (e, r) =>
+      if (converged(e, r - 1)) e else starRound(e)
+    }
+    if (i == maxIter && !converged(e, i))
       throw new IllegalStateException(
         s"connectedComponents: no fixed point after $maxIter rounds " +
           "(two-phase star contraction needs ~log2(n) rounds; raise maxIter)")
@@ -421,5 +396,5 @@ object GraphOps {
       .unionByName(
         e.select(col("b").as("node_id"), col("b").as("component")).distinct())
     (labels, i)
-  }
+  }(_._1)
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.catalyst.expressions.IntegralDivide
+import graft.engine.Lineage
 import graft.engine.Lineage.LineageOps
 
 /** Fixed-iteration HITS (Kleinberg 1999, "Authoritative sources in a
@@ -20,7 +21,7 @@ import graft.engine.Lineage.LineageOps
   * the edge list plus ONE keyed integer sum — identical to the PageRank
   * iteration plan — and the normalizer is a 1-row max frame broadcast
   * onto the scores, carrying the fused executor-side overflow guard
-  * (see [[MaxSafeRaw]]). Lineage truncates per iteration.
+  * (see [[MaxSafeRaw]]). The round driver cuts per iteration.
   *
   * Determinism contract: scores live as MICRO-unit integers (start 1e6;
   * after each sum, max-normalize via `(raw · 1e6) div max_raw`, pure
@@ -83,7 +84,7 @@ object Hits {
     * indexed path bit-identical). */
   def scores(edges: DataFrame, iterations: Int,
       edgeSet: Option[DataFrame] = None,
-      nodeSet: Option[DataFrame] = None): DataFrame = {
+      nodeSet: Option[DataFrame] = None): DataFrame = Lineage.releasing {
     require(iterations >= 1,
       s"HITS needs at least one full round (got $iterations): with 0 " +
         "rounds no authority frame ever exists")
@@ -91,38 +92,37 @@ object Hits {
       edges.select(col("from_id"), col("to_id")).distinct()
         .repartition(col("from_id"))
         .truncateLineage())
-    // round 1's hub side is uniform 1e6, so seed from the edge tails
-    var hub = e.select(col("from_id").as("node_id")).distinct()
+    // a half-step's raw sums are cut (by the driver for the hub side):
+    // they feed BOTH the 1-row max and the normalization join — unchecked,
+    // each half-step runs twice
+    def normalized(raw: DataFrame, key: String, score: String) =
+      raw.crossJoin(broadcast(raw.agg(max(col("raw")).as("mx"))))
+        .select(col(key).as("node_id"),
+          checkedNorm(col("raw"), col("mx")).as(score))
+    // round 1's hub side is uniform 1e6, so seed from the edge tails;
+    // the driver then carries the hub side's raw sums
+    val hub0 = e.select(col("from_id").as("node_id")).distinct()
       .withColumn("h", lit(1000000L))
       .truncateLineage()
-    var auth: DataFrame = null
-    for (_ <- 1 to iterations) {
-      // truncate the raw frame: it feeds BOTH the 1-row max and the
-      // normalization join — unchecked, each half-step runs twice
-      val aRaw = e.join(hub.select(col("node_id").as("from_id"), col("h")),
-          Seq("from_id"))
-        .groupBy(col("to_id")).agg(sum(col("h")).as("raw"))
-        .truncateLineage()
-      val aMax = aRaw.agg(max(col("raw")).as("mx"))
-      auth = aRaw.crossJoin(broadcast(aMax))
-        .select(col("to_id").as("node_id"),
-          checkedNorm(col("raw"), col("mx")).as("a"))
-      val hRaw = e.join(auth.select(col("node_id").as("to_id"), col("a")),
-          Seq("to_id"))
-        .groupBy(col("from_id")).agg(sum(col("a")).as("raw"))
-        .truncateLineage()
-      val hMax = hRaw.agg(max(col("raw")).as("mx"))
-      hub = hRaw.crossJoin(broadcast(hMax))
-        .select(col("from_id").as("node_id"),
-          checkedNorm(col("raw"), col("mx")).as("h"))
+    // one half-step's raw sums: `score` summed from `src` onto `dst`
+    def half(score: DataFrame, name: String, src: String, dst: String) =
+      e.join(score.select(col("node_id").as(src), col(name)), Seq(src))
+        .groupBy(col(dst)).agg(sum(col(name)).as("raw"))
+    val auths = Seq.newBuilder[DataFrame]
+    val (hRaw, _) = Lineage.rounds(hub0, iterations) { (frame, r) =>
+      val hub = if (r == 1) frame else normalized(frame, "from_id", "h")
+      val auth = normalized(half(hub, "h", "from_id", "to_id")
+        .truncateLineage(), "to_id", "a")
+      auths += auth
+      half(auth, "a", "to_id", "from_id")
     }
     nodeSet.getOrElse(PageRank.nodes(e))
-      .join(auth, Seq("node_id"), "left")
-      .join(hub, Seq("node_id"), "left")
+      .join(auths.result().last, Seq("node_id"), "left")
+      .join(normalized(hRaw, "from_id", "h"), Seq("node_id"), "left")
       .select(col("node_id"),
         coalesce(col("a"), lit(0L)).as("auth_micro"),
         coalesce(col("h"), lit(0L)).as("hub_micro"))
-  }
+  }(identity)
 
   /** DuckDB oracle fragment: CTE chain (appended after an `edges` CTE)
     * ending in `hits$iterations(node_id, auth_micro, hub_micro)` —

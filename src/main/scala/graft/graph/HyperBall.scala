@@ -1,8 +1,7 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.Lineage.LineageOps
 
 /** HyperBall (Boldi & Vigna, "In-Core Computation of Geometric
   * Centralities with HyperBall", 2013; the HyperANF line of work) —
@@ -110,7 +109,7 @@ object HyperBall {
   /** One synchronous merge round in the pivoted form: union self and
     * both neighbor-carried orientations, then per-register MAX —
     * 2·|E| + |V| rows of m columns instead of up to m× that in
-    * 3-column rows. */
+    * 3-column rows. The caller's round driver cuts the result. */
   def mergeRoundPivoted(regs: DataFrame, canon: DataFrame): DataFrame = {
     val rcols = (0 until M).map(i => col(s"r$i"))
     val fromB = canon.join(regs.withColumnRenamed("node", "b"), "b")
@@ -121,14 +120,40 @@ object HyperBall {
     regs.unionByName(fromB).unionByName(fromA)
       .groupBy(col("node"))
       .agg(aggs.head, aggs.tail: _*)
-      .truncateLineage()
   }
 
   /** One-row neighborhood-function estimate at hop `t` over pivoted
     * registers: present and the scaled register sum are row-local sums
     * over the 16 columns (a zero column is an absent register), so the
     * only aggregate left is the corpus reduction. */
-  def estimateRowPivoted(regs: DataFrame, t: Int): DataFrame = {
+  def estimateRowPivoted(regs: DataFrame, t: Int): DataFrame =
+    estimateRow(withEstMicro(regs).agg(sums.head, sums.tail: _*), lit(t))
+
+  private def sums = Seq(count(lit(1)).as("n_nodes"),
+    sum(col("est_micro")).as("nf_micro"))
+
+  /** `regs`, observed by `obs` for the corpus sums of
+    * [[estimateRowPivoted]] in the job that materializes it. */
+  def observeEstimate(regs: DataFrame, obs: Observation): DataFrame =
+    withEstMicro(regs).observe(obs, sums.head, sums.tail: _*)
+      .drop("present", "sumpow", "est_micro")
+
+  /** The estimate row at hop `t` from the sums [[observeEstimate]] took. */
+  def estimateRow(spark: SparkSession, t: Int, obs: Observation): DataFrame = {
+    val sums = obs.get
+    estimateRow(spark.range(1).select(
+      lit(sums("n_nodes")).cast("long").as("n_nodes"),
+      lit(sums("nf_micro")).cast("long").as("nf_micro")), lit(t))
+  }
+
+  private def estimateRow(sums: DataFrame, t: Column): DataFrame =
+    sums.select(t.as("t"), col("n_nodes"),
+      (col("nf_micro") / lit(1e6)).as("nf_est"),
+      graft.functions.ExactRound.microMean6(col("nf_micro"),
+        col("n_nodes")).as("avg_ball_est"))
+
+  /** `regs` plus each node's estimate in micro-units, `est_micro`. */
+  private def withEstMicro(regs: DataFrame): DataFrame = {
     val present = (0 until M)
       .map(i => when(col(s"r$i") > 0, lit(1L)).otherwise(lit(0L)))
       .reduce(_ + _)
@@ -145,14 +170,8 @@ object HyperBall {
         expr(s"shiftright(CAST(2097152 AS BIGINT), CAST(r$i AS INT))"))
         .otherwise(lit(0L)))
       .reduce(_ + _)
-    regs.select(present.as("present"), sumpow.as("sumpow"))
-      .select(expr(estMicroSql("present", "sumpow")).as("est_micro"))
-      .agg(count(lit(1)).as("n_nodes"),
-        sum(col("est_micro")).as("nf_micro"))
-      .select(lit(t).as("t"), col("n_nodes"),
-        (col("nf_micro") / lit(1e6)).as("nf_est"),
-        graft.functions.ExactRound.microMean6(col("nf_micro"),
-          col("n_nodes")).as("avg_ball_est"))
+    regs.withColumn("present", present).withColumn("sumpow", sumpow)
+      .withColumn("est_micro", expr(estMicroSql("present", "sumpow")))
   }
 
   // ---- oracle twins (same generated CASE text) ----------------------

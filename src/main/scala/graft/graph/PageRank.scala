@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.engine.Lineage
 import graft.engine.Lineage.LineageOps
 
 /** Fixed-iteration PageRank over the knowledge graph (builder mandate —
@@ -70,12 +71,12 @@ object PageRank {
     * locally as before. */
   def ranks(edges: DataFrame, iterations: Int = 3,
       index: Option[DataFrame] = None,
-      nodeSet: Option[DataFrame] = None): DataFrame = {
+      nodeSet: Option[DataFrame] = None): DataFrame = Lineage.releasing {
     val e = index.getOrElse(edgeIndex(edges).truncateLineage())
     val all = nodeSet.getOrElse(nodesOf(edges))
     iterate(e, col("rank") / col("outdeg"), lit(1.0 - Damping), all,
       all.withColumn("rank", lit(1.0)), iterations)
-  }
+  }(identity)
 
   /** Confidence-WEIGHTED ranks: contributions split proportionally to
     * edge weight instead of uniformly — rank flows along trusted edges
@@ -87,7 +88,7 @@ object PageRank {
     * uniform path. Same iteration and the same determinism contract as
     * [[ranks]]. */
   def weightedRanks(edges: DataFrame, iterations: Int = 3,
-      nodeSet: Option[DataFrame] = None): DataFrame = {
+      nodeSet: Option[DataFrame] = None): DataFrame = Lineage.releasing {
     val w = edges.select(col("from_id"), col("to_id"),
       round(col("confidence") * lit(1e6), 0).cast("long").as("w"))
     val outw = w.groupBy(col("from_id")).agg(sum(col("w")).as("ww"))
@@ -97,7 +98,7 @@ object PageRank {
     val all = nodeSet.getOrElse(nodesOf(edges))
     iterate(e, col("rank") * col("w") / col("ww"), lit(1.0 - Damping), all,
       all.withColumn("rank", lit(1.0)), iterations)
-  }
+  }(identity)
 
   /** PERSONALIZED ranks (Haveliwala 2002, topic-sensitive PageRank):
     * the restart mass returns to a SEED SET instead of every node —
@@ -113,7 +114,7 @@ object PageRank {
   def personalizedRanks(edges: DataFrame, seeds: DataFrame,
       iterations: Int = 3,
       index: Option[DataFrame] = None,
-      nodeSet: Option[DataFrame] = None): DataFrame = {
+      nodeSet: Option[DataFrame] = None): DataFrame = Lineage.releasing {
     val e = index.getOrElse(edgeIndex(edges).truncateLineage())
     val all = nodeSet.getOrElse(nodesOf(edges))
     val seeded = all.join(seeds.select(col("node_id")).distinct(),
@@ -126,7 +127,7 @@ object PageRank {
     iterate(e, col("rank") / col("outdeg"), lit(1.0 - Damping) * col("seed"),
       withSeed, withSeed.withColumn("rank", col("seed") * lit(1.0 - Damping))
         .select(col("node_id"), col("rank")), iterations)
-  }
+  }(identity)
 
   /** The node set, spread by node_id and materialized once. */
   private def nodesOf(edges: DataFrame): DataFrame =
@@ -138,27 +139,23 @@ object PageRank {
     * hash join of the rank frame onto the edge list (both keyed by
     * from_id) and ONE keyed integer sum — and every node of `base`
     * takes `restart` + 0.85 · its incoming sum (a left join, so a node
-    * with no in-edges keeps the restart term). Each iteration's rank
-    * frame is lineage-truncated: without the cut, iteration k
-    * re-executes every previous iteration's join DAG. */
+    * with no in-edges keeps the restart term). The driver cuts each
+    * iteration's rank frame: without the cut, iteration k re-executes
+    * every previous iteration's join DAG. */
   private def iterate(e: DataFrame, share: Column, restart: Column,
-      base: DataFrame, start: DataFrame, iterations: Int): DataFrame = {
-    var r = start
-    for (_ <- 1 to iterations) {
+      base: DataFrame, start: DataFrame, iterations: Int): DataFrame =
+    Lineage.rounds(start, iterations) { (r, _) =>
       val contrib = e
         .join(r.withColumnRenamed("node_id", "from_id"), Seq("from_id"))
         .select(col("to_id").as("node_id"),
           round(share * lit(Nano), 0).cast("long").as("c"))
         .groupBy(col("node_id"))
         .agg(sum(col("c")).as("s"))
-      r = base.join(contrib, Seq("node_id"), "left")
+      base.join(contrib, Seq("node_id"), "left")
         .select(col("node_id"),
           (restart + lit(Damping) *
             (coalesce(col("s"), lit(0L)) / lit(Nano))).as("rank"))
-        .truncateLineage()
-    }
-    r
-  }
+    }._1
 
   /** DuckDB oracle fragments. */
   object sql {

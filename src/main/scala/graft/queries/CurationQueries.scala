@@ -3769,9 +3769,11 @@ object CurationQueries {
   //          materialized.
   private val CoverRounds = 4
 
-  private def q345(s: SparkSession, dir: String): DataFrame = {
+  private def q345(s: SparkSession, dir: String): DataFrame =
+      graft.engine.Lineage.releasing {
+    import org.apache.spark.sql.Observation
     import graft.text.{TextFunctions => TF}
-    import graft.engine.Lineage.LineageOps
+    import graft.engine.Lineage.{rounds, LineageOps}
     // universe = word BIGRAMS: the unigram vocabulary of this corpus
     // is tiny (~31 types, one source covers it in one round); the
     // bigram universe is the realistic acquisition target
@@ -3785,11 +3787,14 @@ object CurationQueries {
       .distinct().truncateLineage()
     val uni = st.select(col("tok")).distinct()
       .agg(count(lit(1)).as("u"))
-    var covered: DataFrame = null
-    var out: DataFrame = null
-    for (r <- 1 to CoverRounds) {
+    // the driver carries the covered set (empty before round 1); each
+    // round's row reads its own pick cut and the covered count observed
+    // on the round's cut, never a released round
+    val picks = Seq.newBuilder[(Int, DataFrame, Observation)]
+    rounds(st.select(col("tok")).limit(0), CoverRounds) {
+        (covered, r) =>
       val uncovered =
-        if (covered == null) st
+        if (r == 1) st
         else st.join(covered, Seq("tok"), "left_anti")
       val gains = uncovered.groupBy(col("source"))
         .agg(count(lit(1)).as("gain"))
@@ -3798,24 +3803,21 @@ object CurationQueries {
         .filter(col("gain") === col("mg"))
         .agg(min(col("source")).as("src"), max(col("mg")).as("gain"))
         .truncateLineage()
-      val pickSrc = pick.select(col("src"))
-      covered = (if (covered == null)
-          st.join(pickSrc, col("source") === col("src"))
-            .select(col("tok"))
-        else covered.unionByName(
-          st.join(pickSrc, col("source") === col("src"))
-            .select(col("tok")))).distinct().truncateLineage()
-      val row = pick
-        .crossJoin(broadcast(covered.agg(count(lit(1)).as("cum"))))
-        .crossJoin(broadcast(uni))
-        .select(lit(r).as("round"), col("src").as("source"),
-          col("gain").as("new_tokens"), col("cum").as("cum_covered"),
-          graft.functions.ExactRound.ratio6(col("cum"), col("u"))
-            .as("coverage_frac"))
-      out = if (out == null) row else out.unionByName(row)
+      val obs = Observation()
+      picks += ((r, pick, obs))
+      val gained = st.join(pick.select(col("src")),
+        col("source") === col("src")).select(col("tok"))
+      (if (r == 1) gained else covered.unionByName(gained)).distinct()
+        .observe(obs, count(lit(1)).as("cum"))
     }
-    out.orderBy(col("round"))
-  }
+    picks.result().map { case (r, pick, obs) =>
+      pick.crossJoin(broadcast(uni))
+        .select(lit(r).as("round"), col("src").as("source"),
+          col("gain").as("new_tokens"), lit(obs.get("cum")).as("cum_covered"),
+          graft.functions.ExactRound.ratio6(lit(obs.get("cum")), col("u"))
+            .as("coverage_frac"))
+    }.reduce(_ unionByName _).orderBy(col("round"))
+  }(identity)
 
   private val q345Sql = {
     import graft.text.{TextFunctions => TF}

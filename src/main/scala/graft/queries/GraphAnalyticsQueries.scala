@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.engine.SessionCache
+import graft.engine.{Lineage, SessionCache}
 import graft.engine.Lineage.LineageOps
 import graft.graph.{GraphAnalytics, GraphOps, KGraph}
 
@@ -113,8 +113,7 @@ object GraphAnalyticsQueries {
   //          chained CTEs (KCoreRounds of them — rounds past the fixed
   //          point peel nothing, so a cap above convergence is exact).
   //          Scale shape: each round is one degree aggregate + two
-  //          anti-joins on the shrinking edge list, lineage truncated
-  //          per round.
+  //          degree joins on the shrinking edge list, one cut a round.
   private[graft] val KCoreK = 3
   private[graft] val KCoreRounds = 16
 
@@ -557,8 +556,8 @@ object GraphAnalyticsQueries {
   private val BcSeeds = 16
   private val BcHops = 4
 
-  private def q256(s: SparkSession, dir: String): DataFrame = {
-    import graft.engine.Lineage._
+  private def q256(s: SparkSession, dir: String): DataFrame =
+      Lineage.releasing {
     // no distinct: the KG's six union arms are each key-unique and
     // pairwise type-disjoint (o->c, c->n, s->n, n->r, o->p, p->s), so
     // the oriented index is already duplicate-free — a distinct here
@@ -595,11 +594,13 @@ object GraphAnalyticsQueries {
     // through the index to w's (σ, δ) at level h+1 (a broadcast); the
     // terms then merge into the frame by ONE keyed aggregate over
     // frame ∪ terms — no left join, which would shuffle the whole frame
-    // — and one checkpoint ends the level. Level 0 (the sources) never
-    // accumulates into the score, so the walk stops at level 1.
-    var frame = fwd.select(col("src"), col("node_id"), col("sigma"),
-      col("hop"), lit(0L).as("delta"))
-    for (h <- BcHops - 1 to 1 by -1) {
+    // — and one driver cut ends the level. Level 0 (the sources) never
+    // accumulates into the score, so the walk stops at level 1: round r
+    // accumulates level BcHops − r.
+    val (frame, _) = Lineage.rounds(fwd.select(col("src"), col("node_id"),
+        col("sigma"), col("hop"), lit(0L).as("delta")), BcHops - 1) {
+        (frame, r) =>
+      val h = BcHops - r
       val w = frame.filter(col("hop") === h + 1).select(col("src"),
         col("node_id").as("next_id"), col("sigma").as("sigma_w"),
         col("delta").as("delta_w"))
@@ -610,12 +611,11 @@ object GraphAnalyticsQueries {
         .select(col("src"), col("node_id"), expr(
           "(2 * sigma * (1000000 + delta_w) + sigma_w) div (2 * sigma_w)")
           .as("term"))
-      frame = frame.unionByName(terms, allowMissingColumns = true)
+      frame.unionByName(terms, allowMissingColumns = true)
         .groupBy(col("src"), col("node_id"))
         .agg(max(col("sigma")).as("sigma"), max(col("hop")).as("hop"),
           (max(col("delta")) + coalesce(sum(col("term")), lit(0L)))
             .as("delta"))
-        .truncateLineage()
     }
     frame.filter(col("hop") > 0)
       .groupBy(col("node_id"))
@@ -626,7 +626,7 @@ object GraphAnalyticsQueries {
       .orderBy(col("node_id"))
       .select(KGraph.decodeIdLex(col("node_id")).as("node_id"),
         col("n_sources"), col("betweenness"))
-  }
+  }(identity)
 
   private lazy val q256Sql = {
     val fwd = (1 to BcHops).map { h =>
@@ -1515,19 +1515,14 @@ object GraphAnalyticsQueries {
   //          register traffic 2·|E|·m rows, lineage truncated.
   private val HbRounds = 3
 
-  private def q343(s: SparkSession, dir: String): DataFrame = {
+  private def q343(s: SparkSession, dir: String): DataFrame =
+      Lineage.releasing {
+    import org.apache.spark.sql.Observation
     import graft.graph.HyperBall
-    // round-14 NEGATIVE RESULT (guide §1.2: measure, then decide):
-    // packing the node key to a long (numeric packing; identity-only, the
-    // register values hash the original strings either way) was
-    // measured min-of-4/6 against the string keys and LOST at both
-    // scales — sf0.1 3.22 → 4.73 s, sf1.0 21.1 → 27.2 s — even with
-    // the packed edge list lazily checkpointed. The register rows are
-    // 16 long columns (~140 B), so narrowing the key saves little
-    // shuffle width, while the encode pass + checkpoint materialization
-    // are pure overhead; unlike the q268 wedge stream or the q193 LPA
-    // frames the key is never the wide part of the row. Kept on
-    // strings.
+    // round-14 NEGATIVE RESULT: packing the node key to a long LOST at
+    // both scales (sf0.1 3.22 → 4.73 s, sf1.0 21.1 → 27.2 s): the 16
+    // register columns (~140 B) are the wide part of the row, not the
+    // key, so the encode pass is pure overhead. Kept on strings.
     val canon = KGraph.canonicalMaterialized(s, dir)
     val nodes = canon.select(col("a").as("node"))
       .unionByName(canon.select(col("b").as("node"))).distinct()
@@ -1535,17 +1530,21 @@ object GraphAnalyticsQueries {
     // with 16 max aggregates and each estimate is row-local — the
     // sparse-row form put ~16x the rows through every aggregate
     // (HyperBall scaladoc; estimate parity pinned by HyperBallSpec)
-    var regs = HyperBall.registers0Pivoted(nodes)
-    var out = HyperBall.estimateRowPivoted(regs, 0)
-    for (t <- 1 to HbRounds) {
+    val regs0 = HyperBall.registers0Pivoted(nodes)
+    // each round's estimate sums are observed on its cut, so no later
+    // job reads a released round
+    val sums = Seq.fill(HbRounds)(Observation())
+    Lineage.rounds(regs0, HbRounds) { (regs, t) =>
       // dense rounds: at t=3 the frontier hasn't collapsed, so a
       // systolic (changed-nodes-only) round's change-detection join
       // costs more than it saves (measured 123 vs 86 s at sf1.0)
-      regs = HyperBall.mergeRoundPivoted(regs, canon)
-      out = out.unionByName(HyperBall.estimateRowPivoted(regs, t))
+      HyperBall.observeEstimate(HyperBall.mergeRoundPivoted(regs, canon),
+        sums(t - 1))
     }
-    out.orderBy(col("t"))
-  }
+    sums.zipWithIndex.map { case (obs, i) => HyperBall.estimateRow(s, i + 1, obs) }
+      .foldLeft(HyperBall.estimateRowPivoted(regs0, 0))(_ unionByName _)
+      .orderBy(col("t"))
+  }(identity)
 
   private val q343Sql = {
     import graft.graph.HyperBall

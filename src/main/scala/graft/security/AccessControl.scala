@@ -48,17 +48,17 @@ object AccessControl {
     * where the hierarchy stops growing, and a reached role is never
     * re-entered, so cyclic hierarchies converge.
     *
-    * Like every `bfsFrame` walk it leaves one checkpoint per level, of
-    * tiny role metadata: a long-lived session that calls it per request
-    * frees them with `Lineage.releaseTransient`, as Bench, Profile and
-    * ScaleCheck do after each query.
+    * The walk releases each level's checkpoint once the next is built,
+    * so a call — which a service may make per request — leaves only its
+    * result's one block of role metadata persisted.
     */
   def roleClosure(roles: DataFrame): DataFrame = {
     val parents = roles.select(col("role_id").as("node_id"),
       explode(col("parent_roles")).as("next_id"))
     val start = roles.select(col("role_id"), col("role_id").as("node_id"))
-    GraphOps.bfsFrame(parents, start, Int.MaxValue, keys = Seq("role_id"))
-      .select(col("role_id"), col("node_id").as("ancestor"))
+    graft.engine.Lineage.releasing(GraphOps.bfsFrame(parents, start,
+        Int.MaxValue, keys = Seq("role_id"))
+      .select(col("role_id"), col("node_id").as("ancestor")))(identity)
   }
 
   /** (role_id, permission_id): each role's own plus inherited

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.rng.Seed
-import graft.graph.{GraphAnalytics, GraphOps, KGraph}
+import graft.graph.{GraphAnalytics, GraphOps, Hits, HyperBall, KGraph, PageRank}
 
 /** Differential checks of the carried-frame graph kernels, the k-core
   * peel and the triangle census against naive driver-side references, on small
@@ -292,6 +292,185 @@ class GraphKernelDiffSpec extends SparkSpec {
         .as[(String, String, Long, Int)].collect()
       if (got.toSet != want) println(s"matching MISMATCH $rounds on $canon")
       got.length == want.size && got.toSet == want
+    })
+  }
+
+  /** Canonical undirected edges of a batch: a < b in id order, distinct,
+    * no self-loops (the q192/q193/q293/q343 input contract). */
+  private def canonOf(batch: Seq[G]): Seq[(String, String)] =
+    directed(batch).filter(e => e._1 != e._2)
+      .map { case (x, y) => if (x < y) (x, y) else (y, x) }.distinct
+
+  private def packed(canon: Seq[(String, String)]): DataFrame =
+    canon.toDF("x", "y").select(KGraph.encodeIdLex(col("x")).as("a"),
+      KGraph.encodeIdLex(col("y")).as("b"))
+
+  /** Driver PageRank in the engine's units: each edge row carries
+    * round(rank · w / W · 1e9) nano-units of its source's rank (w = 1
+    * and W = out-degree for the uniform form), and every node takes
+    * its restart term + 0.85 · its incoming sum / 1e9. */
+  private def refRanks(edges: Seq[(String, String, Long)],
+      start: Map[String, Double], restart: String => Double,
+      iterations: Int): Map[String, Double] = {
+    val ww = edges.groupMapReduce(_._1)(_._3)(_ + _)
+    def nanos(x: Double): Long =
+      BigDecimal(x * 1e9).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
+    (1 to iterations).foldLeft(start) { (r, _) =>
+      val in = edges.groupMapReduce(_._2)(e =>
+        nanos(r(e._1) * e._3.toDouble / ww(e._1).toDouble))(_ + _)
+      r.map { case (v, _) =>
+        v -> (restart(v) + 0.85 * (in.getOrElse(v, 0L) / 1e9)) }
+    }
+  }
+
+  test("fixed-iteration PageRank (uniform, weighted, personalized) == driver ranks") {
+    check(Prop.forAllNoShrink(batchGen, Gen.choose(1, 3)) { (batch, iters) =>
+      val weighted = batch.zipWithIndex.flatMap { case (g, i) =>
+        g.edges.map { case (u, v, w) => (id(i, u), id(i, v), w) } }
+      val nodes = weighted.flatMap(e => Seq(e._1, e._2)).distinct
+      val seeds = seedsOf(batch).toSet
+      val df = weighted.toDF("from_id", "to_id", "w")
+        .withColumn("confidence", col("w") * 0.25)
+      def ranks(out: DataFrame) = out.select(col("node_id"), col("rank"))
+        .as[(String, Double)].collect().toMap
+      val unit = weighted.map(e => (e._1, e._2, 1L))
+      val uniform = refRanks(unit, nodes.map(_ -> 1.0).toMap,
+        _ => 1.0 - PageRank.Damping, iters)
+      // confidence w/4 quantizes to 250000·w micro-units
+      val byWeight = refRanks(weighted.map(e => (e._1, e._2, e._3 * 250000L)), nodes.map(_ -> 1.0).toMap,
+        _ => 1.0 - PageRank.Damping, iters)
+      def seed(v: String) = if (seeds(v)) 1.0 else 0.0
+      val personal = refRanks(unit,
+        nodes.map(v => v -> seed(v) * (1.0 - PageRank.Damping)).toMap,
+        v => (1.0 - PageRank.Damping) * seed(v), iters)
+      val ok = Seq(
+        "uniform" -> (ranks(PageRank.ranks(df, iters)) == uniform),
+        "weighted" -> (ranks(PageRank.weightedRanks(df, iters)) == byWeight),
+        "personalized" -> (ranks(PageRank.personalizedRanks(df,
+          seeds.toSeq.toDF("node_id"), iters)) == personal))
+      ok.filterNot(_._2).foreach(m =>
+        println(s"PageRank ${m._1} MISMATCH $iters on $batch"))
+      ok.forall(_._2)
+    })
+  }
+
+  /** Driver HITS in micro-units over the distinct edge set: each half-
+    * step sums the other side's scores and max-normalizes by integer
+    * division; a node no sum reaches scores 0. */
+  private def refHits(edges: Seq[(String, String)], iterations: Int)
+      : Map[String, (Long, Long)] = {
+    val de = edges.distinct
+    def half(score: Map[String, Long], pairs: Seq[(String, String)]) = {
+      val raw = pairs.flatMap { case (s, t) => score.get(s).map(t -> _) }
+        .groupMapReduce(_._1)(_._2)(_ + _)
+      val mx = raw.values.maxOption.getOrElse(1L)
+      raw.map { case (v, x) => v -> x * 1000000L / mx }
+    }
+    val (auth, hub) = (1 to iterations).foldLeft(
+        (Map.empty[String, Long], de.map(_._1 -> 1000000L).toMap)) {
+      case ((_, h), _) =>
+        val a = half(h, de)
+        (a, half(a, de.map(_.swap)))
+    }
+    de.flatMap(e => Seq(e._1, e._2)).distinct.map(v =>
+      v -> ((auth.getOrElse(v, 0L), hub.getOrElse(v, 0L)))).toMap
+  }
+
+  test("HITS == driver micro-unit half-steps") {
+    check(Prop.forAllNoShrink(batchGen, Gen.choose(1, 3)) { (batch, iters) =>
+      val out = directed(batch)
+      val want = refHits(out, iters)
+      val got = Hits.scores(out.toDF("from_id", "to_id"), iters)
+        .as[(String, Long, Long)].collect()
+        .map(r => r._1 -> ((r._2, r._3))).toMap
+      if (got != want) println(s"HITS MISMATCH $iters on $batch")
+      got == want
+    })
+  }
+
+  /** Driver synchronous label propagation: round 1 takes the smallest
+    * neighbour id; every later round the most frequent neighbour label,
+    * ties to the smallest label. */
+  private def refLpa(canon: Seq[(String, String)], rounds: Int)
+      : Map[String, String] = {
+    val adj = canon ++ canon.map(_.swap)
+    val first = adj.groupMapReduce(_._1)(_._2)((x, y) => if (x < y) x else y)
+    (2 to rounds).foldLeft(first) { (labels, _) =>
+      adj.groupBy(_._1).map { case (u, vs) =>
+        u -> vs.groupMapReduce(e => labels(e._2))(_ => 1)(_ + _).toSeq
+          .minBy { case (l, c) => (-c, l) }._1 }
+    }
+  }
+
+  test("labelPropagation == driver rounds with smallest-label ties, on packed ids") {
+    // rounds up to 7 cross the kernel's every-6th-round lineage cut
+    check(Prop.forAllNoShrink(batchGen, Gen.choose(1, 7)) { (batch, rounds) =>
+      val canon = canonOf(batch)
+      val want = refLpa(canon, rounds)
+      val got = GraphAnalytics.labelPropagation(packed(canon), rounds)
+        .select(KGraph.decodeIdLex(col("node")), KGraph.decodeIdLex(col("label")))
+        .as[(String, String)].collect()
+      if (got.toMap != want) println(s"LPA MISMATCH $rounds on $canon")
+      got.length == want.size && got.toMap == want
+    })
+  }
+
+  /** Driver synchronous k-truss peel by full recount: each round drops
+    * every surviving edge in fewer than k − 2 surviving triangles, at
+    * most `maxRounds` rounds. Returns edge -> layer (the dropping round,
+    * 0 for a survivor) and the rounds that dropped an edge. */
+  private def refTruss(canon: Seq[(String, String)], k: Int, maxRounds: Int)
+      : (Map[(String, String), Int], Int) = {
+    @scala.annotation.tailrec
+    def peel(alive: Set[(String, String)], layer: Map[(String, String), Int],
+        r: Int): (Map[(String, String), Int], Int) = {
+      val nbr = (alive.toSeq ++ alive.toSeq.map(_.swap))
+        .groupMap(_._1)(_._2).map { case (v, ns) => v -> ns.toSet }
+      val drop = alive.filter { case (a, b) =>
+        (nbr(a) intersect nbr(b)).size < k - 2 }
+      if (drop.isEmpty || r == maxRounds) (layer ++ alive.map(_ -> 0), r)
+      else peel(alive -- drop, layer ++ drop.map(_ -> (r + 1)), r + 1)
+    }
+    peel(canon.toSet, Map.empty, 0)
+  }
+
+  test("kTrussPeel layers == driver sequential recount peel, on packed ids") {
+    check(Prop.forAllNoShrink(batchGen, Gen.oneOf(3, 4), Gen.choose(1, 8)) {
+      (batch, k, maxRounds) =>
+        val canon = canonOf(batch)
+        val (want, wantRounds) = refTruss(canon, k, maxRounds)
+        val (out, rounds) = GraphAnalytics.kTrussPeel(packed(canon), k, maxRounds)
+        val got = out.select(KGraph.decodeIdLex(col("a")),
+            KGraph.decodeIdLex(col("b")), col("layer"), col("in_truss"))
+          .as[(String, String, Int, Boolean)].collect()
+        val ok = rounds == wantRounds && got.length == want.size &&
+          got.forall { case (a, b, l, t) =>
+            want.get((a, b)).contains(l) && t == (l == 0) }
+        if (!ok) println(s"k-truss MISMATCH k=$k cap=$maxRounds " +
+          s"($rounds vs $wantRounds rounds) on $canon")
+        ok
+    })
+  }
+
+  test("HyperBall registers after each round == driver register max") {
+    check(Prop.forAllNoShrink(batchGen) { batch =>
+      val canon = canonOf(batch)
+      val df = canon.toDF("a", "b")
+      val nodes = df.select(col("a").as("node"))
+        .unionByName(df.select(col("b").as("node"))).distinct()
+      def regs(r: DataFrame): Map[String, Seq[Long]] = r.collect().map(row =>
+        row.getString(0) -> (1 to HyperBall.M).map(i =>
+          row.getAs[Number](i).longValue)).toMap
+      val r0 = HyperBall.registers0Pivoted(nodes)
+      val nbr = (canon ++ canon.map(_.swap)).groupMap(_._1)(_._2)
+      val rounds = (1 to 3).scanLeft((r0, regs(r0))) { case ((eng, ref), _) =>
+        (HyperBall.mergeRoundPivoted(eng, df), ref.map { case (v, rs) =>
+          v -> nbr(v).map(ref).foldLeft(rs)((m, o) =>
+            m.zip(o).map { case (x, y) => math.max(x, y) }) })
+      }
+      val ok = rounds.forall { case (eng, ref) => regs(eng) == ref }
+      if (!ok) println(s"HyperBall MISMATCH on $canon")
+      ok
     })
   }
 }

@@ -1,14 +1,17 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.engine.Lineage
 import graft.graph.GraphOps
+import graft.queries.Catalog
 
 /** Exercises the cluster-safe (reliable) checkpoint path of
   * Lineage.truncateLineage: with the opt-in conf + a checkpoint dir set,
   * iterative operators must write reliable checkpoints and still produce
-  * identical results. */
+  * identical results — and the round driver's cadence, stop count and
+  * block release. */
 class LineageSpec extends SparkSpec {
   import spark.implicits._
 
@@ -43,19 +46,27 @@ class LineageSpec extends SparkSpec {
     }
   }
 
-  test("truncateLineageCounting counts in the checkpoint job, local and reliable") {
-    // a shuffled frame across several partitions, so a second
-    // computation of any partition would show up as an inflated count
+  test("rounds counts its stop test in the cut job, local and reliable") {
+    // a shuffled frame across several partitions; every round moves x
+    // down by 300, and the stop test counts the rows still >= 0, so the
+    // loop must stop exactly at the round whose cut counts 0
     val df = spark.range(0, 1000, 1, 4).toDF("x")
-      .repartition(3, col("x")).select(col("x"), (col("x") % 7).as("m"))
+      .repartition(3, col("x")).select(col("x"))
     def check(): Unit = {
-      val (out, Seq(all, zero, none)) = Lineage.LineageOps(df)
-        .truncateLineageCounting(lit(true), col("m") === 0, col("x") < 0)
-      assert((all, zero, none) == ((1000L, 143L, 0L)))
-      assert(out.count() == 1000L)
-      val (empty, Seq(n)) = Lineage.LineageOps(df.filter(col("x") < 0))
-        .truncateLineageCounting(lit(true))
-      assert(n == 0L && empty.isEmpty)
+      val (out, r) = Lineage.rounds(df, 10, Some(_ => col("x") >= 0)) {
+        (f, _) => f.select((col("x") - 300).as("x")) }
+      assert(r == 4 && out.count() == 1000L && out.filter(col("x") >= 0).isEmpty)
+      val (_, capped) = Lineage.rounds(df, 2, Some(_ => col("x") >= 0)) {
+        (f, _) => f.select((col("x") - 300).as("x")) }
+      assert(capped == 2)
+      val (empty, none) = Lineage.rounds(df.filter(col("x") < 0), 10,
+          Some(_ => lit(true))) { (f, _) => f.select(col("x")) }
+      assert(none == 0 && empty.isEmpty)
+      // a step that returns its input is a fixed point: that round does
+      // not count; without a stop test the start is never cut
+      val (same, fixed) = Lineage.rounds(df, 10) { (f, r) =>
+        if (r == 3) f else f.select(col("x")) }
+      assert(fixed == 2 && same.count() == 1000L)
     }
     check()
     val dir = Files.createTempDirectory("graft-ckpt-count").toFile
@@ -63,6 +74,65 @@ class LineageSpec extends SparkSpec {
     spark.conf.set(Lineage.ReliableKey, "true")
     try check()
     finally spark.conf.set(Lineage.ReliableKey, "false")
+  }
+
+  test("rounds cuts every `every`-th round and releases the cut it superseded") {
+    val s = spark.newSession()
+    val df = s.range(0, 100, 1, 2).toDF("x")
+    val before = Lineage.persistentIds(s)
+    val (out, r) = Lineage.rounds(df, 7, every = 3) { (f, _) =>
+      f.select((col("x") + 1).as("x")) }
+    assert(r == 7 && out.agg(sum(col("x"))).head().getLong(0) == 4950L + 700L)
+    // cuts at rounds 3 and 6; round 7 chains over the round-6 cut, which
+    // alone stays persisted
+    val grown = Lineage.persistentIds(s) -- before
+    assert(grown == Lineage.planRddIds(out) && grown.size == 1, grown)
+  }
+
+  test("each ported kernel leaves only its result's blocks persisted") {
+    import graft.graph.{GraphAnalytics, Hits, KGraph, PageRank}
+    import graft.security.AccessControl
+    val s = spark.newSession()
+    import s.implicits._
+    // the session artifacts q256 and q343 read are built before the
+    // snapshots: they are the session's, not the kernels'
+    KGraph.rankEdgesMaterialized(s, sf).count()
+    KGraph.canonicalMaterialized(s, sf).count()
+    val path = (0 until 12).map(i => (f"n$i%02d", f"n${i + 1}%02d"))
+    val edges = (path ++ Seq(("n00", "n02"), ("n01", "n02"), ("n05", "n07"),
+        ("n06", "n07"), ("n20", "n21")))
+      .toDF("from_id", "to_id")
+      .withColumn("relation_type", lit("t"))
+      .withColumn("confidence", lit(0.5))
+    val canon = GraphAnalytics.canonical(edges)
+    val weighted = canon.withColumn("w", length(col("a")).cast("long"))
+    val roles = Seq(("r1", Seq.empty[String], Seq("r2")),
+        ("r2", Seq.empty[String], Seq("r3")), ("r3", Seq.empty[String], Seq("r1")))
+      .toDF("role_id", "permissions", "parent_roles")
+    val kernels: Seq[(String, () => DataFrame)] = Seq(
+      "multiHop" -> (() => GraphOps.multiHop(edges, Seq("n00").toDF("node_id"), 4)),
+      "roleClosure" -> (() => AccessControl.roleClosure(roles)),
+      "connectedComponents" -> (() => GraphOps.connectedComponents(edges)),
+      "kCorePeel" -> (() => GraphAnalytics.kCorePeel(canon, 2)._1),
+      "kTrussPeel" -> (() => GraphAnalytics.kTrussPeel(canon, 3)._1),
+      "labelPropagation" -> (() => GraphAnalytics.labelPropagation(canon, 7)),
+      "localMaxMatching" -> (() => GraphAnalytics.localMaxMatching(weighted, 3)),
+      "PageRank.ranks" -> (() => PageRank.ranks(edges, 3)),
+      "PageRank.weightedRanks" -> (() => PageRank.weightedRanks(edges, 3)),
+      "PageRank.personalizedRanks" -> (() =>
+        PageRank.personalizedRanks(edges, Seq("n00").toDF("node_id"), 3)),
+      "Hits.scores" -> (() => Hits.scores(edges, 3)),
+      "q256" -> (() => Catalog.byName("q256_betweenness").run(s, sf)),
+      "q343" -> (() => Catalog.byName("q343_hyperball").run(s, sf)))
+    for ((name, kernel) <- kernels) {
+      val before = Lineage.persistentIds(s)
+      val out = kernel()
+      val grown = Lineage.persistentIds(s) -- before
+      assert(grown == Lineage.planRddIds(out) -- before,
+        s"$name left blocks its result does not read: " +
+          s"${grown -- Lineage.planRddIds(out)}")
+      assert(out.collect().nonEmpty, s"$name read back empty")
+    }
   }
 
   test("releaseTransient frees per-query blocks but keeps pinned artifacts") {

@@ -121,6 +121,10 @@ _OUTDIR = None
 # error and the other compares go on.
 TEMP_BUDGET_GB = 8
 
+# the checkout this script belongs to: Verify runs there and its board is
+# written there, so a copy of the tree checks itself
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _init_worker(sfdir, outdir, scratch, temp_gb, threads=2):
     global _CON, _OUTDIR
@@ -215,7 +219,7 @@ def main():
         r = subprocess.run(
             ["sbt", "-batch",
              f'runMain graft.Verify {sfdir} {outdir} {names}'.strip()],
-            cwd="/root/repo", capture_output=True, text=True)
+            cwd=REPO, capture_output=True, text=True)
         sys.stdout.write("\n".join(r.stdout.splitlines()[-5:]) + "\n")
         # NB: sbt prints the forked JVM's stderr as "[error] ..." lines even
         # for INFO logs — only the exit code is meaningful.
@@ -267,13 +271,13 @@ def main():
         try:
             sha = subprocess.run(["git", "rev-parse", "HEAD"],
                                  capture_output=True, text=True,
-                                 cwd="/root/repo").stdout.strip() or "unknown"
+                                 cwd=REPO).stdout.strip() or "unknown"
         except Exception:
             sha = "unknown"
         import datetime
         at = datetime.datetime.now(datetime.timezone.utc).strftime(
             "%Y-%m-%dT%H:%M:%SZ")
-        with open("/root/repo/CORRECTNESS_SELF.json", "w") as f:
+        with open(os.path.join(REPO, "CORRECTNESS_SELF.json"), "w") as f:
             # "board" mirrors the driver's CORRECTNESS_r{N}.json schema
             # exactly (per-query rows/schema/hash triple + row counts) so
             # an empty driver board can be backfilled field-for-field.
